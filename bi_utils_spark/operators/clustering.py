@@ -406,12 +406,13 @@ def kmeans_fit(
     oracle form) or "farthest" (greedy k-center seeding — better
     optima, k−1 extra scans).
 
-    Size-tiered (r12): a one-job ``collect_limited`` probe pulls the
-    (id, vec) rows; when they fit ``driver_max_rows`` the whole loop
-    runs driver-side (:func:`_kmeans_fit_driver`) — the init job plus
-    ``iters`` sequential fit jobs collapse into one bounded collect
-    (≤ ~35 MB at the default bound for d=64 doubles, the same class
-    as the k·d partial fetch the loop already made per iteration).
+    Size-tiered (r12): a plain ``limit(driver_max_rows + 1).collect()``
+    probe (Spark's escalating take) pulls the (id, vec) rows; when
+    they fit ``driver_max_rows`` the whole loop runs driver-side
+    (:func:`_kmeans_fit_driver`) — the init job plus ``iters``
+    sequential fit jobs collapse into one bounded collect (≤ ~35 MB
+    at the default bound for d=64 doubles, the same class as the k·d
+    partial fetch the loop already made per iteration).
     Identical centroids by construction (equality property-tested);
     over-bound corpora pay one truncated probe and the unchanged
     distributed loop. ``driver_max_rows=0`` forces the distributed

@@ -45,10 +45,12 @@ def ngram_hash_rows(
 
     Documents shorter than ``n`` tokens contribute NO rows (they
     cannot contain an n-gram; the contract every consumer and every
-    oracle mirrors). Same row-wise window shape as
-    ``dedup.shingle_hash_rows`` — tokenization runs exactly once per
-    token, the gram string is a ``concat_ws`` over window leads, and
-    everything is whole-stage codegen with a single shuffle on id.
+    oracle mirrors), unlike the near-dup shingle kernel
+    (``operators/lshkern.py``), which gives a short document one
+    padded shingle and hashes to 31 bits. Row-wise window shape:
+    tokenization runs exactly once per token, the gram string is a
+    ``concat_ws`` over window leads, and everything is whole-stage
+    codegen with a single shuffle on id.
     """
     toks = df.select(
         F.col(id_col).alias("id"),

@@ -11,9 +11,12 @@ Four tiers, cheapest first — a production pipeline runs them in order:
 4. :func:`simhash64` + :func:`simhash_near_dup_join` — 64-bit
    fingerprints, Hamming-distance banding.
 
-Everything is native Spark SQL expressions (xxhash64, transform,
-aggregate, zip_with) — no Python in the hot path. Scale notes inline
-per operator.
+Tiers 2–4 and the winnowing fingerprints (copied-passage detection)
+take their shingle hashes from one kernel,
+``operators/lshkern.py``: tokens and token hashes in JVM codegen,
+the shingle combine and per-doc signatures in vectorized numpy per
+Arrow batch. Pairing, banding and verification are native Spark SQL.
+Scale notes inline per operator.
 """
 
 from __future__ import annotations
@@ -22,7 +25,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bi_utils_spark.operators.textstats import tokens
+from bi_utils_spark.operators.lshkern import (
+    minhash_coeffs,
+    per_doc_signatures,
+    simhash64,
+)
 
 
 def _orderable(dt: T.DataType) -> bool:
@@ -113,85 +120,6 @@ def dedup_exact(
 
 
 # ---------------------------------------------------------------------------
-# shingling
-# ---------------------------------------------------------------------------
-
-
-def token_shingles(c: Column | str, n: int = 3) -> Column:
-    """Distinct n-token shingles (''-joined) of a text column.
-
-    Built with transform-over-sequence — the whole shingling runs in
-    codegen. n=1 degrades to the distinct token set.
-    """
-    toks = tokens(c)
-    if n == 1:
-        return F.array_distinct(toks)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    return F.when(F.size(toks) < n, F.array(F.array_join(toks, ""))).otherwise(
-        F.array_distinct(
-            F.transform(
-                idx, lambda i: F.array_join(F.slice(toks, i + 1, n), "")
-            )
-        )
-    )
-
-
-_SHINGLE_P = 1_000_003  # combine multiplier for token-hash shingles
-
-
-def shingle_hash_rows(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, keep_pos: bool = False
-) -> DataFrame:
-    """(id, sh) rows of n-token shingle *hashes* — the row-wise
-    formulation for when shingle identity, not text, is needed
-    (MinHash, Jaccard joins). Documents shorter than n tokens yield
-    ONE zero-padded whole-doc shingle (token_shingles' single-shingle
-    contract: it can only ever equal another short doc's shingle with
-    the same tokens).
-
-    Why rows, not arrays: every array formulation tried re-evaluates
-    the tokenize/hash subtree per element (Catalyst collapses the
-    staging projection, and expression CSE doesn't reach inside
-    Generate/lambda bodies). Here tokenization and per-token xxhash64
-    run EXACTLY once per token; shingle hashes are a window-lead
-    combine over scalar columns, all whole-stage codegen.
-
-    Scale: the window shuffles on id once; a following groupBy(id)
-    (minhash) reuses that partitioning — no extra exchange. Skewed
-    giant documents are bounded by doc length, not corpus size.
-    Collisions (~2⁻³¹ per pair) are the standard trade for a
-    pure-arithmetic pipeline.
-    """
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(tokens(text_col)).alias("pos", "tok"),
-    )
-    th = toks.select(
-        "id", "pos", F.pmod(F.xxhash64("tok"), F.lit(_MERSENNE)).alias("h")
-    )
-    out_cols = ["id", "pos", "sh"] if keep_pos else ["id", "sh"]
-    if n == 1:
-        return th.select("id", "pos", F.col("h").alias("sh")).select(*out_cols)
-
-    w = Window.partitionBy("id").orderBy("pos")
-    comb = F.col("h")
-    for j in range(1, n):
-        # zero-pad past the last token; padded rows are filtered below
-        # except the single whole-doc shingle of a short document
-        comb = F.pmod(
-            comb * F.lit(_SHINGLE_P) + F.coalesce(F.lead("h", j).over(w), F.lit(0)),
-            F.lit(_MERSENNE),
-        )
-    staged = th.withColumn("sh", comb).withColumn(
-        "n_toks", F.count("*").over(Window.partitionBy("id"))
-    )
-    keep = (F.col("pos") <= F.col("n_toks") - n) | (
-        (F.col("n_toks") < n) & (F.col("pos") == 0)
-    )
-    return staged.filter(keep).select(*out_cols)
-
-
-# ---------------------------------------------------------------------------
 # X2a: exact Jaccard similarity join (ground truth, oracle-checkable)
 # ---------------------------------------------------------------------------
 
@@ -255,6 +183,9 @@ def jaccard_similarity_join(
     filter removes them structurally for large sets at high t (common
     shingles sort last and fall outside every prefix); at low t use
     ``max_token_doc_freq``.
+
+    Shingle sets are computed per input row, so ``id_col`` must be
+    unique: rows sharing an id are not merged into one document.
     """
     if prefix_filter is None:
         prefix_filter = threshold >= PPJOIN_MIN_THRESHOLD
@@ -262,23 +193,18 @@ def jaccard_similarity_join(
     # the corpus is tokenized once, the inverted index and the
     # self-join shuffle 8-byte keys, and Jaccard over the distinct
     # hash sets equals Jaccard over the string sets up to ~2⁻³¹
-    # collisions. r13: the per-doc distinct shingle sets come from the
-    # Arrow kernel (lshkern.per_doc_signatures — bit-identical shingle
-    # hashes, property-tested), so the old window+dropDuplicates
-    # formulation's TWO pre-join passes over token rows (the lead()
-    # window exchange and the (id, sh) dedup shuffle) are gone: the
-    # plan below the inverted-index join is map-only. Not persisted:
-    # reused subtrees recompute map-side per consumer, and the
-    # operator leaves no cached partitions behind (VERDICT r2 #3).
-    from bi_utils_spark.operators.lshkern import per_doc_signatures
-
+    # collisions. The per-doc distinct shingle sets come from the
+    # map-only Arrow kernel (lshkern.per_doc_signatures), so no token
+    # row crosses an exchange before the inverted-index join.
+    #
     # The set frame feeds two plan consumers in either branch (the
     # self-join sides below / the doc-frequency aggregate + the work
     # join) and the kernel output carries no exchange ReuseExchange
-    # could share, so it is materialized once (localCheckpoint — the
-    # multi-consumer discipline; sized like the corpus' distinct
-    # shingle sets, the same state the old window formulation pushed
-    # through its shared shuffle files).
+    # could share, so it is materialized once (localCheckpoint, sized
+    # like the corpus' distinct shingle sets). Its blocks stay in
+    # executor storage until the frame is garbage-collected, and a
+    # lost executor loses them: a localCheckpoint has no lineage to
+    # recompute from.
     doc_sets = per_doc_signatures(
         df, id_col, text_col, shingle_n, want_set=True
     ).localCheckpoint()
@@ -406,9 +332,6 @@ def _jaccard_from_counts(pairs: DataFrame, threshold: float) -> DataFrame:
 # X2b: MinHash + LSH banding
 # ---------------------------------------------------------------------------
 
-_MERSENNE = (1 << 31) - 1  # Mersenne-31: a*h stays within int64
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -421,58 +344,19 @@ def minhash_signatures(
 
     h_i(x) = (a_i * h(x) + b_i) mod M31, minimized over the doc's
     shingle hashes — the standard Broder construction with a
-    universal-hash family over one base hash. Entirely codegen'd.
-
-    Two deliberate layout choices (≈2× combined win measured at sf0.1):
-    - shingle hashes come from ``shingle_hashes`` (arithmetic combine
-      of per-token xxhash64), never from concatenated shingle strings
-      — and shingling is evaluated exactly once per document;
-    - shingle hashes are EXPLODED to rows and the ``num_hashes`` lanes
-      are plain ``min()`` aggregate expressions over the scalar hash
-      column. Codegen evaluates them with zero per-shingle array
-      allocation (a fold/zip_with formulation allocates two 64-wide
-      arrays per shingle; a column-of-arrays formulation gets its
-      projection collapsed by Catalyst and re-shingles per lane), and
-      hash-partial aggregation combines map-side, so the shuffle
-      carries one 512 B signature per document — never the shingles.
+    universal-hash family (``lshkern.minhash_coeffs``) over one base
+    hash. Computed by the shingle-hash kernel in one map-only pass:
+    tokens and token hashes in codegen, shingle combine and lane
+    minima in vectorized numpy per Arrow batch — no token row ever
+    crosses an exchange.
 
     Scale: signature size is num_hashes * 8 bytes per doc — 64 hashes
     ≈ 512 B regardless of document length, which is the point: the
     100 TB corpus becomes a ~GB-scale signature table.
     """
-    import random
-
-    rnd = random.Random(seed)
-    coeffs = [
-        (rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE))
-        for _ in range(num_hashes)
-    ]
-    # r13: signatures come from the Arrow kernel — one map-only pass
-    # (tokens → xxhash64 array in codegen, shingle combine + lane
-    # minima in vectorized numpy), no token-row window exchange and
-    # no 64-lane per-row aggregation. Bit-identical to the row-wise
-    # formulation (property-tested in tests/test_lshkern.py).
-    from bi_utils_spark.operators.lshkern import per_doc_signatures
-
     return per_doc_signatures(
-        df, id_col, text_col, shingle_n, coeffs=coeffs
+        df, id_col, text_col, shingle_n, coeffs=minhash_coeffs(num_hashes, seed)
     ).select("id", "minhash")
-
-
-def _signatures_from_rows(rows: DataFrame, coeffs: list[tuple[int, int]]) -> DataFrame:
-    lanes = [
-        F.min(
-            F.pmod(
-                F.lit(a).cast("long") * F.col("sh") + F.lit(b).cast("long"),
-                F.lit(_MERSENNE),
-            )
-        ).alias(f"_m{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    agg = rows.groupBy("id").agg(*lanes)
-    return agg.select(
-        "id", F.array(*[F.col(f"_m{i}") for i in range(len(coeffs))]).alias("minhash")
-    )
 
 
 def _drop_hot_buckets(
@@ -606,14 +490,16 @@ def minhash_near_dup_join(
 ) -> DataFrame:
     """LSH candidates verified with *exact* Jaccard on the shingle sets.
 
-    One map-only Arrow-kernel pass produces BOTH per-doc artifacts at
+    One map-only pass of the shingle-hash kernel
+    (lshkern.per_doc_signatures) produces BOTH per-doc artifacts at
     once — the ``num_hashes`` signature lanes and the distinct
-    shingle-hash set (r13, lshkern.per_doc_signatures): no token row
-    ever crosses an exchange, and the corpus-scaled state the plan
-    carries is 512 B/doc of signatures plus the shingle sets. That
-    frame is materialized once (localCheckpoint) for its four plan
-    consumers; at 100 TB, write the per-doc frame out bucketed by id
-    instead.
+    shingle-hash set: no token row ever crosses an exchange, and the
+    corpus-scaled state the plan carries is 512 B/doc of signatures
+    plus the shingle sets. That frame feeds four plan consumers (two
+    banding self-join sides, two verify sides) and carries no exchange
+    ReuseExchange could share, so it is materialized once
+    (localCheckpoint); at 100 TB, write the per-doc frame out bucketed
+    by id instead.
 
     The verify join re-attaches the shingle-hash sets only for
     candidate pairs (a tiny fraction of the corpus) and computes
@@ -621,29 +507,18 @@ def minhash_near_dup_join(
     output; recall is governed by the (bands, rows) choice and, when
     set, ``max_bucket_size`` (hot-bucket cap, see
     :func:`minhash_candidates`).
+
+    Signatures are computed per input row, so ``id_col`` must be
+    unique: rows sharing an id would each band and verify as their own
+    document and yield duplicate pairs.
     """
-    import random
-
-    rnd = random.Random(seed)
-    coeffs = [
-        (rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE))
-        for _ in range(num_hashes)
-    ]
-    # r13: the per-doc (signature, shingle-set) frame comes from ONE
-    # map-only Arrow-kernel pass (lshkern.per_doc_signatures — bit-
-    # identical lanes and sets, property-tested): the token-row window
-    # exchange and the 65-lane per-row aggregation are gone from the
-    # plan entirely. per_doc feeds the signature banding (2 self-join
-    # sides) AND the verify join (2 sides); the kernel output has no
-    # exchange ReuseExchange could share across those consumers, so it
-    # is materialized once in BOTH configurations (localCheckpoint —
-    # bounded at 512 B/doc + the distinct shingle set, the documented
-    # signature-table scale bound; at 100 TB write it out bucketed by
-    # id instead, per the docstring).
-    from bi_utils_spark.operators.lshkern import per_doc_signatures
-
     per_doc = per_doc_signatures(
-        df, id_col, text_col, shingle_n, coeffs=coeffs, want_set=True
+        df,
+        id_col,
+        text_col,
+        shingle_n,
+        coeffs=minhash_coeffs(num_hashes, seed),
+        want_set=True,
     ).localCheckpoint()
     sigs = per_doc.select("id", "minhash")
     cand = minhash_candidates(sigs, num_bands, max_bucket_size)
@@ -759,73 +634,16 @@ def minhash_near_dup_incremental(
 # ---------------------------------------------------------------------------
 
 
-def simhash64(c: Column | str, shingle_n: int = 1) -> Column:
-    """64-bit SimHash of a text column, fully in codegen.
-
-    Charikar's construction: each shingle hash votes ±1 per bit
-    position; the fingerprint takes the sign bit-wise. Implemented as
-    one aggregate over the shingle-hash array maintaining 64 counters
-    (zip_with add), then a second fold assembling the sign bits.
-    """
-    # Bit masks as a literal array — shift amounts must be literals in
-    # Spark, so bit i is tested/set via element_at(masks, i+1) instead
-    # of shiftleft/shiftright by a lambda variable.
-    masks = F.array(
-        *[
-            F.lit((1 << i) if i < 63 else -(1 << 63)).cast("long")
-            for i in range(64)
-        ]
-    )
-    sh = token_shingles(c, shingle_n)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    zero64 = F.array_repeat(F.lit(0), 64)
-    bitvotes = F.aggregate(
-        hashes,
-        zero64,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda i: F.when(
-                    h.bitwiseAND(F.element_at(masks, i + 1)) != 0, F.lit(1)
-                ).otherwise(F.lit(-1)),
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            bitvotes,
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda v, i: F.when(v > 0, F.element_at(masks, i + 1)).otherwise(
-                F.lit(0).cast("long")
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def simhash64_rows(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int = 1
 ) -> DataFrame:
-    """(id, fp) SimHash fingerprints — the fast path.
-
-    r13: computed by the Arrow kernel (lshkern.per_doc_signatures) in
-    ONE map-only pass — tokens → xxhash64 array in codegen, then the
-    shingle re-hash (bit-exact XXH64 long path) and the 64 per-bit
-    vote sums in vectorized numpy per Arrow batch. Bit-identical to
-    the former 64-lane aggregate formulation (property-tested in
-    tests/test_lshkern.py) with no exchange in the plan: the corpus
-    ships 16 B/doc fingerprints, never token rows. The
-    column-expression form (simhash64) folds a 64-wide accumulator
-    per shingle — use it only on small frames.
-    """
-    from bi_utils_spark.operators.lshkern import per_doc_signatures
-
-    return per_doc_signatures(
-        df, id_col, text_col, shingle_n, want_fp=True
-    ).select("id", "fp")
+    """(id, fp) SimHash fingerprints of the documents whose text is not
+    NULL — :func:`simhash64` (the shingle-hash kernel's SimHash
+    Column, re-exported here) over those rows. The corpus ships
+    16 B/doc fingerprints, never token rows."""
+    return df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("id"), simhash64(text_col, shingle_n).alias("fp")
+    )
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -869,14 +687,18 @@ def simhash_near_dup_join(
       hamming-0 tier stays exact. Leave None for the full guarantee.
 
     The (id, fp) frame feeds FIVE consumers of this plan (distinct
-    fps, both id-expansion sides, both hamming-0 sides); only its
-    input exchange would be shared by ReuseExchange, so the 65-lane
-    fingerprint aggregation would re-run per consumer. It is
-    therefore materialized once (``localCheckpoint`` — 16 B/doc, the
-    same corpus-becomes-signature-table bound as MinHash). Pass
+    fps, both id-expansion sides, both hamming-0 sides) and carries no
+    exchange ReuseExchange could share, so the fingerprint kernel
+    would re-run per consumer. It is therefore materialized once
+    (``localCheckpoint`` — 16 B/doc, the same
+    corpus-becomes-signature-table bound as MinHash). Pass
     ``fingerprints`` (an (id, fp) frame, e.g. an already-checkpointed
     ``simhash64_rows``) to share one materialization across several
     joins/attestations.
+
+    Fingerprints are computed per input row, so ``id_col`` must be
+    unique: rows sharing an id would pair with each other as
+    hamming-0 duplicates.
     """
     fp = (
         fingerprints
@@ -1061,16 +883,16 @@ def winnowing_fingerprints(
     Scale: fingerprint count per doc is ~2/(window+1) of its token
     count — a tunable constant-factor sketch (unlike MinHash it is
     position-local, so it also powers containment/plagiarism lookups,
-    not just whole-doc similarity). Built entirely from the shared
-    shingle-hash rows: one tokenize, one window, one distinct.
+    not just whole-doc similarity). Computed by the shingle-hash
+    kernel in one map-only pass (the window minima and the per-doc
+    distinct run per Arrow batch), so the plan has no exchange; the
+    windows at a document's end are clipped to its last k-gram.
+    Fingerprints are computed per input row, so ``id_col`` must be
+    unique.
     """
-    rows = shingle_hash_rows(df, id_col, text_col, k, keep_pos=True)
-    w = Window.partitionBy("id").orderBy("pos").rowsBetween(0, window - 1)
-    return (
-        rows.withColumn("fp", F.min("sh").over(w))
-        .select("id", "fp")
-        .distinct()
-    )
+    return per_doc_signatures(
+        df, id_col, text_col, k, window=window
+    ).select("id", F.explode("wfp").alias("fp"))
 
 
 def winnowing_near_dup_join(
@@ -1096,6 +918,8 @@ def winnowing_near_dup_join(
     falsely, but pairs held together mostly by boilerplate
     fingerprints drop below ``min_shared`` — the intended semantics
     for near-dup detection. Leave None for the exact join.
+
+    ``id_col`` must be unique (see :func:`winnowing_fingerprints`).
     """
     fps = winnowing_fingerprints(df, id_col, text_col, k, window)
     if max_fp_doc_freq is not None:

@@ -76,8 +76,8 @@ def hashed_feature_rows(
     lambda arguments — a body that indexes the token array
     (``element_at(toks, i)``) re-evaluates the tokenize subtree per
     element (Catalyst CSE does not reach inside lambda bodies; the
-    same pitfall shingle_hash_rows documents), turning an n-token doc
-    into O(n²) splits — measured 10× slower on sf0.1. zip_with over
+    pitfall ``decontam.ngram_hash_rows`` avoids), turning an n-token
+    doc into O(n²) splits — measured 10× slower on sf0.1. zip_with over
     slices evaluates the split a constant number of times per row.
     """
     feats = feature_array(text_col)

@@ -166,11 +166,11 @@ def bigram_pairs(
 ) -> DataFrame:
     """(doc_id, w1, w2) rows — one row per adjacent token pair.
 
-    Built row-wise (posexplode + window lead, the shingle_hash_rows
-    layout): tokenization runs once per token, never per pair — an
-    array formulation indexing the token array inside a lambda
-    re-evaluates the split per element (Catalyst CSE stops at lambda
-    boundaries). One shuffle on doc_id; docs under 2 tokens emit no
+    Built row-wise (posexplode + window lead, the
+    ``decontam.ngram_hash_rows`` layout): tokenization runs once per
+    token, never per pair — an array formulation indexing the token
+    array inside a lambda re-evaluates the split per element
+    (Catalyst CSE stops at lambda boundaries). One shuffle on doc_id; docs under 2 tokens emit no
     rows.
     """
     toks = df.select(
@@ -491,17 +491,17 @@ def bpe_train(
     scan (at 100 TB, n_merges full passes instead of zero; at sf0.1
     this was the measured bulk of q_bpe_encode's wall).
 
-    Size-tiered (r12, the connected_components discipline): a
-    one-job ``collect_limited`` probe over the checkpointed state
-    pulls the (term, c) rows; when the vocab fits
+    Size-tiered (r12, the connected_components discipline): a plain
+    ``limit(driver_max_vocab + 1).collect()`` probe over the
+    checkpointed state pulls the (term, c) rows; when the vocab fits
     ``driver_max_vocab`` the whole merge loop runs driver-side
     (:func:`_bpe_train_driver`) — n_merges sequential argmax jobs
     plus the final state job collapse into ZERO further Spark jobs.
-    Identical results by construction (equality property-tested);
-    the probe over the checkpoint is metadata-cheap when the vocab
-    is over-bound, so the distributed path pays one tiny extra job,
-    never a second corpus pass. ``driver_max_vocab=0`` forces the
-    distributed loop.
+    Identical results by construction (equality property-tested).
+    The probe is Spark's escalating take (one partition first, more
+    per round) over the checkpoint's cached blocks, so an over-bound
+    vocab costs the distributed path a few cheap jobs, never a second
+    corpus pass. ``driver_max_vocab=0`` forces the distributed loop.
     """
     spark = model.sparkSession
     state = model.select(

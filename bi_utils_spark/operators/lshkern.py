@@ -1,46 +1,51 @@
-"""Arrow-side LSH signature kernels (r13, guide §4.2).
+"""The shingle-hash kernel: the one place text becomes shingle hashes.
 
-The row-wise signature formulations in ``operators/dedup.py``
-(shingle_hash_rows → 64/65-lane min/sum aggregation) are fully
-codegen'd but pay two structural costs per corpus pass:
+Every near-dup operator in ``operators/dedup.py`` — exact Jaccard,
+MinHash, SimHash, winnowing — and the streaming SimHash gate read
+their shingle hashes from here. Tokenization and per-token
+``xxhash64`` stay in the JVM as one map-only projection
+(``transform(tokens(text), xxhash64)``), so token hashes are Spark's
+own. The shingle combine and everything built on it run per Arrow
+batch in vectorized numpy:
 
-- the n-token shingle combine is a ``lead()`` window partitioned by
-  doc id, so EVERY token row crosses an exchange before a single
-  signature lane is computed — at 100 TB that is the whole tokenized
-  corpus through a shuffle just to zip each token with its n−1
-  successors, which live in the same row group anyway;
-- the 64 minhash/simhash lanes are evaluated per shingle ROW as 64
-  separate aggregate expressions.
+- :func:`per_doc_signatures` — one ``mapInArrow`` pass yielding, per
+  document, the MinHash lanes, the distinct shingle-hash set and/or
+  the winnowed fingerprint set. No exchange anywhere: the corpus
+  ships signatures (16–512 B/doc), never token rows.
+- :func:`simhash64` — the 64-bit SimHash as a scalar ``arrow_udf``
+  Column, so it runs on streams as well as batches
+  (``dedup.simhash64`` re-exports it).
 
-Both disappear when the per-document signature is computed where the
-document already is: one JVM map-only projection turns the text into
-an ``array<bigint>`` of token hashes (``xxhash64`` stays in codegen —
-bit-identical token hashing with zero Python reimplementation risk),
-and one ``mapInArrow`` stage computes the shingle combine and the
-signature lanes per Arrow batch in vectorized numpy. No exchange
-anywhere: the corpus shuffles signatures (16–512 B/doc), never token
-rows.
+Shingle contract: token hashes are taken mod M31 and n consecutive
+ones combine as ``c = (c·P + h) mod M31``. A document shorter than n
+tokens yields ONE shingle, zero-padded past its last token; every
+non-NULL document has at least one token (``tokens("")`` is ``[""]``),
+hence at least one shingle.
 
 Exactness: every arithmetic step is int64 with proven headroom
 (shingle combine < 2⁵², lane affine map < 2⁶³), ``np.mod`` matches
 Spark's ``pmod`` for positive moduli, and the one hash computed in
 numpy — ``xxhash64`` over the int64 shingle hash that the SimHash
-votes use — is Spark's XXH64 long fast-path replicated in uint64
-(pinned bit-identical against ``F.xxhash64`` by
-tests/test_lshkern.py). Signatures are therefore byte-equal to the
-row-wise formulation's, property-tested per function.
+votes use — is Spark's XXH64 long fast path replicated in uint64.
+tests/test_lshkern.py pins all of it against a pure-Python reference.
 """
 
 from __future__ import annotations
 
+import random
 from collections.abc import Iterator
 
 import numpy as np
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_M31 = (1 << 31) - 1  # Mersenne-31 (dedup._MERSENNE)
-_SHINGLE_P = 1_000_003  # dedup._SHINGLE_P
+from bi_utils_spark.operators.textstats import tokens
+
+_M31 = (1 << 31) - 1  # Mersenne-31: a·h + b stays within int64
+_SHINGLE_P = 1_000_003  # shingle combine multiplier
+_INT32_MAX = np.iinfo(np.int32).max
 
 # XXH64 primes (public domain reference constants)
 _P1 = np.uint64(0x9E3779B185EBCA87)
@@ -69,30 +74,38 @@ def xxh64_long(v: np.ndarray, seed: int = 42) -> np.ndarray:
     return h.view(np.int64)
 
 
-def _token_hash_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, __th): per-doc int64 token-hash array — JVM map-only.
+def minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
+    """The MinHash family h_i(x) = (a_i·x + b_i) mod M31: ``num_hashes``
+    (a, b) pairs drawn from ``random.Random(seed)``."""
+    rnd = random.Random(seed)
+    return [
+        (rnd.randrange(1, _M31), rnd.randrange(0, _M31))
+        for _ in range(num_hashes)
+    ]
 
-    Tokenization and per-token xxhash64 are the exact expressions
-    shingle_hash_rows evaluates (split(trim(lower)), xxhash64), so
-    token hashes are bit-identical by construction; they just stay
-    packed in one array row instead of exploding to token rows."""
-    from bi_utils_spark.operators.textstats import tokens
 
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.transform(tokens(text_col), lambda t: F.xxhash64(t)).alias("__th"),
-    )
+def _token_hashes(text: Column | str) -> Column:
+    """Per-doc ``array<bigint>`` of token hashes, computed in the JVM
+    (codegen): ``xxhash64`` of every ``textstats.tokens`` token."""
+    return F.transform(tokens(text), lambda t: F.xxhash64(t))
+
+
+def _flat_token_hashes(th: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """A NULL-free list<bigint> Arrow array → (all token hashes
+    concatenated, per-doc token counts)."""
+    lengths = pc.list_value_length(th).to_numpy(zero_copy_only=False)
+    flat = pc.list_flatten(th).to_numpy(zero_copy_only=False)
+    return flat.astype(np.int64, copy=False), lengths.astype(np.int64)
 
 
 def _flat_shingles(
     flat_th: np.ndarray, lengths: np.ndarray, n: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Replicate shingle_hash_rows over a flattened batch: token
-    hashes of all docs concatenated (``flat_th``) with per-doc token
-    counts (``lengths``) → (flat shingle hashes, per-doc shingle
-    counts). Zero-padding past the last token and the short-document
-    single-shingle contract are reproduced exactly; every doc with
-    ≥ 1 token yields ≥ 1 shingle."""
+    """Shingle hashes over a flattened batch: token hashes of all docs
+    concatenated (``flat_th``) with per-doc token counts (``lengths``)
+    → (flat shingle hashes in document order, per-doc shingle counts).
+    Implements the module's shingle contract, zero padding and the
+    short-document single shingle included."""
     h = np.mod(flat_th.astype(np.int64, copy=False), _M31)
     if n == 1:
         return h, lengths
@@ -145,11 +158,28 @@ def _doc_unique(
     return uval, ucounts
 
 
+def _winnow(
+    sh: np.ndarray, counts: np.ndarray, window: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc distinct winnowing fingerprints: the minimum of the
+    ``window`` shingle hashes starting at each position, the window
+    clipped at the document's end (one minimum per shingle position).
+    M31 pads past the end — every shingle hash is below it."""
+    idx = np.arange(sh.shape[0], dtype=np.int64)
+    end = np.repeat(np.cumsum(counts), counts)
+    m = sh.copy()
+    for j in range(1, window):
+        nxt = np.full_like(sh, _M31)
+        nxt[:-j] = sh[j:]
+        nxt[idx + j >= end] = _M31
+        np.minimum(m, nxt, out=m)
+    return _doc_unique(m, counts)
+
+
 def _simhash_fp(sh: np.ndarray, counts: np.ndarray) -> np.ndarray:
     """Per-doc 64-bit SimHash from the flat shingle hashes: bit i of
-    the fingerprint is set iff 2·Σ bit_i(xxhash64(sh)) > n — the
-    simhash64_rows vote, with the re-hash in numpy (bit-exact XXH64
-    long path)."""
+    the fingerprint is set iff 2·Σ bit_i(xxhash64(sh)) > n, n the
+    doc's shingle count (Charikar's sign vote)."""
     h64 = xxh64_long(sh)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
     nd = counts.shape[0]
@@ -162,6 +192,22 @@ def _simhash_fp(sh: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(packed).view(np.int64).ravel()
 
 
+def _list_array(values: np.ndarray, counts: np.ndarray) -> pa.ListArray:
+    """list<bigint> Arrow array from the flat values and per-row
+    lengths. List offsets are int32; a batch whose lengths sum past
+    2³¹ − 1 would wrap silently, so it is refused instead."""
+    offs = np.concatenate(([0], np.cumsum(counts, dtype=np.int64)))
+    if offs[-1] > _INT32_MAX:
+        raise ValueError(
+            f"one Arrow batch would hold {int(offs[-1])} list elements, "
+            "more than int32 list offsets address; lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
+    return pa.ListArray.from_arrays(
+        pa.array(offs.astype(np.int32)), pa.array(values, type=pa.int64())
+    )
+
+
 def per_doc_signatures(
     df: DataFrame,
     id_col: str,
@@ -169,86 +215,71 @@ def per_doc_signatures(
     shingle_n: int,
     coeffs: list[tuple[int, int]] | None = None,
     want_set: bool = False,
-    want_fp: bool = False,
+    window: int | None = None,
 ) -> DataFrame:
-    """One map-only pass: (id[, minhash][, sh_set][, fp]) per doc.
+    """One map-only pass: (id[, minhash][, sh_set][, wfp]) per doc.
 
-    Column semantics match the row-wise formulations exactly:
-    ``minhash`` = minhash_signatures' array (len(coeffs) lanes),
-    ``sh_set`` = collect_set of the doc's shingle hashes (sorted —
-    consumers are set-algebraic), ``fp`` = simhash64_rows' fingerprint.
-    Docs whose text is NULL vanish (posexplode semantics). The plan
-    is Scan → Project(tokens/xxhash64) → MapInArrow: no exchange."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    ``minhash`` holds one lane per (a, b) in ``coeffs``; ``sh_set``
+    the doc's distinct shingle hashes; ``wfp`` its distinct winnowing
+    fingerprints over ``window`` consecutive shingles. Both sets come
+    sorted (consumers are set-algebraic). Rows whose text is NULL
+    vanish. The kernel works per row, so ids must be unique for a row
+    to be a document. The plan is Scan → Project(tokens/xxhash64) →
+    MapInArrow: no exchange."""
     id_dt = df.schema[id_col].dataType.simpleString()
     out_fields = [f"id {id_dt}"]
     if coeffs is not None:
         out_fields.append("minhash array<bigint>")
     if want_set:
         out_fields.append("sh_set array<bigint>")
-    if want_fp:
-        out_fields.append("fp bigint")
-    out_schema = ", ".join(out_fields)
+    if window is not None:
+        out_fields.append("wfp array<bigint>")
+    names = [f.split(" ")[0] for f in out_fields]
     n = shingle_n
     cfs = list(coeffs) if coeffs is not None else None
 
-    th_df = _token_hash_df(df, id_col, text_col)
+    th_df = df.select(
+        F.col(id_col).alias("id"), _token_hashes(text_col).alias("__th")
+    )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            if rb.num_rows and rb.column(1).null_count:
+            if rb.column(1).null_count:
                 rb = rb.filter(pc.is_valid(rb.column(1)))
-            nd = rb.num_rows
+            if not rb.num_rows:
+                continue
+            sh, counts = _flat_shingles(*_flat_token_hashes(rb.column(1)), n)
             arrays: list[pa.Array] = [rb.column(0)]
-            if nd == 0:
-                flat = np.empty(0, dtype=np.int64)
-                lengths = np.empty(0, dtype=np.int64)
-            else:
-                th = rb.column(1)
-                lengths = pc.list_value_length(th).to_numpy().astype(np.int64)
-                flat = pc.list_flatten(th).to_numpy(
-                    zero_copy_only=False
-                ).astype(np.int64, copy=False)
-            sh, counts = _flat_shingles(flat, lengths, n)
             if cfs is not None:
-                mat = (
-                    _lane_minima(sh, counts, cfs)
-                    if nd
-                    else np.empty((0, len(cfs)), dtype=np.int64)
-                )
-                offs = np.arange(nd + 1, dtype=np.int32) * len(cfs)
                 arrays.append(
-                    pa.ListArray.from_arrays(
-                        pa.array(offs, type=pa.int32()),
-                        pa.array(mat.ravel(), type=pa.int64()),
+                    _list_array(
+                        _lane_minima(sh, counts, cfs).ravel(),
+                        np.full(rb.num_rows, len(cfs)),
                     )
                 )
             if want_set:
-                uval, ucounts = (
-                    _doc_unique(sh, counts)
-                    if nd
-                    else (np.empty(0, dtype=np.int64), counts)
-                )
-                soffs = np.concatenate(([0], np.cumsum(ucounts))).astype(
-                    np.int32
-                )
-                arrays.append(
-                    pa.ListArray.from_arrays(
-                        pa.array(soffs, type=pa.int32()),
-                        pa.array(uval, type=pa.int64()),
-                    )
-                )
-            if want_fp:
-                fp = (
-                    _simhash_fp(sh, counts)
-                    if nd
-                    else np.empty(0, dtype=np.int64)
-                )
-                arrays.append(pa.array(fp, type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.split(" ")[0] for f in out_fields]
-            )
+                arrays.append(_list_array(*_doc_unique(sh, counts)))
+            if window is not None:
+                arrays.append(_list_array(*_winnow(sh, counts, window)))
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return th_df.mapInArrow(run, schema=out_schema)
+    return th_df.mapInArrow(run, schema=", ".join(out_fields))
+
+
+def simhash64(c: Column | str, shingle_n: int = 1) -> Column:
+    """64-bit SimHash of the text column ``c`` over its
+    ``shingle_n``-token shingles; NULL text gives NULL. Charikar's
+    construction: every shingle hash votes on every bit and the
+    fingerprint takes the majority bit-wise. A scalar ``arrow_udf`` on
+    the JVM token-hash array, so it stays a plain Column (map-only,
+    stream-safe)."""
+
+    def fp(th: pa.Array) -> pa.Array:
+        valid = th.is_valid().to_numpy(zero_copy_only=False)
+        out = np.zeros(len(th), dtype=np.int64)
+        if valid.any():
+            flat, lengths = _flat_token_hashes(th.filter(pa.array(valid)))
+            out[valid] = _simhash_fp(*_flat_shingles(flat, lengths, shingle_n))
+        return pa.array(out, mask=~valid)
+
+    return F.arrow_udf(fp, "long")(_token_hashes(c))

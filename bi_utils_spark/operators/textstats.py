@@ -362,8 +362,8 @@ def text_stats(
 
 def grams(toks: Column, n: int, sep: str = " ") -> Column:
     """Non-distinct n-gram strings of a token-array column; empty array
-    when the document has fewer than ``n`` tokens. (Distinct shingle
-    variant: ``dedup.token_shingles``.)"""
+    when the document has fewer than ``n`` tokens. (Hashed shingles
+    for near-dup work: ``operators/lshkern.py``.)"""
     last = F.size(toks) - (n - 1)
     return F.when(last <= 0, F.array().cast("array<string>")).otherwise(
         F.transform(

@@ -73,18 +73,19 @@ def near_dedup_stream_text(
 ) -> DataFrame:
     """Streaming NEAR-dedup for text ingest — the text analogue of
     classify.near_dedup_stream_embeddings: fingerprint each arriving
-    document with the batch tier's ``simhash64`` (a pure Column
-    expression — map-only, so it runs on unbounded streams), then
-    drop documents whose 64-bit signature was already admitted inside
-    the watermark horizon. Catches the re-deliveries the EXACT content
-    gate misses: whitespace jitter, re-serialized payloads, trivial
-    token-order-preserving edits — any variant whose shingle set
-    (token_shingles whitespace-normalizes) votes the same fingerprint.
+    document with the batch tier's ``simhash64`` (a plain Column — a
+    map-only vectorized Arrow UDF, so it runs on unbounded streams),
+    then drop documents whose 64-bit signature was already admitted
+    inside the watermark horizon. Catches the re-deliveries the EXACT
+    content gate misses: whitespace jitter, re-serialized payloads,
+    trivial token-order-preserving edits — any variant whose
+    whitespace-normalized token shingles vote the same fingerprint.
 
-    Signature parity with batch: the expression IS
-    operators.dedup.simhash64, so a document admitted here carries
-    the exact fingerprint the batch near-dup tiers (simhash_near_dup)
-    compute — stream-gate survivors slot into batch banding unchanged.
+    Signature parity with batch: there is one SimHash, computed by the
+    shingle-hash kernel (operators/lshkern.py). ``sig_col`` equals
+    ``simhash64_rows``' ``fp`` for the same text and ``shingle_n``, the
+    fingerprint ``simhash_near_dup_join`` bands on — stream-gate
+    survivors slot into batch banding unchanged.
 
     Recall is signature-equality (Hamming 0) — Hamming>0 neighbors
     within the horizon belong to the batch banded tiers; state per

@@ -73,15 +73,6 @@ def test_dedup_exact_null_vs_empty_and_boundary_shift(spark):
 
 # --- shingles / jaccard ------------------------------------------------------
 
-def test_token_shingles(spark):
-    df = spark.createDataFrame([("a b c d",)], ["t"])
-    got = df.select(D.token_shingles("t", 2).alias("s")).first()["s"]
-    # \x01 delimiter keeps ("ab","c") and ("a","bc") distinct shingles
-    assert sorted(got) == ["a\x01b", "b\x01c", "c\x01d"]
-    short = spark.createDataFrame([("a",)], ["t"])
-    assert short.select(D.token_shingles("t", 3).alias("s")).first()["s"] == ["a"]
-
-
 def test_jaccard_join_exact_small(spark):
     df = spark.createDataFrame(
         [

@@ -308,10 +308,11 @@ def test_near_dedup_stream_text_drops_whitespace_jitter(spark, tmp_path):
     """VERDICT r4 #3: a re-delivered document with trivial whitespace
     jitter passes the exact gate but must be dropped by the SimHash
     gate; a genuinely distinct document is admitted. The signature the
-    stream computes must equal the batch simhash64 fingerprint."""
+    stream computes must equal the batch simhash64 fingerprint and the
+    simhash64_rows fingerprint the batch near-dup join bands on."""
     from pyspark.sql import functions as F
 
-    from bi_utils_spark.operators.dedup import simhash64
+    from bi_utils_spark.operators.dedup import simhash64, simhash64_rows
     from bi_utils_spark.streaming.dedup import near_dedup_stream_text
 
     src = tmp_path / "near_text_src"
@@ -342,16 +343,17 @@ def test_near_dedup_stream_text_drops_whitespace_jitter(spark, tmp_path):
     rows = spark.sql("SELECT * FROM near_text_out ORDER BY id").collect()
     assert [r["id"] for r in rows] == [1, 3]
     # batch-parity: the admitted rows carry the batch-tier fingerprint
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (3, "an entirely different document body")],
+        "id long, text string",
+    )
     batch = {
         r["id"]: r["fp"]
-        for r in spark.createDataFrame(
-            [(1, "the quick brown fox jumps"), (3, "an entirely different document body")],
-            "id long, text string",
-        )
-        .select("id", simhash64("text").alias("fp"))
-        .collect()
+        for r in docs.select("id", simhash64("text").alias("fp")).collect()
     }
     assert {r["id"]: r["sig64"] for r in rows} == batch
+    rows_fp = {r["id"]: r["fp"] for r in simhash64_rows(docs, "id", "text").collect()}
+    assert {r["id"]: r["sig64"] for r in rows} == rows_fp
 
 
 def test_dedup_stream_keys_across_batches(spark, tmp_path):
