@@ -265,12 +265,12 @@ def session_paths(
     from pyspark.sql import Window
 
     w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    gap = F.col(ts_col).cast("long") - F.lag(
-        F.col(ts_col).cast("long")
-    ).over(w)
+    # microsecond gaps: a whole-second cast would merge two events
+    # gap_sec + 0.5 s apart into one session
+    gap = F.unix_micros(ts_col) - F.lag(F.unix_micros(ts_col)).over(w)
     s = events.withColumn(
         "__new",
-        F.when(gap.isNull() | (gap > gap_sec), F.lit(1)).otherwise(
+        F.when(gap.isNull() | (gap > gap_sec * 1_000_000), F.lit(1)).otherwise(
             F.lit(0)
         ),
     ).withColumn(

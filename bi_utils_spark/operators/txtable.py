@@ -912,8 +912,12 @@ def create_table(
     gen = dict(generated or {})
     ident = dict(identity or {})
     for col, expr in gen.items():
-        refs = re.findall(r"[A-Za-z_]\w*", expr)
-        if col in refs:
+        refs = _expr_refs(expr)
+        if refs is None:
+            raise ValueError(
+                f"generated column {col!r}: cannot parse {expr!r}"
+            )
+        if col.lower() in refs:
             raise ValueError(
                 f"generated column {col!r} references itself in "
                 f"{expr!r}"
@@ -1815,53 +1819,153 @@ def _zone_overlaps(meta: dict, skip: dict) -> bool:
     return True
 
 
-_GEN_DATE_RE = re.compile(
-    r"^\s*(?:cast\s*\(\s*(\w+)\s+as\s+date\s*\)"
-    r"|to_date\s*\(\s*(\w+)\s*\))\s*$",
-    re.I,
-)
-_GEN_YEAR_RE = re.compile(r"^\s*year\s*\(\s*(\w+)\s*\)\s*$", re.I)
-_GEN_PREFIX_RE = re.compile(
-    r"^\s*substr(?:ing)?\s*\(\s*(\w+)\s*,\s*1\s*,\s*(\d+)\s*\)\s*$", re.I
-)
+# ---------------------------------------------------------------------------
+# reading expressions: one walk over Spark's own parse
+# ---------------------------------------------------------------------------
+
+# Catalyst classes the walkers match by operator name; any other class
+# becomes ("call", <lowercased class name>, args) and matches nothing
+_EXPR_OPS = {
+    "And": "and",
+    "Or": "or",
+    "Not": "not",
+    "EqualTo": "=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "In": "in",
+    "Cast": "cast",
+}
+# literal types whose rendered value maps to a Python value comparable
+# with zone maps; dates and timestamps stay their rendered ISO strings
+# (session time zone), the form footer stats and partition values take
+_EXPR_LITS = {
+    "byte": int,
+    "short": int,
+    "integer": int,
+    "long": int,
+    "double": float,
+    "decimal": float,
+    "string": str,
+    "date": str,
+    "timestamp": str,
+    "boolean": lambda v: v == "true",
+}
+
+
+def _expr_tree(expr):
+    """Spark's own unresolved parse of ``expr`` (a Column, or a SQL
+    string read through ``F.expr``) as ("call", op, args) /
+    ("lit", v) / ("ident", name_parts) nodes — the one place this
+    module reads an expression. Catalyst renders the tree as a
+    pre-order JSON node list in one JVM round trip. Column-API
+    operators arrive as functions named by their symbol (``>=``,
+    ``and``, ``in``) and parsed SQL as expression classes; both map to
+    the same op names. A cast carries its target type as a trailing
+    literal (``cast(x, 'date')``); lambda variables read as idents, so
+    a name inside a lambda body still counts as a reference. Raises
+    when Spark cannot parse the expression or no session is active —
+    callers decide whether that fails open or closed."""
+    col = F.expr(expr) if isinstance(expr, str) else expr
+    jexpr = SparkSession.active()._jsparkSession.expression(col._jc)
+    nodes = iter(json.loads(jexpr.toJSON()))
+
+    def build():
+        n = next(nodes)
+        cls = n["class"].rsplit(".", 1)[-1]
+        args = [build() for _ in range(n["num-children"])]
+        if cls in ("UnresolvedAttribute", "UnresolvedNamedLambdaVariable"):
+            # nameParts render as "[p1, p2]"
+            return ("ident", tuple(n["nameParts"][1:-1].split(", ")))
+        if cls == "Literal":
+            dtype = n["dataType"].split("(")[0]  # decimal(p,s) -> decimal
+            if n["value"] is None:
+                return ("lit", None)
+            if dtype in _EXPR_LITS:
+                return ("lit", _EXPR_LITS[dtype](n["value"]))
+            return ("call", dtype, [])
+        if cls == "UnresolvedFunction":
+            return ("call", n["nameParts"][1:-1].lower(), args)
+        if cls == "Cast":
+            args.append(("lit", n["dataType"]))
+        return ("call", _EXPR_OPS.get(cls, cls.lower()), args)
+
+    return build()
+
+
+def _expr_refs(expr) -> set[str] | None:
+    """Lowercased top-level columns ``expr`` reads: the first name part
+    of every column reference in Spark's parse (Spark resolves names
+    case-insensitively). None when the expression does not parse —
+    the rename/drop/self-reference guards refuse on None."""
+    try:
+        stack = [_expr_tree(expr)]
+    except Exception:  # noqa: BLE001 — the caller fails closed
+        return None
+    out: set[str] = set()
+    while stack:
+        node = stack.pop()
+        if node[0] == "ident":
+            # a name holding ", " splits like a nested path in the
+            # rendering; counting the joined form too keeps it found
+            out.update((node[1][0].lower(), ", ".join(node[1]).lower()))
+        elif node[0] == "call":
+            stack.extend(node[2])
+    return out
+
+
 # date_trunc('unit', ts) -> timestamp; trunc(date, 'unit') -> date
-_GEN_DTRUNC_RE = re.compile(
-    r"^\s*date_trunc\s*\(\s*'(year|month|week|day)'\s*,\s*(\w+)\s*\)\s*$",
-    re.I,
-)
-_GEN_TRUNC_RE = re.compile(
-    r"^\s*trunc\s*\(\s*(\w+)\s*,\s*'(year|yyyy|yy|month|mon|mm|week)'"
-    r"\s*\)\s*$",
-    re.I,
-)
+_DTRUNC_UNITS = ("year", "month", "week", "day")
+_TRUNC_UNITS = {
+    "year": "year", "yyyy": "year", "yy": "year",
+    "month": "month", "mon": "month", "mm": "month", "week": "week",
+}
 
 
 def _parse_generated_expr(expr: str):
     """Recognize the provably-MONOTONE generated-column forms range
     derivation supports: date truncation (``CAST(x AS DATE)`` /
-    ``TO_DATE(x)``), ``YEAR(x)``, and string prefix
-    (``SUBSTRING(x, 1, n)`` — lexicographic prefix truncation is
-    order-preserving, the Iceberg ``truncate`` transform). Returns
-    ("date"|"year"|"prefix", base_col, arg) or None — unrecognized
-    forms simply contribute no pruning (fail-open)."""
-    m = _GEN_DATE_RE.match(expr)
-    if m:
-        return ("date", m.group(1) or m.group(2), None)
-    m = _GEN_YEAR_RE.match(expr)
-    if m:
-        return ("year", m.group(1), None)
-    m = _GEN_PREFIX_RE.match(expr)
-    if m:
-        return ("prefix", m.group(1), int(m.group(2)))
-    m = _GEN_DTRUNC_RE.match(expr)
-    if m:  # returns TIMESTAMP — bounds render as 'Y-m-d 00:00:00'
-        return ("dtrunc", m.group(2), m.group(1).lower())
-    m = _GEN_TRUNC_RE.match(expr)
-    if m:  # returns DATE — bounds render as 'Y-m-d'
-        unit = {
-            "yyyy": "year", "yy": "year", "mon": "month", "mm": "month",
-        }.get(m.group(2).lower(), m.group(2).lower())
-        return ("trunc", m.group(1), unit)
+    ``TO_DATE(x)``), ``YEAR(x)``, string prefix (``SUBSTRING(x, 1,
+    n)`` — lexicographic prefix truncation is order-preserving, the
+    Iceberg ``truncate`` transform), and calendar truncation
+    (``DATE_TRUNC('unit', x)`` returns a timestamp, ``TRUNC(x,
+    'unit')`` a date). Returns (kind, base_col, arg) or None —
+    unrecognized or unparseable forms simply contribute no pruning
+    (fail-open)."""
+    try:
+        node = _expr_tree(expr)
+    except Exception:  # noqa: BLE001 — fail open
+        return None
+    if node[0] != "call":
+        return None
+    _, op, args = node
+    cols = [a[1] for a in args if a[0] == "ident"]
+    lits = [a[1] for a in args if a[0] == "lit"]
+    if len(cols) != 1 or len(cols[0]) != 1:
+        return None
+    if len(cols) + len(lits) != len(args):
+        return None
+    base = cols[0][0]
+    lead = args[0][0] == "ident"
+    if (op == "cast" and lits == ["date"]) or (op == "to_date" and not lits):
+        return ("date", base, None)
+    if op == "year" and not lits:
+        return ("year", base, None)
+    if (
+        op in ("substr", "substring")
+        and lead
+        and len(lits) == 2
+        and lits[0] == 1
+        and isinstance(lits[1], int)
+        and lits[1] >= 0
+    ):
+        return ("prefix", base, lits[1])
+    unit = str(lits[0]).lower() if len(lits) == 1 else None
+    if op == "date_trunc" and not lead and unit in _DTRUNC_UNITS:
+        return ("dtrunc", base, unit)
+    if op == "trunc" and lead and unit in _TRUNC_UNITS:
+        return ("trunc", base, _TRUNC_UNITS[unit])
     return None
 
 
@@ -2023,59 +2127,12 @@ def _prune_files(
 _PRED_FLIP = {">": "<", ">=": "<=", "<": ">", "<=": ">=", "=": "="}
 
 
-def _parse_pred(t: str, i: int):
-    """Recursive-descent parse of Spark's prefix expression rendering
-    (``and(>(cents, 100), =(status, 'P'))``) into ("call", op, args) /
-    ("lit", v) / ("ident", name) nodes. Raises on anything it does
-    not fully understand — the caller fails OPEN (no pruning)."""
-    while i < len(t) and t[i] == " ":
-        i += 1
-    if i < len(t) and t[i] == "'":
-        j = i + 1
-        while j < len(t) and t[j] != "'":
-            j += 1
-        if j >= len(t):
-            raise ValueError("unterminated string")
-        return ("lit", t[i + 1 : j]), j + 1
-    j = i
-    while j < len(t) and t[j] not in "(),":
-        j += 1
-    tok = t[i:j].strip()
-    if j < len(t) and t[j] == "(":
-        if not tok:
-            raise ValueError("empty call name")
-        args = []
-        j += 1
-        while True:
-            node, j = _parse_pred(t, j)
-            args.append(node)
-            while j < len(t) and t[j] == " ":
-                j += 1
-            if j < len(t) and t[j] == ",":
-                j += 1
-                continue
-            if j < len(t) and t[j] == ")":
-                return ("call", tok, args), j + 1
-            raise ValueError("bad call syntax")
-    if not tok:
-        raise ValueError("empty token")
-    try:
-        return ("lit", int(tok)), j
-    except ValueError:
-        pass
-    try:
-        return ("lit", float(tok)), j
-    except ValueError:
-        pass
-    return ("ident", tok), j
-
-
 def _pred_ranges(node) -> dict | None:
     """(lo, hi) bounds per column IMPLIED by the parsed predicate.
-    Only AND-conjunctions of ``col <op> literal`` (either side) and
-    numeric/string IN-lists contribute; every other shape returns
-    None for its subtree — under AND an unknown conjunct simply
-    contributes no constraint, which keeps the derived ranges a
+    Only AND-conjunctions of ``col <op> literal`` (either side),
+    BETWEEN and IN-lists of non-NULL literals contribute; every other
+    shape returns None for its subtree — under AND an unknown conjunct
+    simply contributes no constraint, which keeps the derived ranges a
     sound implication (never narrower than the predicate)."""
     if node[0] != "call":
         return None
@@ -2083,35 +2140,27 @@ def _pred_ranges(node) -> dict | None:
     if op == "and":
         out: dict = {}
         for a in args:
-            r = _pred_ranges(a)
-            if not r:
-                continue
-            for c, (lo, hi) in r.items():
-                plo, phi = out.get(c, (None, None))
-                nlo = plo if lo is None else (lo if plo is None else max(lo, plo))
-                nhi = phi if hi is None else (hi if phi is None else min(hi, phi))
-                out[c] = (nlo, nhi)
+            for c, (lo, hi) in (_pred_ranges(a) or {}).items():
+                _merge_range(out, c, lo, hi)
         return out or None
-    if op in _PRED_FLIP and len(args) == 2:
-        a, b = args
-        if a[0] == "ident" and b[0] == "lit":
-            col, v = a[1], b[1]
-        elif a[0] == "lit" and b[0] == "ident":
-            col, v = b[1], a[1]
-            op = _PRED_FLIP[op]
-        else:
-            return None
+    if op in _PRED_FLIP and len(args) == 2 and args[1][0] == "ident":
+        op, args = _PRED_FLIP[op], args[::-1]
+    if len(args) < 2 or args[0][0] != "ident":
+        return None
+    if any(a[0] != "lit" or a[1] is None for a in args[1:]):
+        return None
+    col, vals = ".".join(args[0][1]), [a[1] for a in args[1:]]
+    if op in _PRED_FLIP and len(vals) == 1:
+        v = vals[0]
         if op in (">", ">="):
             return {col: (v, None)}
         if op in ("<", "<="):
             return {col: (None, v)}
         return {col: (v, v)}
-    if op == "in" and len(args) >= 2:
-        head, vals = args[0], args[1:]
-        if head[0] == "ident" and all(x[0] == "lit" for x in vals):
-            vlist = [x[1] for x in vals]
-            return {head[1]: (min(vlist), max(vlist))}
-        return None
+    if op == "between" and len(vals) == 2:
+        return {col: (vals[0], vals[1])}
+    if op == "in":
+        return {col: (min(vals), max(vals))}
     return None
 
 
@@ -2122,170 +2171,21 @@ def _merge_range(out: dict, col: str, lo, hi) -> None:
     out[col] = (nlo, nhi)
 
 
-_SQL_TOKEN_RE = re.compile(
-    r"\s*(>=|<=|!=|<>|=|<|>|\(|\)|,|'[^']*'"
-    r"|[A-Za-z_][A-Za-z_0-9.]*|-?\d+\.\d+|-?\d+)"
-)
-
-
-def _tokenize_sql(s: str) -> list[str]:
-    out, i = [], 0
-    while i < len(s):
-        m = _SQL_TOKEN_RE.match(s, i)
-        if not m:
-            if s[i:].strip():
-                raise ValueError(f"bad token at {s[i:]!r}")
-            break
-        tok = m.group(1)
-        # ANSI typed literals: DATE '2024-01-15' / TIMESTAMP '…' —
-        # fold the keyword into the literal (a column can never be
-        # adjacent to a quoted string, so this is unambiguous)
-        if (
-            tok.startswith("'")
-            and out
-            and out[-1].upper() in ("DATE", "TIMESTAMP")
-        ):
-            out.pop()
-        out.append(tok)
-        i = m.end()
-    return out
-
-
-def _sql_lit(tok: str):
-    if tok.startswith("'"):
-        return tok[1:-1]
-    try:
-        return int(tok)
-    except ValueError:
-        pass
-    try:
-        return float(tok)
-    except ValueError:
-        return None
-
-
-def _one_sql_pred(p: list[str]) -> dict | None:
-    cmps = {">", ">=", "<", "<=", "="}
-    if len(p) == 3 and p[1] in cmps:
-        a, op, b = p
-        la, lb = _sql_lit(a), _sql_lit(b)
-        if la is None and lb is not None:
-            col, v = a, lb
-        elif lb is None and la is not None:
-            col, v, op = b, la, _PRED_FLIP[op]
-        else:
-            return None
-        if not re.fullmatch(r"[A-Za-z_][\w.]*", col):
-            return None
-        if op in (">", ">="):
-            return {col: (v, None)}
-        if op in ("<", "<="):
-            return {col: (None, v)}
-        return {col: (v, v)}
-    low = [t.lower() for t in p]
-    if len(p) == 5 and low[1] == "between" and low[3] == "and":
-        v1, v2 = _sql_lit(p[2]), _sql_lit(p[4])
-        if v1 is None or v2 is None:
-            return None
-        return {p[0]: (v1, v2)}
-    if len(p) >= 5 and low[1] == "in" and p[2] == "(" and p[-1] == ")":
-        vals = [_sql_lit(t) for t in p[3:-1] if t != ","]
-        if not vals or any(v is None for v in vals):
-            return None
-        return {p[0]: (min(vals), max(vals))}
-    return None
-
-
-def _sql_conj_ranges(tokens: list[str]) -> dict:
-    """Ranges implied by a tokenized infix conjunction. Splits on
-    top-level AND (BETWEEN's own AND kept inline), strips wrapping
-    parens, recurses into nested conjunctions; an unparseable
-    conjunct contributes nothing. The caller has already rejected
-    OR/NOT anywhere in the expression."""
-    parts: list[list[str]] = []
-    cur: list[str] = []
-    depth, between = 0, False
-    for t in tokens:
-        tl = t.lower()
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                raise ValueError("unbalanced parens")
-        elif depth == 0 and tl == "and":
-            if between:
-                between = False
-                cur.append(t)
-                continue
-            parts.append(cur)
-            cur = []
-            continue
-        elif depth == 0 and tl == "between":
-            between = True
-        cur.append(t)
-    if depth != 0:
-        raise ValueError("unbalanced parens")
-    parts.append(cur)
-    out: dict = {}
-    for part in parts:
-        while (
-            len(part) >= 2
-            and part[0] == "("
-            and part[-1] == ")"
-            and _parens_wrap_whole(part)
-        ):
-            part = part[1:-1]
-        r = _one_sql_pred(part)
-        if r is None and any(t.lower() == "and" for t in part):
-            r = _sql_conj_ranges(part)
-        for c, (lo, hi) in (r or {}).items():
-            _merge_range(out, c, lo, hi)
-    return out
-
-
-def _parens_wrap_whole(part: list[str]) -> bool:
-    """True when the outermost parens wrap the WHOLE slice (depth
-    never returns to zero before the last token)."""
-    depth = 0
-    for i, t in enumerate(part):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth == 0 and i != len(part) - 1:
-                return False
-    return True
-
-
 def predicate_skip_ranges(condition) -> dict:
     """Zone-map skip ranges IMPLIED by a predicate — the automatic
-    half of data skipping. Parses the simple conjunctive shapes
-    (``col <op> literal`` under ANDs, BETWEEN, literal IN-lists) out
-    of a Column (Spark's prefix rendering) or a SQL string (infix);
-    anything it cannot prove implied (ORs, NOTs, function-wrapped
-    columns, cross-column terms) contributes NOTHING, so the returned
-    dict is always safe to hand to `read_table(skip=)` /
-    `delete_from_table` — pruning with it can only drop files that
-    contain no matching row. Returns {} when nothing is derivable
+    half of data skipping. Reads a Column or a SQL string through
+    Spark's own parse (`_expr_tree`), so both forms — and ``F.expr``
+    Columns — derive the same ranges from the simple conjunctive
+    shapes (``col <op> literal`` under ANDs, BETWEEN, literal
+    IN-lists); anything it cannot prove implied (ORs, NOTs,
+    function-wrapped columns, cross-column terms, NULL literals)
+    contributes NOTHING, so the returned dict is always safe to hand
+    to `read_table(skip=)` / `delete_from_table` — pruning with it can
+    only drop files that contain no matching row. Returns {} when
+    nothing is derivable or the predicate does not parse
     (fail-open)."""
     try:
-        if isinstance(condition, str):
-            toks = _tokenize_sql(condition)
-            low = {t.lower() for t in toks}
-            if "or" in low or "not" in low:
-                return {}
-            return {
-                c: r for c, r in _sql_conj_ranges(toks).items()
-            }
-        m = re.match(r"^Column<'(.*)'>$", str(condition), re.S)
-        if not m:
-            return {}
-        node, i = _parse_pred(m.group(1), 0)
-        if i != len(m.group(1)):
-            return {}
-        out = _pred_ranges(node)
-        return dict(out) if out else {}
+        return dict(_pred_ranges(_expr_tree(condition)) or {})
     except Exception:  # noqa: BLE001 — fail open
         return {}
 
@@ -2375,9 +2275,10 @@ def read_table(
     ``where`` (Column or SQL string) is the one-argument form of
     predicate + pruning: the row filter is applied AND its implied
     zone-map ranges (`predicate_skip_ranges`) merge into ``skip``
-    automatically — ``read_table(where="cents > 100")`` prunes files
-    and filters rows in one call, fail-open to a full scan when the
-    predicate is not derivable.
+    automatically — ``read_table(where="cents > 100")`` and
+    ``read_table(where=F.col("cents") > 100)`` prune files and filter
+    rows in one call, fail-open to a full scan when the predicate is
+    not derivable.
     """
     if timestamp is not None:
         if version is not None:
@@ -3132,9 +3033,10 @@ def delete_from_table(
     prunes the candidate scan at the manifest level first — a
     date-scoped delete touches only its partitions' files.
     Zone-map pruning of the candidate scan is AUTOMATIC for simple
-    conjunctive predicates (`predicate_skip_ranges` derives the
-    implied per-column bounds; anything underivable fails open to a
-    full candidate scan). ``skip={col: (lo, hi)}`` overrides the
+    conjunctive predicates, given as a Column or a SQL string alike
+    (`predicate_skip_ranges` derives the implied per-column bounds
+    from Spark's parse; anything underivable fails open to a full
+    candidate scan). ``skip={col: (lo, hi)}`` overrides the
     derivation — CAUTION: a manual range must be IMPLIED BY
     ``condition`` (files outside it are never scanned, so matching
     rows there would silently survive); it is an I/O hint, not a
@@ -3351,7 +3253,8 @@ def update_table(
     changing partitions is a delete+insert — express it through
     `merge_tx_table`, which owns that contract). SQL NULL semantics:
     predicate-NULL rows are untouched. Candidate files prune via
-    `predicate_skip_ranges` automatically. The change feed emits the
+    `predicate_skip_ranges` automatically, for a Column or a SQL
+    string condition alike. The change feed emits the
     update as ``update_postimage`` (plus ``update_preimage`` when
     asked) by joining the commit's masked pre-image against its
     staged post-image — exactly the Delta readChangeFeed rendering.
@@ -4477,7 +4380,8 @@ def rename_column(path: str, old: str, new: str) -> int:
             "instead"
         )
     for gcol, gexpr in snap.generated.items():
-        if old == gcol or old in re.findall(r"[A-Za-z_]\w*", gexpr):
+        refs = _expr_refs(gexpr)
+        if old == gcol or refs is None or old.lower() in refs:
             raise ValueError(
                 f"rename_column: {old!r} participates in generated "
                 f"column {gcol!r} = {gexpr!r} — expressions are "
@@ -4543,7 +4447,8 @@ def drop_column(path: str, col: str) -> int:
             "repartition the table instead"
         )
     for gcol, gexpr in snap.generated.items():
-        if col == gcol or col in re.findall(r"[A-Za-z_]\w*", gexpr):
+        refs = _expr_refs(gexpr)
+        if col == gcol or refs is None or col.lower() in refs:
             raise ValueError(
                 f"drop_column: {col!r} participates in generated "
                 f"column {gcol!r} = {gexpr!r} — expressions are "

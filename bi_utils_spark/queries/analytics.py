@@ -260,10 +260,14 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
+    # microseconds, as the oracle compares: a whole-second cast would
+    # merge two events 1800.5 s apart into one session
+    gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
     g = events.withColumn(
         "is_new",
-        F.when(gap.isNull() | (gap > 30 * 60), F.lit(1)).otherwise(F.lit(0)),
+        F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), F.lit(1)).otherwise(
+            F.lit(0)
+        ),
     )
     s = g.withColumn(
         "session_id",

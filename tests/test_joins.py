@@ -290,6 +290,44 @@ def test_session_paths_order_and_truncation(spark):
     assert again[(1, 1)] == "view>click>purchase"
 
 
+def test_session_gap_is_measured_in_microseconds(spark, tmp_path):
+    """Events 1800.5 s apart are two 30-minute sessions: the gap test
+    compares microseconds, like the DuckDB oracles, not whole seconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from bi_utils_spark.operators.events import session_paths
+    from bi_utils_spark.queries.analytics import q_sessionize
+
+    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+    t1 = t0 + dt.timedelta(seconds=1800, microseconds=500_000)
+    t2 = t1 + dt.timedelta(seconds=1800)  # exactly 30 min: same session
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array([t0, t1, t2], pa.timestamp("us")),
+                "user_id": pa.array([7, 7, 7], pa.int64()),
+                "event_type": ["view", "click", "view"],
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    got = {
+        (r["session_id"], r["n_events"])
+        for r in q_sessionize(spark, str(tmp_path)).collect()
+    }
+    assert got == {(1, 1), (2, 2)}
+    df = spark.createDataFrame(
+        [(1, 7, t0, "view"), (2, 7, t1, "click"), (3, 7, t2, "view")],
+        ["event_id", "user_id", "ts", "event_type"],
+    )
+    paths = {
+        r["session_id"]: r["path"]
+        for r in session_paths(df, gap_sec=1800, k=3).collect()
+    }
+    assert paths == {1: "view", 2: "click>view"}
+
+
 def test_rfm_scores_tiles_and_inversion(spark):
     import datetime as dt
     from bi_utils_spark.operators.events import rfm_scores

@@ -13,6 +13,7 @@ disjoint.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
@@ -758,6 +759,14 @@ def test_predicate_skip_ranges_conjunction(spark):
         "status": ("P", "P"),
         "k": (None, 50),
     }
+    # an F.expr Column reads like the SQL string it wraps, alone or
+    # mixed with Column-API terms
+    assert tx.predicate_skip_ranges(F.expr("v >= 1050")) == {
+        "v": (1050, None)
+    }
+    assert tx.predicate_skip_ranges(
+        F.expr("v >= 10") & (F.col("k") < 5)
+    ) == {"v": (10, None), "k": (None, 5)}
 
 
 def test_predicate_skip_ranges_sql_string_and_flip(spark):
@@ -766,6 +775,29 @@ def test_predicate_skip_ranges_sql_string_and_flip(spark):
         "cents": (100, None)
     }
     assert tx.predicate_skip_ranges("x between 3 and 9") == {"x": (3, 9)}
+
+
+def test_predicate_skip_ranges_literal_forms(spark):
+    # escaped quotes, backticked names, exponent numbers, typed
+    # literals and booleans all come from Spark's own parse
+    assert tx.predicate_skip_ranges("s = 'O''Brien'") == {
+        "s": ("O'Brien", "O'Brien")
+    }
+    assert tx.predicate_skip_ranges("`event d` >= 5") == {
+        "event d": (5, None)
+    }
+    assert tx.predicate_skip_ranges("k > 1e3") == {"k": (1000.0, None)}
+    assert tx.predicate_skip_ranges(
+        F.col("d") == F.lit(datetime.date(2024, 1, 2))
+    ) == {"d": ("2024-01-02", "2024-01-02")}
+    assert tx.predicate_skip_ranges("d = DATE '2024-01-15'") == {
+        "d": ("2024-01-15", "2024-01-15")
+    }
+    assert tx.predicate_skip_ranges("b = true") == {"b": (True, True)}
+    # a conjunct holding an OR contributes nothing; the rest holds
+    assert tx.predicate_skip_ranges("k > 1 and (v < 2 or v > 9)") == {
+        "k": (1, None)
+    }
 
 
 def test_predicate_skip_ranges_same_column_intersects(spark):
@@ -782,6 +814,9 @@ def test_predicate_skip_ranges_in_list(spark):
 def test_predicate_skip_ranges_fails_open(spark):
     # OR is not a conjunction — no implied range
     assert tx.predicate_skip_ranges("k = 1 or k = 99") == {}
+    # NOT — no implied range
+    assert tx.predicate_skip_ranges("not k > 3") == {}
+    assert tx.predicate_skip_ranges(~(F.col("k") > 3)) == {}
     # function-wrapped column — unknown
     assert tx.predicate_skip_ranges("abs(k) < 5") == {}
     # unknown conjunct under AND contributes nothing, the rest holds
@@ -790,21 +825,102 @@ def test_predicate_skip_ranges_fails_open(spark):
     }
     # garbage string
     assert tx.predicate_skip_ranges("not even ( sql") == {}
+    # a NULL in the IN-list
+    assert tx.predicate_skip_ranges("k in (1, null)") == {}
+    assert tx.predicate_skip_ranges(F.col("k").isin(1, None)) == {}
 
 
-def test_delete_auto_prunes_from_predicate(spark, tmp_path):
-    """Files provably outside the predicate's derived range are never
-    scanned NOR touched: the delete commits DVs only for files whose
-    zone maps overlap."""
+@pytest.fixture(scope="module")
+def ftable(spark, tmp_path_factory):
+    """Four single-file commits, each a disjoint band of k, so every
+    derivable predicate prunes some files. Read-only, so shared."""
+    path = str(tmp_path_factory.mktemp("ft") / "ft")
+    for band in range(4):
+        df = spark.createDataFrame(
+            [
+                (
+                    k,
+                    k * 10,
+                    "O'Brien" if k % 7 == 0 else f"s{k:03d}",
+                    datetime.date(2024, 1, 1) + datetime.timedelta(days=k),
+                    k % 2 == 0,
+                )
+                for k in range(band * 600, band * 600 + 600, 50)
+            ],
+            "k int, `event d` long, s string, d date, b boolean",
+        ).coalesce(1)
+        if band == 0:
+            tx.create_table(df, path)
+        else:
+            tx.append_table(df, path)
+    return path
+
+
+@pytest.mark.parametrize(
+    "where",
+    [
+        "`event d` >= 12000",
+        "s = 'O''Brien'",
+        "k > 1e3",
+        "d = DATE '2024-01-01'",
+        "k > 1 and (k < 100 or k > 2300)",
+        "b = true and k < 700",
+    ],
+)
+def test_where_pruning_keeps_rows_sql(spark, ftable, where):
+    pruned = tx.read_table(spark, ftable, where=where)
+    full = tx.read_table(spark, ftable).where(where)
+    assert sorted(pruned.collect()) == sorted(full.collect())
+    assert full.count() > 0
+
+
+@pytest.mark.parametrize("form", ["expr", "date_lit", "mixed"])
+def test_where_pruning_keeps_rows_column(spark, ftable, form):
+    where = {
+        "expr": lambda: F.expr("k >= 1800"),
+        "date_lit": lambda: F.col("d") == F.lit(datetime.date(2024, 2, 20)),
+        "mixed": lambda: F.expr("k >= 600") & (F.col("k") < 1200),
+    }[form]()
+    assert tx.predicate_skip_ranges(where)
+    pruned = tx.read_table(spark, ftable, where=where)
+    full = tx.read_table(spark, ftable).where(where)
+    assert sorted(pruned.collect()) == sorted(full.collect())
+    assert full.count() > 0
+
+
+@pytest.fixture()
+def two_files(spark, tmp_path, monkeypatch):
+    """One file of v in 0..99 and one of v in 1000..1099, plus a spy
+    recording how many files each row-level scan reads."""
     path = str(tmp_path / "t")
-    lo = spark.range(0, 100).selectExpr("id AS k", "id AS v")
-    hi = spark.range(1000, 1100).selectExpr("id AS k", "id AS v")
+    lo = spark.range(0, 100).selectExpr("id AS k", "id AS v").coalesce(1)
+    hi = spark.range(1000, 1100).selectExpr("id AS k", "id AS v").coalesce(1)
     tx.create_table(lo, path)
     tx.append_table(hi, path)
-    out = tx.delete_from_table(spark, path, F.col("v") >= 1050)
+    scanned: list[int] = []
+    real = tx._read_files_live_meta
+
+    def spy(spark, path, files, schema):
+        scanned.append(len(files))
+        return real(spark, path, files, schema)
+
+    monkeypatch.setattr(tx, "_read_files_live_meta", spy)
+    assert len(tx._fold(path).files) == 2
+    return path, scanned
+
+
+@pytest.mark.parametrize("form", ["column", "sql"])
+def test_delete_auto_prunes_from_predicate(spark, two_files, form):
+    """Files provably outside the predicate's derived range are never
+    scanned NOR touched: the delete commits DVs only for files whose
+    zone maps overlap — for a Column and a SQL string alike."""
+    path, scanned = two_files
+    cond = F.col("v") >= 1050 if form == "column" else "v >= 1050"
+    out = tx.delete_from_table(spark, path, cond)
     assert out["rows_deleted"] == 50
-    # only the high file(s) carry DVs — the low file was pruned by
-    # the derived (1050, None) range before any scan
+    assert scanned == [1]
+    # only the high file carries DVs — the low file was pruned by the
+    # derived (1050, None) range before any scan
     snap = tx._fold(path)
     for rel, m in snap.files.items():
         stats = m.get("stats", {}).get("v")
@@ -812,6 +928,25 @@ def test_delete_auto_prunes_from_predicate(spark, tmp_path):
             assert stats and stats[1] >= 1050
         elif stats:
             assert stats[1] < 1050
+    assert tx.read_table(spark, path).count() == 150
+
+
+def test_update_sql_string_prunes(spark, two_files):
+    path, scanned = two_files
+    out = tx.update_table(spark, path, "v >= 1050", {"k": "k + 1"})
+    assert out["rows_updated"] == 50
+    assert scanned == [1]
+    got = {r["v"]: r["k"] for r in tx.read_table(spark, path).collect()}
+    assert got[1050] == 1051 and got[1049] == 1049 and got[5] == 5
+
+
+def test_tx_sql_delete_prunes(spark, two_files):
+    from bi_utils_spark.operators.sqldml import tx_sql
+
+    path, scanned = two_files
+    out = tx_sql(spark, "DELETE FROM t WHERE v >= 1050", {"t": path})
+    assert out["rows_deleted"] == 50
+    assert scanned == [1]
     assert tx.read_table(spark, path).count() == 150
 
 

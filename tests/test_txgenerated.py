@@ -144,6 +144,49 @@ def test_rename_and_drop_guards(spark, gtable):
     assert "amount" in tx.read_table(spark, gtable).columns
 
 
+def _dated(spark):
+    return spark.createDataFrame(
+        [(k, dt.date(1995, 3, 1 + k), f"w{k}") for k in range(6)],
+        "k int, `event d` date, week string",
+    )
+
+
+def test_backticked_base_guards(spark, tmp_path):
+    path = str(tmp_path / "bt")
+    tx.create_table(
+        _dated(spark), path, generated={"y": "year(`event d`)"}
+    )
+    with pytest.raises(ValueError, match="participates in generated"):
+        tx.rename_column(path, "event d", "ed")
+    with pytest.raises(ValueError, match="participates in generated"):
+        tx.drop_column(path, "event d")
+    tx.append_table(_dated(spark), path)  # the table still writes
+    assert tx.read_table(spark, path).where("y = 1995").count() == 12
+
+
+def test_string_literal_is_not_a_reference(spark, tmp_path):
+    # 'week' inside the expression is a literal, not the column week
+    path = str(tmp_path / "wk")
+    tx.create_table(
+        _dated(spark).drop("week").withColumnRenamed("event d", "d"),
+        path,
+        generated={"week": "trunc(d, 'week')"},
+    )
+    got = {r["k"]: r["week"] for r in tx.read_table(spark, path).collect()}
+    assert got[0] == dt.date(1995, 2, 27) and got[5] == dt.date(1995, 3, 6)
+    path2 = str(tmp_path / "wk2")
+    tx.create_table(
+        _dated(spark).withColumnRenamed("event d", "d"),
+        path2,
+        generated={"wk": "trunc(D, 'week')"},
+    )
+    tx.rename_column(path2, "week", "label")
+    assert "label" in tx.read_table(spark, path2).columns
+    # Spark resolves D to d, so d is still a base column
+    with pytest.raises(ValueError, match="participates in generated"):
+        tx.rename_column(path2, "d", "day")
+
+
 def test_clone_carries_definitions(spark, gtable, tmp_path):
     shallow = str(tmp_path / "sc")
     tx.clone_table(spark, gtable, shallow)
@@ -165,7 +208,7 @@ def test_definitions_survive_checkpoint(spark, gtable):
     assert tx._fold(gtable).generated == {"y": "year(d)"}
 
 
-def test_generated_range_derivation_forms():
+def test_generated_range_derivation_forms(spark):
     assert tx._parse_generated_expr("CAST(ts AS DATE)") == (
         "date", "ts", None,
     )
@@ -180,6 +223,9 @@ def test_generated_range_derivation_forms():
     )
     assert tx._parse_generated_expr("trunc(ts, 'MM')") == (
         "trunc", "ts", "month",
+    )
+    assert tx._parse_generated_expr("year(`event ts`)") == (
+        "year", "event ts", None,
     )
     # calendar truncation bounds: month floor, week floor (Monday)
     out = tx._extend_generated(
