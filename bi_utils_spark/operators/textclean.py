@@ -13,9 +13,27 @@ functions/scalars.py); patterns follow the common public recipes
 Scale: map-only by construction — zero shuffles, no Python, safe to
 fuse with any downstream operator. Regexes are bounded-backtracking
 (character classes + counted runs, no nested quantifiers).
+
+Guards: a regex pass runs only on rows whose RAW input holds the literal
+its pattern needs — ``<`` for tags, ``&`` for entities, ``@`` for
+emails, ``://`` or ``www.`` for URLs, a digit-dot-digit run for IPv4 —
+so most documents skip most passes. This is exact because no earlier
+pass can create a later pass's literal: markup stripping inserts only
+``" "`` and the characters ``&<>"'``, and the default placeholders hold
+none of ``@:/w.`` or digits, so a literal absent from the raw input is
+absent from the running value too. A placeholder that is empty (it
+joins its neighbours) or holds a character of a later literal turns
+that later guard off. The guard tests the raw input column, never the
+running value: a guard on the running value would repeat the whole
+chain inside each condition and grow the expression exponentially. The
+phone pass has no guard, because the spaces markup stripping inserts
+can complete a phone match.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -41,6 +59,40 @@ def _col(c: ColumnOrName) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def _guarded(out: Column, pass_: Column, guard: Column | None) -> Column:
+    """``pass_`` (a rewrite of ``out``) where ``guard`` holds, else
+    ``out`` unchanged; no guard runs the pass on every row."""
+    return pass_ if guard is None else F.when(guard, pass_).otherwise(out)
+
+
+def _has(raw: Column, *literals: str) -> Column:
+    return reduce(operator.or_, (F.contains(raw, F.lit(s)) for s in literals))
+
+
+def _redact_pii(
+    out: Column, raw: Column, email: str | None, url: str | None,
+    phone: str | None, ip: str | None,
+) -> Column:
+    """:func:`redact_pii` over the running value ``out`` of the raw
+    input ``raw``, each regex pass guarded as the module docstring
+    says."""
+    passes = (
+        (email, EMAIL_RE, "@", _has(raw, "@")),
+        (url, URL_RE, ":/w.", _has(raw, "://", "www.")),
+        (ip, IPV4_RE, "0123456789.", raw.rlike(r"[0-9]\.[0-9]")),
+        (phone, PHONE_RE, "", None),
+    )
+    placed: list[str] = []  # placeholders earlier passes insert
+    for repl, pattern, chars, guard in passes:
+        if repl is None:
+            continue
+        if any(p == "" or set(p) & set(chars) for p in placed):
+            guard = None
+        out = _guarded(out, F.regexp_replace(out, pattern, repl), guard)
+        placed.append(repl)
+    return out
+
+
 def redact_pii(
     c: ColumnOrName,
     email: str = "<EMAIL>",
@@ -52,23 +104,15 @@ def redact_pii(
     with typed placeholder tokens (pass None for a class to skip it).
 
     Order matters: URLs before phones (URLs contain digit runs),
-    emails before URLs (hosts look like domains).
-    """
-    out = _col(c)
-    if email is not None:
-        out = F.regexp_replace(out, EMAIL_RE, email)
-    if url is not None:
-        out = F.regexp_replace(out, URL_RE, url)
-    if ip is not None:
-        out = F.regexp_replace(out, IPV4_RE, ip)
-    if phone is not None:
-        out = F.regexp_replace(out, PHONE_RE, phone)
-    return out
+    emails before URLs (hosts look like domains). Each pass but the
+    phone pass runs only on rows that hold its literal (module
+    docstring)."""
+    return _redact_pii(_col(c), _col(c), email, url, phone, ip)
 
 
-def strip_markup(c: ColumnOrName) -> Column:
-    """Drop HTML/XML tags and decode the five XML entities."""
-    out = F.regexp_replace(_col(c), TAG_RE, " ")
+def _strip_markup(out: Column, raw: Column) -> Column:
+    out = _guarded(out, F.regexp_replace(out, TAG_RE, " "), _has(raw, "<"))
+    decoded = out
     for ent, ch in (
         ("&amp;", "&"),
         ("&lt;", "<"),
@@ -76,8 +120,14 @@ def strip_markup(c: ColumnOrName) -> Column:
         ("&quot;", '"'),
         ("&#39;", "'"),
     ):
-        out = F.replace(out, F.lit(ent), F.lit(ch))
-    return out
+        decoded = F.replace(decoded, F.lit(ent), F.lit(ch))
+    return _guarded(out, decoded, _has(raw, "&"))
+
+
+def strip_markup(c: ColumnOrName) -> Column:
+    """Drop HTML/XML tags and decode the five XML entities (on rows
+    holding ``<`` / ``&`` only)."""
+    return _strip_markup(_col(c), _col(c))
 
 
 def normalize_whitespace(c: ColumnOrName) -> Column:
@@ -94,12 +144,13 @@ def clean_text(
     whitespace: bool = True,
 ) -> Column:
     """The composed pipeline: markup → PII → whitespace. Each stage
-    is optional; the result is still ONE projection expression."""
-    out = _col(c)
+    is optional; the result is still ONE projection expression, whose
+    guards all test the raw input ``c``."""
+    out = raw = _col(c)
     if markup:
-        out = strip_markup(out)
+        out = _strip_markup(out, raw)
     if pii:
-        out = redact_pii(out)
+        out = _redact_pii(out, raw, "<EMAIL>", "<URL>", "<PHONE>", "<IP>")
     if whitespace:
         out = normalize_whitespace(out)
     return out

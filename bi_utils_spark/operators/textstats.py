@@ -1,17 +1,24 @@
 """Text-analysis operators for LLM data pipelines (SURVEY.md §2.14 X5).
 
-All hot-path expressions are native Spark SQL functions — tokenize,
-count, ratio, and fingerprint run inside whole-stage codegen with zero
-Python. At 100 TB these are embarrassingly parallel map-side
-projections over the document scan: no shuffle except the explicit
-``groupBy`` aggregations, which combine map-side first.
+Tokenize, count, ratio, and fingerprint are native Spark SQL
+functions that run inside whole-stage codegen with zero Python. The
+one exception is :func:`language_id`: tokens are hashed in the JVM
+(``xxhash64``, the ``lshkern`` token-hash contract) and scored against
+the marker profiles in one scalar Arrow pass (``F.arrow_udf``), which
+replaces 21 per-row array intersections. At 100 TB these are
+embarrassingly parallel map-side projections over the document scan:
+no shuffle except the explicit ``groupBy`` aggregations, which combine
+map-side first.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ColumnOrName = Column | str
@@ -23,8 +30,8 @@ ColumnOrName = Column | str
 # Function words are the classic language-ID signal (Cavnar &
 # Trenkle's n-gram profiles reduced to whole-word profiles): they are
 # ubiquitous in running text and nearly disjoint across languages.
-# Scoring stays a pure codegen expression — each profile is an array
-# literal intersected with the token set, no broadcast, no shuffle.
+# Scoring is one Arrow pass over per-token hashes (language_id), no
+# broadcast, no shuffle.
 # Space-free scripts (zh/ja) only match where text is pre-segmented;
 # plug a segmenter in front for those corpora.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -275,54 +282,69 @@ def quality_score(
     return (length_ok + punct_ok + sw_signal) / 3.0
 
 
-def language_scores(c: ColumnOrName) -> dict[str, Column]:
-    """Per-language marker-hit counts (the n-gram-profile heuristic
-    reduced to function-word profiles).
-
-    Each profile intersects the DISTINCT token set — intersection is
-    distinct by definition, and deduplicating once shrinks the array
-    all |languages| intersections walk. The identical
-    array_distinct(tokens) subtree is collapsed to one evaluation by
-    codegen subexpression elimination."""
-    from bi_utils_spark.functions.litarrays import lit_string_array
-
-    toks = F.array_distinct(tokens(c))
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        out[lang] = F.size(F.array_intersect(toks, lit_string_array(markers)))
-    return out
+@functools.cache
+def _marker_table() -> tuple[list[str], np.ndarray, np.ndarray]:
+    """(language codes in sorted order, sorted distinct marker-word
+    hashes, per-hash bitmask of the languages that list the word). The
+    hashes are Spark's own ``xxhash64`` of each word, evaluated on the
+    driver from a local relation (no job), so they match the JVM token
+    hashes bit for bit."""
+    langs = sorted(LANG_MARKERS)
+    words = sorted({w for ws in LANG_MARKERS.values() for w in ws})
+    rows = SparkSession.active().sql(
+        "SELECT w, xxhash64(w) FROM VALUES "
+        + ", ".join(f"('{w}')" for w in words)
+        + " AS t(w)"
+    ).collect()
+    word_hash = dict(rows)
+    masks: dict[int, int] = {}
+    for bit, lang in enumerate(langs):
+        for w in LANG_MARKERS[lang]:
+            masks[word_hash[w]] = masks.get(word_hash[w], 0) | (1 << bit)
+    keys = np.array(sorted(masks), dtype=np.int64)
+    return langs, keys, np.array([masks[k] for k in keys], dtype=np.int64)
 
 
 def language_id(c: ColumnOrName, default: str = "und") -> Column:
-    """Argmax language by marker hits; ``default`` when no marker hits.
+    """Argmax language by marker hits; ``default`` when no marker hits;
+    NULL text gives NULL.
 
-    Ties break by language code order (deterministic). Pure Column
-    expression — a broadcast-free, shuffle-free classifier.
+    A language's score is the number of its distinct marker words
+    (``LANG_MARKERS``) among the document's ``tokens``. Ties break by
+    language code order (deterministic). Map-only, broadcast-free and
+    shuffle-free, and a plain Column, so it runs on streams too.
 
-    Implementation note: argmax is ``array_max`` over (score, −rank,
-    lang) structs — lexicographic struct ordering picks the highest
-    score and, on ties, the earliest language in sorted-code order.
-    A fold of nested when/otherwise accumulators would duplicate the
-    whole prior expression tree at every step (2^|languages| nodes —
-    unplannable beyond ~15 languages); the struct array keeps every
-    profile intersection evaluated exactly once.
+    Implementation: the JVM hashes every token (``xxhash64``, the
+    ``lshkern`` token-hash contract); one scalar ``arrow_udf`` looks
+    every token hash up in the sorted marker hashes, each carrying a
+    bitmask of the languages that list the word, counts distinct hits
+    per language, and takes the first argmax in sorted-code order.
+    Exact up to a 64-bit hash collision between a token and one of the
+    663 marker words.
     """
-    scores = language_scores(c)
-    langs = sorted(scores)
-    entries = F.array(
-        *[
-            F.struct(
-                scores[lang].alias("s"),
-                F.lit(-i).alias("r"),
-                F.lit(lang).alias("lang"),
-            )
-            for i, lang in enumerate(langs)
-        ]
-    )
-    best = F.array_max(entries)
-    return F.when(best.getField("s") <= 0, F.lit(default)).otherwise(
-        best.getField("lang")
-    )
+    from bi_utils_spark.operators.lshkern import _flat_token_hashes, _token_hashes
+
+    langs, keys, masks = _marker_table()
+    labels = np.array([*langs, default], dtype=object)
+    bits = np.arange(len(langs), dtype=np.int64)
+
+    def label(th: pa.Array) -> pa.Array:
+        valid = th.is_valid().to_numpy(zero_copy_only=False)
+        flat, lengths = _flat_token_hashes(th.filter(pa.array(valid)))
+        doc = np.repeat(np.arange(len(lengths), dtype=np.int64), lengths)
+        pos = np.minimum(np.searchsorted(keys, flat), len(keys) - 1)
+        hit = keys[pos] == flat
+        # distinct (doc, marker) hits, then one vote per listing language
+        d, m = np.divmod(np.unique(doc[hit] * len(keys) + pos[hit]), len(keys))
+        scores = np.zeros((len(lengths), len(langs)), dtype=np.int64)
+        np.add.at(scores, d, (masks[m][:, None] >> bits) & 1)
+        best = scores.argmax(axis=1)
+        best[scores.max(axis=1) == 0] = len(langs)
+        out = np.full(len(th), None, dtype=object)
+        out[valid] = labels[best]
+        return pa.array(out, type=pa.string())
+
+    return F.arrow_udf(label, "string")(_token_hashes(c))
 
 
 def content_fingerprint(c: ColumnOrName) -> Column:

@@ -5493,7 +5493,10 @@ def vacuum_table(
                     except OSError:
                         continue  # claimed/removed underneath us
                 if not dry_run:
-                    os.unlink(full)
+                    try:
+                        os.unlink(full)
+                    except FileNotFoundError:
+                        continue  # a racing vacuum reclaimed it first
                 deleted.append(rel)
     if not dry_run:
         # debris pass: Hadoop checksum siblings whose payload file is

@@ -1,11 +1,23 @@
 """Parquet table loader with timestamp-unit normalization.
 
 Spark rejects parquet TIMESTAMP(NANOS) columns outright
-(PARQUET_TYPE_ILLEGAL). The testdata `events.ts` is timestamp[ns], so
-we read nanos as raw INT64 (``spark.sql.legacy.parquet.nanosAsLong``)
-and truncate to microseconds with integer division — byte-identical
-to how DuckDB/Arrow truncate ns → µs, which keeps the oracle
-comparison exact.
+(PARQUET_TYPE_ILLEGAL), and pandas/Arrow write timestamp[ns] by
+default, so such columns are read as raw INT64 and truncated to microseconds
+with integer division — byte-identical to how DuckDB/Arrow truncate
+ns → µs, which keeps the oracle comparison exact.
+
+The Spark schema is built from the parquet footer that pyarrow reads
+(memoized per path, size and mtime) and handed to the reader, so a load
+starts no Spark job: schema inference would cost one job per call. The
+footer's arrow types go through PySpark's own Arrow conversion, which
+maps them the way Spark's parquet inference does under the session
+invariants ``get_spark`` sets: naive and UTC timestamps read as
+``TimestampType`` (instants, not NTZ), decimals keep precision and
+scale, and every field is nullable (Spark reads files as nullable);
+nanosecond columns read as ``LongType`` before the micros projection.
+A footer that cannot be read locally (a directory dataset, a remote
+path) or holds a type that conversion does not map leaves inference to
+Spark.
 
 Scale note: the conversion is a codegen'd projection on the scan (no
 shuffle, no UDF); predicate pushdown on other columns is unaffected.
@@ -13,42 +25,82 @@ shuffle, no UDF); predicate pushdown on other columns is unaffected.
 
 from __future__ import annotations
 
+import os
+import weakref
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
+
+# (path, size, mtime_ns) -> (Spark schema, or None when Spark infers
+# it; nanosecond columns)
+_FOOTER_SCHEMAS: dict[tuple[str, int, int], tuple[T.StructType | None, list[str]]] = {}
+_PINNED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
-def _nanos_columns(path: str) -> list[str]:
+def _schema_from_footer(path: str) -> tuple[T.StructType | None, list[str]]:
     try:
-        schema = pq.read_schema(path)
-    except Exception:  # noqa: BLE001 — directory datasets etc.; let Spark handle
-        return []
-    return [
+        arrow = pq.read_schema(path)
+    except Exception:  # noqa: BLE001 — directory datasets etc.; let Spark infer
+        return None, []
+    ns_cols = [
         f.name
-        for f in schema
+        for f in arrow
         if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
     ]
+    others = [f for f in arrow if f.name not in ns_cols]
+    if any("[ns" in str(f.type) for f in others):  # nested nanoseconds
+        return None, ns_cols
+    try:
+        types = {f.name: from_arrow_type(f.type) for f in others}
+    except TypeError:  # unsigned integers etc.
+        return None, ns_cols
+    return T.StructType([
+        T.StructField(f.name, types.get(f.name, T.LongType())) for f in arrow
+    ]), ns_cols
+
+
+def _footer_schema(path: str) -> tuple[T.StructType | None, list[str]]:
+    """(Spark read schema, nanosecond columns) from the parquet footer,
+    memoized per (path, size, mtime_ns); the schema is None when the
+    footer cannot be read or holds a type PySpark's Arrow conversion
+    does not map (unsigned integers, nested nanosecond timestamps)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None, []
+    key = (path, st.st_size, st.st_mtime_ns)
+    if key not in _FOOTER_SCHEMAS:
+        _FOOTER_SCHEMAS[key] = _schema_from_footer(path)
+    return _FOOTER_SCHEMAS[key]
+
+
+def _pin_session(spark: SparkSession) -> None:
+    """The engine's read invariants, once per session: ``get_spark``
+    sets them at build time, this covers sessions built elsewhere (a
+    plain ``SparkSession.builder.getOrCreate()``). All date/time semantics are UTC
+    (the reference's Exasol DWH was implicitly UTC), naive parquet
+    timestamps are instants read as epoch-UTC micros — exactly how
+    DuckDB's epoch_us sees the same bytes — and inferred nanosecond
+    columns read as longs."""
+    if spark in _PINNED:
+        return
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _PINNED.add(spark)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read ``{sf_dir}/{name}.parquet`` with ns-timestamp handling."""
     path = f"{sf_dir}/{name}.parquet"
-    # Engine invariant: all date/time semantics are UTC (the reference's
-    # Exasol DWH was implicitly UTC). Pin it even when the caller's
-    # session was built elsewhere, else to_date/date_format drift.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ns_cols = _nanos_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Arrow-written parquet stores naive timestamps (isAdjustedToUTC=false),
-    # which Spark ≥3.4 infers as TIMESTAMP_NTZ by default. The engine's
-    # contract is instant (LTZ) semantics in a UTC session — disabling the
-    # inference reads the stored micros as epoch-UTC micros directly, which
-    # is exactly how DuckDB's epoch_us sees the same bytes, keeping the
-    # oracle comparison exact. Runtime conf: applies per-read, no restart.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(path)
+    _pin_session(spark)
+    schema, ns_cols = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
     return df

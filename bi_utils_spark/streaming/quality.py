@@ -3,7 +3,7 @@ ingest (SURVEY.md §2.12 extension; the streaming face of
 operators/textstats.py).
 
 A crawl/landing stream should be gated BEFORE it hits the lake: score
-each arriving document with the same codegen expressions the batch
+each arriving document with the same column expressions the batch
 pipeline uses (quality heuristics, language ID, token counts) and
 route it by threshold. Because every signal here is a stateless
 map-only projection, the gate adds ZERO streaming state — no

@@ -235,6 +235,77 @@ def test_language_id_heuristic(spark):
     assert got == ["en", "de", "es", "und"]
 
 
+def _language_id_columns(c, default="und"):
+    """The former pure-Column language_id (21 array intersections plus
+    a struct argmax), kept as the oracle for the Arrow kernel."""
+    from bi_utils_spark.functions.litarrays import lit_string_array
+
+    toks = F.array_distinct(T.tokens(c))
+    langs = sorted(T.LANG_MARKERS)
+    best = F.array_max(F.array(*[
+        F.struct(
+            F.size(F.array_intersect(toks, lit_string_array(T.LANG_MARKERS[lang]))).alias("s"),
+            F.lit(-i).alias("r"),
+            F.lit(lang).alias("lang"),
+        )
+        for i, lang in enumerate(langs)
+    ]))
+    return F.when(best.getField("s") <= 0, F.lit(default)).otherwise(best.getField("lang"))
+
+
+def test_language_id_matches_column_oracle(spark, docs):
+    texts = [
+        "",
+        "   \t ",
+        "xyzzy plugh",                       # no hits
+        "the und",                           # en/de tie -> de (code order)
+        "og jeg",                            # da/no tie -> da
+        "für über und",                      # non-ASCII de markers
+        "è più il",                          # non-ASCII it markers
+        "más el que para",                   # non-ASCII es markers
+        "THE The the cat",                   # case folds, one distinct hit
+        "the the the der",                   # repeats count once
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    for default in ("und", "zz"):
+        rows = df.select(
+            T.language_id("text", default).alias("a"),
+            _language_id_columns("text", default).alias("b"),
+        ).collect()
+        assert [r["a"] for r in rows] == [r["b"] for r in rows]
+    got = [r[0] for r in df.select(T.language_id("text", "zz")).collect()]
+    assert got[:8] == ["zz", "zz", "zz", "de", "da", "de", "it", "es"]
+    # NULL text has no language (the Column form labelled it "ar", the
+    # first code, because its argmax ran over NULL scores)
+    null = spark.createDataFrame([(None,)], "text string")
+    assert null.select(T.language_id("text")).first()[0] is None
+    diff = docs.where(~T.language_id("text").eqNullSafe(_language_id_columns("text")))
+    assert diff.count() == 0
+
+
+def test_language_id_on_a_stream(spark, tmp_path):
+    import json
+    import os
+
+    from bi_utils_spark.streaming.quality import attach_quality_signals
+
+    src = str(tmp_path / "lsrc")
+    os.makedirs(src)
+    texts = {1: "der hund ist nicht da", 2: "el perro es que", 3: "xyzzy"}
+    with open(os.path.join(src, "b1.json"), "w") as f:
+        for i, t in texts.items():
+            f.write(json.dumps({"doc_id": i, "text": t}) + "\n")
+    stream = spark.readStream.schema("doc_id LONG, text STRING").json(src)
+    q = (
+        attach_quality_signals(stream).writeStream.format("memory")
+        .queryName("lang_stream_out").outputMode("append")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(60)
+    got = {r["doc_id"]: r["lang"] for r in spark.sql("SELECT * FROM lang_stream_out").collect()}
+    assert got == {1: "de", 2: "es", 3: "und"}
+
+
 def test_quality_score_range(docs):
     scores = docs.select(T.quality_score("text").alias("q")).agg(
         F.min("q"), F.max("q")

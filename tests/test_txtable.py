@@ -183,6 +183,28 @@ def test_vacuum_drops_only_unretained(spark, table):
     assert 7 in _as_dict(tx.read_table(spark, table, version=1))
 
 
+def test_vacuum_tolerates_a_racing_vacuum(spark, table, monkeypatch):
+    """Two vacuums racing over one table: a file the other vacuum
+    reclaimed between this one's listing and its unlink is skipped,
+    not raised as FileNotFoundError into the caller."""
+    tx.overwrite_table(_rows(spark, (7, "Z", 70)), table)  # v1
+    tx.append_table(_rows(spark, (8, "Z", 80)), table)  # v2
+    real_unlink = os.unlink
+    raced = []
+
+    def unlink(p, *a, **kw):
+        if p.endswith(".parquet") and not raced:
+            raced.append(p)
+            real_unlink(p)  # the other vacuum wins the race
+        return real_unlink(p, *a, **kw)
+
+    monkeypatch.setattr(tx.os, "unlink", unlink)
+    deleted = tx.vacuum_table(table, retain_versions=2)
+    assert raced and not os.path.exists(raced[0])
+    assert os.path.relpath(raced[0], table) not in deleted
+    assert _as_dict(tx.read_table(spark, table)) == {7: ("Z", 70), 8: ("Z", 80)}
+
+
 def test_vacuum_retain_all_deletes_nothing(spark, table):
     tx.overwrite_table(_rows(spark, (7, "Z", 70)), table)
     assert tx.vacuum_table(table, retain_versions=10) == []
