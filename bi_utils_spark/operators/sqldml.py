@@ -13,9 +13,12 @@ underneath.
 
 Design choices, deliberately:
 
-- **Parse, don't reimplement.** The front-end extracts the statement
-  SHAPE (which table, which predicate, which set-clauses) and hands
-  every expression string to the verbs unchanged — Catalyst parses
+- **Parse, don't reimplement.** Spark's own parser reads every
+  statement its grammar covers (``parsePlan``); the front-end
+  dispatches on the class of the plan it returns and takes the
+  statement SHAPE (which table, which predicate, which set-clauses)
+  from that plan. Every expression and sub-query goes to the verbs as
+  the exact text slice at its node's offsets — Catalyst parses
   predicates and set expressions (`F.expr`), and DML execution is the
   verbs' already-tested copy-on-write / merge-on-read machinery. No
   second SQL engine, no drift between the string path and the
@@ -26,16 +29,20 @@ Design choices, deliberately:
   plus flagged deletes. The shapes below map onto that 1:1. A MERGE
   whose clauses mean something ELSE (partial-column updates,
   conditional inserts) gets a loud error naming the programmatic
-  verb to use instead — never a silently-different semantic.
-- **String-literal safety.** Statements are scanned with literals
-  masked, so a WHERE value like ``'DELETE FROM x'`` never confuses
-  the dispatcher, and time-travel rewriting never touches quoted
-  text.
+  verb to use instead — never a silently-different semantic. A
+  statement Spark cannot parse raises with the statement kind's guide
+  plus Spark's own message (line and position).
+- **String-literal safety.** Quoting, comments and ``;`` come from
+  Spark's lexer and table references from Spark's parse, so a WHERE
+  value like ``'DELETE FROM x'`` or ``"t VERSION AS OF 0"`` never
+  confuses the dispatcher, a ``--`` inside a literal is not a comment,
+  and time-travel rewriting touches only the offsets Spark reports
+  for a table reference.
 
 Supported statements (keywords case-insensitive; one statement per
 call):
 
-- ``SELECT ...`` — any Spark SELECT; each mapped table binds to a
+- ``SELECT ...`` — any Spark query; each mapped table binds to a
   snapshot temp view NAMED LIKE the table (so qualified references,
   self-joins, and same-named columns/aliases resolve by Spark's own
   rules; the view shadows a same-named session temp view for the
@@ -74,19 +81,25 @@ call):
   otherwise). Each dispatches to the corresponding txtable verb —
   the metadata-time ALTERs stay metadata-time.
 
-Scale: identical to the verbs — the front-end adds only driver-side
-string work; plans, pruning, and commit protocol are untouched.
+``OPTIMIZE``, ``VACUUM``, ``RESTORE`` and ``DESCRIBE HISTORY`` are not
+Spark grammar; they are matched by their head token and a small regex
+over the comment-free statement.
+
+Scale: identical to the verbs — the front-end adds one parse and a
+few driver-side plan walks; plans, pruning, and commit protocol are
+untouched.
 """
 
 from __future__ import annotations
 
+import json
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from bi_utils_spark.operators import txtable as tx
-
-_IDENT = r"[A-Za-z_][A-Za-z0-9_.]*"
 
 
 class SqlDmlError(ValueError):
@@ -94,90 +107,113 @@ class SqlDmlError(ValueError):
 
 
 # ---------------------------------------------------------------------------
-# literal masking + top-level splitting
+# Spark's lexer and parse
 # ---------------------------------------------------------------------------
 
 
-def _strip_comments(sql: str) -> str:
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":  # string literal: copy verbatim ('' escapes)
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                elif sql[j] == "'":
-                    break
-                else:
-                    j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-        elif sql.startswith("--", i):
-            while i < n and sql[i] != "\n":
-                i += 1
-        elif sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            i = n if j < 0 else j + 2
-            out.append(" ")
+def _seq(jseq) -> list:
+    """A Scala Seq as a Python list."""
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _tokens(text: str):
+    """Spark's own lexer over ``text`` as a filled token stream.
+    Whitespace and comments sit on the hidden channel, each quoted
+    literal or identifier is one token, and ``;`` has its own type."""
+    jvm = SparkSession.active()._jvm
+    p = jvm.org.apache.spark.sql.catalyst.parser
+    lexer = p.SqlBaseLexer(
+        p.UpperCaseCharStream(jvm.org.antlr.v4.runtime.CharStreams.fromString(text))
+    )
+    stream = jvm.org.antlr.v4.runtime.CommonTokenStream(lexer)
+    stream.fill()
+    return stream
+
+
+def _marks(stream) -> list[tuple[int, int, bool]]:
+    """(start, stop, is_semicolon) of every ``;`` and comment token."""
+    lex = SparkSession.active()._jvm.org.apache.spark.sql.catalyst.parser.SqlBaseLexer
+    semi = lex.SEMICOLON
+    toks = stream.getTokens(
+        0, stream.size() - 1, {semi, lex.SIMPLE_COMMENT, lex.BRACKETED_COMMENT}
+    )
+    return [
+        (t.getStartIndex(), t.getStopIndex(), t.getType() == semi)
+        for t in (toks or [])
+    ]
+
+
+def _span(node) -> tuple[int, int] | None:
+    """Offsets (inclusive) Spark's parser recorded for ``node``."""
+    o = node.origin()
+    start = o.startIndex()
+    if start.isEmpty():
+        return None
+    return start.get(), o.stopIndex().get()
+
+
+def _text(sql: str, node) -> str | None:
+    span = _span(node)
+    return sql[span[0] : span[1] + 1] if span else None
+
+
+def _opt_text(sql: str, opt) -> str | None:
+    return _text(sql, opt.get()) if opt.isDefined() else None
+
+
+def _name(node) -> str:
+    """Dotted name of a parsed table reference (quotes already gone)."""
+    parts = (
+        node.nameParts()
+        if node.nodeName() == "UnresolvedIdentifier"
+        else node.multipartIdentifier()
+    )
+    return ".".join(_seq(parts))
+
+
+def _unalias(node):
+    """(relation or query, alias or None). A MERGE ``SubqueryAlias``
+    spans the whole statement, so callers read its child's span."""
+    if node.nodeName() == "SubqueryAlias":
+        return node.child(), node.alias()
+    return node, None
+
+
+def _walk(plan):
+    """Table references of a parsed query — its ``UnresolvedRelation``
+    and ``RelationTimeTravel`` nodes, through sub-queries and CTE
+    bodies — and the text extent its nodes cover. A query's own node
+    can span only its ORDER BY / LIMIT clause, so the extent is the
+    union of every node's span."""
+    refs, lo, hi = [], None, None
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.nodeName()
+        span = _span(node)
+        if span:
+            lo = span[0] if lo is None else min(lo, span[0])
+            hi = span[1] if hi is None else max(hi, span[1])
+        if kind in ("UnresolvedRelation", "RelationTimeTravel"):
+            refs.append((kind, node))
         else:
-            out.append(c)
-            i += 1
-    return "".join(out)
-
-
-def _mask_literals(sql: str) -> tuple[str, list[str]]:
-    """Replace string literals with \x00<idx>\x00 placeholders so
-    keyword scans never match quoted text."""
-    lits: list[str] = []
-
-    def repl(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    return re.sub(r"'(?:[^']|'')*'", repl, sql), lits
-
-
-def _unmask(s: str, lits: list[str]) -> str:
-    return re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], s)
-
-
-def _split_top(s: str, sep: str) -> list[str]:
-    """Split on ``sep`` at paren depth 0 (literals already masked)."""
-    parts, depth, start = [], 0, 0
-    for i, c in enumerate(s):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == sep and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return parts
+            stack += _seq(node.children()) + _seq(node.innerChildren())
+    return refs, lo, hi
 
 
 # ---------------------------------------------------------------------------
 # time-travel binding for reads
 # ---------------------------------------------------------------------------
 
-# an AS OF-suffixed reference (the suffix is not Spark syntax, so
-# these MUST rewrite); the lookbehind keeps `x.tbl` (tbl as a column
-# of x) untouched while `tbl.x` (tbl as a qualifier) still matches
-_ASOF = (
-    r"(?<![\w.])(?P<name>{n})\b"
-    r"(?:\s+VERSION\s+AS\s+OF\s+(?P<v>\d+)"
-    r"|\s+TIMESTAMP\s+AS\s+OF\s+(?P<ts>\x00\d+\x00))"
-)
-_PLAIN = r"(?<![\w.]){n}\b"
 
-
-def _bind_reads(
-    spark: SparkSession, masked: str, lits: list[str],
-    tables: dict[str, str],
-) -> tuple[str, list[str]]:
-    """Bind every mapped table reference to a snapshot temp view;
-    return (rewritten masked SQL, created view names for cleanup).
+def _query(
+    spark: SparkSession, sql: str, plan, tables: dict[str, str],
+    lo: int | None = None, to_end: bool = False,
+) -> DataFrame:
+    """Run the query ``plan`` parsed from ``sql`` with every mapped
+    table bound to a snapshot temp view. Its text starts at ``lo``
+    (default: where its nodes start) and ends where its nodes end, or
+    at the end of ``sql`` with ``to_end``.
 
     Plain references bind a temp view NAMED EXACTLY like the table
     and the SQL text is left untouched — so table-qualified column
@@ -188,11 +224,19 @@ def _bind_reads(
     same-named session temp view for the statement's duration — by
     contract the mapping says what the name means here — and is
     dropped after analysis. AS OF references rewrite to one
-    namespaced view per (table, version) since the suffix isn't
-    Spark syntax; dotted table names (not legal temp-view names)
-    fall back to one stable substitute view for ALL plain
-    occurrences, so qualifiers keep resolving consistently."""
+    namespaced view per (table, version) since Spark cannot time
+    travel a temp view; dotted table names (not legal temp-view
+    names) rewrite to one stable substitute view for ALL plain
+    references. Rewrites happen only at the offsets Spark reports for
+    a table reference, so quoted text is never touched."""
+    refs, first, last = _walk(plan)
+    lo = first if lo is None else lo
+    hi = len(sql) if to_end else last + 1
+    mapped = {k.lower(): k for k in tables}
     views: list[str] = []
+    plain: dict[str, None] = {}
+    subst: dict[tuple, str] = {}
+    edits = []
 
     def bind(path: str, view: str, version=None, ts=None) -> str:
         df = tx.read_table(spark, path, version=version, timestamp=ts)
@@ -200,60 +244,52 @@ def _bind_reads(
         views.append(view)
         return view
 
-    for name, path in tables.items():
-        safe = re.sub(r"\W", "_", name)
-        asof_seen: dict[tuple, str] = {}
-
-        def repl(m: re.Match) -> str:
-            version = int(m.group("v")) if m.group("v") else None
-            ts = m.group("ts")
-            ts_val = _unmask(ts, lits).strip("'") if ts else None
-            key = (version, ts_val)
-            if key not in asof_seen:
-                asof_seen[key] = bind(
-                    path,
-                    f"__tx_sql_{safe}_{len(views)}",
-                    version=version,
-                    ts=ts_val,
-                )
-            return asof_seen[key]
-
-        masked = re.sub(
-            _ASOF.format(n=re.escape(name)), repl, masked,
-            flags=re.IGNORECASE,
-        )
-        plain = _PLAIN.format(n=re.escape(name))
-        if re.search(plain, masked, flags=re.IGNORECASE):
-            if "." in name:
-                view = bind(path, f"__tx_sql_{safe}_{len(views)}")
-                masked = re.sub(
-                    plain, view, masked, flags=re.IGNORECASE
-                )
-            else:
-                bind(path, name)
-    return masked, views
-
-
-def _drop_views(spark: SparkSession, views: list[str]) -> None:
-    """Drop statement-scoped temp views — safe after ``spark.sql``
-    because analysis is eager: the returned DataFrame's plan is
-    already resolved and no longer needs the catalog entry."""
-    for v in views:
-        try:
-            spark.catalog.dropTempView(v)
-        except Exception:  # noqa: BLE001 — cleanup is best-effort
-            pass
-
-
-def _run_select(
-    spark: SparkSession, masked: str, lits: list[str],
-    tables: dict[str, str],
-) -> DataFrame:
-    bound, views = _bind_reads(spark, masked, lits, tables)
     try:
-        return spark.sql(_unmask(bound, lits))
+        for kind, node in refs:
+            rel = node.relation() if kind == "RelationTimeTravel" else node
+            name = mapped.get(_name(rel).lower())
+            if name is None:
+                continue
+            if kind == "UnresolvedRelation" and "." not in name:
+                plain[name] = None
+                continue
+            key = (
+                (name, None, None) if kind == "UnresolvedRelation"
+                else (name, *_as_of(sql, node))
+            )
+            if key not in subst:
+                safe = "".join(c if c.isalnum() else "_" for c in name)
+                subst[key] = bind(
+                    tables[name], f"__tx_sql_{safe}_{len(views)}", *key[1:]
+                )
+            edits.append((_span(rel)[0], _span(node)[1], subst[key]))
+        for name in plain:
+            bind(tables[name], name)
+        text = sql[lo:hi]
+        for start, stop, view in sorted(edits, reverse=True):
+            text = text[: start - lo] + view + text[stop + 1 - lo :]
+        return spark.sql(text)
     finally:
-        _drop_views(spark, views)
+        # statement-scoped views: analysis is eager, so the returned
+        # DataFrame's plan is resolved and no longer needs them
+        for v in views:
+            try:
+                spark.catalog.dropTempView(v)
+            except Exception:  # noqa: BLE001 — cleanup is best-effort
+                pass
+
+
+def _as_of(sql: str, node) -> tuple[int | None, str | None]:
+    """(version, timestamp) of a ``RelationTimeTravel`` node."""
+    version, ts = node.version(), node.timestamp()
+    if version.isDefined():
+        return int(version.get()), None
+    ts_sql = _text(sql, ts.get())
+    if ts_sql[0] not in "'\"":
+        raise SqlDmlError(
+            f"tx_sql: TIMESTAMP AS OF takes a quoted timestamp, got {ts_sql!r}"
+        )
+    return None, ts_sql[1:-1]
 
 
 # ---------------------------------------------------------------------------
@@ -261,10 +297,10 @@ def _run_select(
 # ---------------------------------------------------------------------------
 
 
-def _resolve(tables: dict[str, str], name: str, stmt: str) -> str:
+def _resolve(tables: dict[str, str], name: str, kind: str) -> str:
     if name not in tables:
         raise SqlDmlError(
-            f"tx_sql: table {name!r} in {stmt.split()[0]} statement is "
+            f"tx_sql: table {name!r} in {kind} statement is "
             f"not in the tables mapping (have {sorted(tables)}). Pass "
             f"tables={{name: table_path}} for every tx table the "
             f"statement touches."
@@ -272,39 +308,43 @@ def _resolve(tables: dict[str, str], name: str, stmt: str) -> str:
     return tables[name]
 
 
-def _source_df(
-    spark: SparkSession, src: str, lits: list[str],
-    tables: dict[str, str],
-) -> DataFrame:
-    src = src.strip()
-    if src.startswith("("):
-        return _run_select(spark, src[1:-1], lits, tables)
-    if src in tables:
-        return tx.read_table(spark, tables[src])
-    return spark.sql(f"SELECT * FROM {src}")
-
-
-def _positional_align(df: DataFrame, cols: list[str]) -> DataFrame:
-    if len(df.columns) != len(cols):
+def _target(tables: dict[str, str], node, kind: str) -> str:
+    """Path of an UPDATE / DELETE target; the verbs read predicates
+    over the bare table, so an alias would not resolve."""
+    if node.nodeName() == "SubqueryAlias":
         raise SqlDmlError(
-            f"tx_sql INSERT: source has {len(df.columns)} columns, "
-            f"target expects {len(cols)} ({cols})"
+            f"tx_sql {kind}: a target table alias is not supported — "
+            f"write the predicate over unqualified column names"
         )
-    return df.toDF(*cols)
+    return _resolve(tables, _name(node), kind)
 
 
-def _do_insert(spark, masked, lits, tables, m) -> dict:
-    name, overwrite = m.group("tbl"), m.group(1).upper() == "OVERWRITE"
-    path = _resolve(tables, name, "INSERT")
-    rest = masked[m.end():].strip()
-    cols_m = re.match(r"\(\s*(" + _IDENT + r"(?:\s*,\s*" + _IDENT + r")*)\s*\)\s*",
-                      rest)
-    explicit_cols = None
-    if cols_m and not rest[: cols_m.end()].upper().lstrip("( ").startswith(
-        "SELECT"
-    ):
-        explicit_cols = [c.strip() for c in cols_m.group(1).split(",")]
-        rest = rest[cols_m.end():].strip()
+def _assignments(sql: str, assignments, alias: str) -> dict[str, str]:
+    """{column: expression text} of SET / INSERT assignments; a
+    qualifier must name the target."""
+    sets: dict[str, str] = {}
+    for a in _seq(assignments):
+        *qual, col = _seq(a.key().nameParts())
+        if qual and ".".join(qual) != alias:
+            raise SqlDmlError(
+                f"tx_sql: SET target {'.'.join([*qual, col])!r} is not a "
+                f"column name of the target {alias!r}"
+            )
+        if col in sets:
+            raise SqlDmlError(f"tx_sql: column {col!r} SET twice.")
+        sets[col] = _text(sql, a.value())
+    return sets
+
+
+def _do_insert(spark, sql, plan, tables) -> dict:
+    path = _resolve(tables, _name(plan.table()), "INSERT")
+    overwrite = plan.overwrite()
+    if not plan.partitionSpec().isEmpty() or plan.byName():
+        raise SqlDmlError(
+            "tx_sql INSERT: PARTITION (...) and BY NAME are not "
+            "supported — list the columns: INSERT INTO t (cols) ..."
+        )
+    explicit_cols = _seq(plan.userSpecifiedCols()) or None
     from pyspark.sql import functions as F
 
     schema = tx._fold(path).spark_schema()
@@ -317,17 +357,17 @@ def _do_insert(spark, masked, lits, tables, m) -> dict:
             f"tx_sql INSERT: column(s) {unknown} not in table schema "
             f"({snap_cols})"
         )
-    up = rest.upper()
-    if up.startswith("VALUES"):
-        df = spark.sql(f"SELECT * FROM ( {_unmask(rest, lits)} )")
-    elif up.startswith("SELECT") or up.startswith("("):
-        df = _run_select(spark, rest, lits, tables)
-    else:
+    # the statement's own span covers INSERT ... <table> [(cols)]; the
+    # query (VALUES or SELECT) is the rest of the text
+    df = _query(
+        spark, sql, plan.query(), tables, lo=_span(plan)[1] + 1, to_end=True
+    )
+    if len(df.columns) != len(target_cols):
         raise SqlDmlError(
-            "tx_sql INSERT: expected VALUES (...) or SELECT ... after "
-            f"the target, got: {rest[:60]!r}"
+            f"tx_sql INSERT: source has {len(df.columns)} columns, "
+            f"target expects {len(target_cols)} ({target_cols})"
         )
-    df = _positional_align(df, target_cols)
+    df = df.toDF(*target_cols)
     # SQL INSERT semantics: positional assignment casts to the target
     # column types; unlisted columns fill with NULL.
     out = df.select(
@@ -348,33 +388,18 @@ def _do_insert(spark, masked, lits, tables, m) -> dict:
     return {"op": "insert", "version": tx.append_table(out, path)}
 
 
-def _do_delete(spark, masked, lits, tables, m, mode) -> dict:
-    path = _resolve(tables, m.group("tbl"), "DELETE")
-    cond = m.group("cond")
-    cond_sql = _unmask(cond, lits).strip() if cond else "true"
+def _do_delete(spark, sql, plan, tables, mode) -> dict:
+    path = _target(tables, plan.table(), "DELETE")
+    # no WHERE parses as an unplaced literal true
+    cond_sql = _text(sql, plan.condition()) or "true"
     res = tx.delete_from_table(spark, path, cond_sql, mode=mode)
     return {"op": "delete", **res}
 
 
-def _do_update(spark, masked, lits, tables, m, mode) -> dict:
-    path = _resolve(tables, m.group("tbl"), "UPDATE")
-    sets_raw = m.group("sets")
-    cond = m.group("cond")
-    sets: dict[str, str] = {}
-    for part in _split_top(sets_raw, ","):
-        eq = part.find("=")
-        if eq < 0:
-            raise SqlDmlError(
-                f"tx_sql UPDATE: malformed SET clause {part.strip()!r} "
-                f"(expected col = expr)"
-            )
-        col = part[:eq].strip()
-        if not re.fullmatch(_IDENT, col):
-            raise SqlDmlError(
-                f"tx_sql UPDATE: {col!r} is not a column name"
-            )
-        sets[col] = _unmask(part[eq + 1 :], lits).strip()
-    cond_sql = _unmask(cond, lits).strip() if cond else "true"
+def _do_update(spark, sql, plan, tables, mode) -> dict:
+    path = _target(tables, plan.table(), "UPDATE")
+    sets = _assignments(sql, plan.assignments(), _name(plan.table()))
+    cond_sql = _opt_text(sql, plan.condition()) or "true"
     res = tx.update_table(spark, path, cond_sql, sets, mode=mode)
     return {"op": "update", **res}
 
@@ -393,129 +418,146 @@ _MERGE_GUIDE = (
 )
 
 
-def _parse_merge_clauses(clauses_raw: str) -> dict:
-    """Extract the WHEN clauses into at most one of each kind:
-    ``upd`` {cond, sets ('*' or {col: masked expr})}, ``ins`` {cond},
-    ``mdel`` {cond}, ``nmbs`` {cond}. Conditions stay MASKED."""
+def _merge_clauses(sql: str, plan, t_alias: str) -> dict:
+    """The WHEN clauses as at most one of each kind: ``upd`` {cond,
+    sets ('*' or {col: expr})}, ``ins`` {cond, vals (None for ``*`` or
+    {col: expr})}, ``mdel`` {cond}, ``nmbs`` {cond}; conditions and
+    expressions are text. Spark's grammar already limits MATCHED to
+    UPDATE / DELETE, NOT MATCHED to INSERT, and refuses a MERGE
+    without clauses."""
     out: dict[str, dict] = {}
 
-    def put(kind: str, val: dict, cl: str) -> None:
+    def put(kind: str, label: str, val: dict) -> None:
         if kind in out:
             raise SqlDmlError(
-                f"tx_sql MERGE: duplicate clause kind at {cl!r} — at "
+                f"tx_sql MERGE: duplicate clause kind {label!r} — at "
                 f"most one of each WHEN form. " + _MERGE_GUIDE
             )
         out[kind] = val
 
-    for cl in re.split(r"(?=\bWHEN\b)", clauses_raw, flags=re.IGNORECASE):
-        cl = cl.strip()
-        if not cl:
-            continue
-        hm = re.fullmatch(
-            r"WHEN\s+(?P<not>NOT\s+)?MATCHED"
-            r"(?P<bysrc>\s+BY\s+SOURCE)?(?:\s+BY\s+TARGET)?"
-            r"(?:\s+AND\s+(?P<cond>.+?))?"
-            r"\s+THEN\s+(?P<action>.+)",
-            cl,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not hm:
-            raise SqlDmlError(
-                f"tx_sql MERGE: unsupported clause {cl!r}. "
-                + _MERGE_GUIDE
-            )
-        is_not = bool(hm.group("not"))
-        by_src = bool(hm.group("bysrc"))
-        cond = hm.group("cond")
-        action = hm.group("action").strip()
-        a_up = action.upper()
-        if by_src and not is_not:
-            raise SqlDmlError(
-                f"tx_sql MERGE: {cl!r} — MATCHED BY SOURCE is not a "
-                f"SQL clause (did you mean NOT MATCHED BY SOURCE?). "
-                + _MERGE_GUIDE
-            )
-        if is_not and by_src:
-            if a_up != "DELETE":
-                raise SqlDmlError(
-                    "tx_sql MERGE: WHEN NOT MATCHED BY SOURCE supports "
-                    "THEN DELETE only (an UPDATE of untouched target "
-                    "rows is update_table's job). " + _MERGE_GUIDE
-                )
-            put("nmbs", {"cond": cond}, cl)
-        elif is_not:
-            if a_up == "INSERT *":
-                put("ins", {"cond": cond, "cols": None, "vals": None}, cl)
-                continue
-            im = re.fullmatch(
-                r"INSERT\s*\((?P<cols>[^)]*)\)\s*VALUES\s*"
-                r"\((?P<vals>.+)\)",
-                action,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if not im:
-                raise SqlDmlError(
-                    f"tx_sql MERGE: WHEN NOT MATCHED supports THEN "
-                    f"INSERT * or INSERT (cols) VALUES (exprs), got "
-                    f"{action!r}. " + _MERGE_GUIDE
-                )
-            cols = [c.strip() for c in im.group("cols").split(",")]
-            vals = [v.strip() for v in _split_top(im.group("vals"), ",")]
-            if len(cols) != len(vals):
-                raise SqlDmlError(
-                    f"tx_sql MERGE: INSERT lists {len(cols)} columns "
-                    f"but {len(vals)} values."
-                )
-            put("ins", {"cond": cond, "cols": cols, "vals": vals}, cl)
-        elif a_up == "DELETE":
-            put("mdel", {"cond": cond}, cl)
-        elif a_up.startswith("UPDATE"):
-            sm = re.fullmatch(
-                r"UPDATE\s+SET\s+(?P<sets>.+)", action,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if not sm:
-                raise SqlDmlError(
-                    f"tx_sql MERGE: malformed UPDATE action "
-                    f"{action!r}. " + _MERGE_GUIDE
-                )
-            sets_raw = sm.group("sets").strip()
-            if sets_raw == "*":
-                put("upd", {"cond": cond, "sets": "*"}, cl)
-            else:
-                sets: dict[str, str] = {}
-                for part in _split_top(sets_raw, ","):
-                    eq = part.find("=")
-                    col = part[:eq].strip() if eq > 0 else ""
-                    col = re.sub(
-                        r"^" + _IDENT + r"\.", "", col
-                    )  # t.c = ... targets column c
-                    if eq < 0 or not re.fullmatch(_IDENT, col):
-                        raise SqlDmlError(
-                            f"tx_sql MERGE: malformed SET clause "
-                            f"{part.strip()!r} (expected col = expr). "
-                            + _MERGE_GUIDE
-                        )
-                    if col in sets:
-                        raise SqlDmlError(
-                            f"tx_sql MERGE: column {col!r} SET twice."
-                        )
-                    sets[col] = part[eq + 1 :].strip()
-                put("upd", {"cond": cond, "sets": sets}, cl)
+    for act in _seq(plan.matchedActions()):
+        kind, cond = act.nodeName(), _opt_text(sql, act.condition())
+        if kind == "DeleteAction":
+            put("mdel", "WHEN MATCHED THEN DELETE", {"cond": cond})
         else:
-            raise SqlDmlError(
-                f"tx_sql MERGE: unsupported action {action!r}. "
-                + _MERGE_GUIDE
+            sets = (
+                "*" if kind == "UpdateStarAction"
+                else _assignments(sql, act.assignments(), t_alias)
             )
-    if not out:
-        raise SqlDmlError(
-            "tx_sql MERGE: at least one WHEN clause is required. "
-            + _MERGE_GUIDE
+            put("upd", "WHEN MATCHED THEN UPDATE", {"cond": cond, "sets": sets})
+    for act in _seq(plan.notMatchedActions()):
+        vals = (
+            None if act.nodeName() == "InsertStarAction"
+            else _assignments(sql, act.assignments(), t_alias)
+        )
+        put(
+            "ins", "WHEN NOT MATCHED",
+            {"cond": _opt_text(sql, act.condition()), "vals": vals},
+        )
+    for act in _seq(plan.notMatchedBySourceActions()):
+        if act.nodeName() != "DeleteAction":
+            raise SqlDmlError(
+                "tx_sql MERGE: WHEN NOT MATCHED BY SOURCE supports "
+                "THEN DELETE only (an UPDATE of untouched target "
+                "rows is update_table's job). " + _MERGE_GUIDE
+            )
+        put(
+            "nmbs", "WHEN NOT MATCHED BY SOURCE",
+            {"cond": _opt_text(sql, act.condition())},
         )
     return out
 
 
-def _do_merge(spark, masked, lits, tables, m) -> dict:
+def _in_spark_clause_order(sql: str, stream) -> str:
+    """Spark's grammar takes MERGE clauses as MATCHED*, NOT MATCHED*,
+    NOT MATCHED BY SOURCE*, and only the last clause of each group may
+    omit its condition; this front-end takes them in any order (a
+    MATCHED DELETE wins over a MATCHED UPDATE whatever their order).
+    Move the clause texts into Spark's order — conditional clauses
+    first within a group — cutting at each WHEN no CASE encloses.
+    A statement already in that order comes back unchanged."""
+    lex = SparkSession.active()._jvm.org.apache.spark.sql.catalyst.parser.SqlBaseLexer
+    when, case, end = lex.WHEN, lex.CASE, lex.END
+    cuts, depth = [], 0
+    for t in stream.getTokens(0, stream.size() - 1, {when, case, end}) or []:
+        kind = t.getType()
+        if kind == case:
+            depth += 1
+        elif kind == end:  # END is also a legal column name: never below 0
+            depth = max(depth - 1, 0)
+        elif depth == 0:
+            cuts.append(t.getStartIndex())
+    clauses = [sql[a:b] for a, b in zip(cuts, [*cuts[1:], len(sql)])]
+
+    def rank(clause: str) -> tuple[int, bool]:
+        w = [*clause.upper().split()[:6], "", "", "", "", ""]
+        if w[1] == "MATCHED":
+            return 0, w[2].startswith("THEN")
+        if w[3] != "BY":
+            return 1, w[3].startswith("THEN")
+        return (2 if w[4] == "SOURCE" else 1), w[5].startswith("THEN")
+
+    ordered = sorted(clauses, key=rank)
+    if ordered == clauses:
+        return sql
+    # newline-joined, so a trailing -- comment ends with its clause
+    return sql[: cuts[0]] + "\n".join(
+        c.strip().rstrip(";").rstrip() for c in ordered
+    )
+
+
+def _merge_keys(on: str, t_alias: str, s_alias: str | None) -> list[str]:
+    """The pk columns of an ON clause that is a conjunction of
+    alias-qualified equalities, read through Spark's parse."""
+    pks: list[str] = []
+    stack = [tx._expr_tree(on)]
+    while stack:
+        node = stack.pop()
+        if node[:2] == ("call", "and"):
+            stack += reversed(node[2])
+            continue
+        if not (
+            node[:2] == ("call", "=")
+            and all(a[0] == "ident" and len(a[1]) > 1 for a in node[2])
+        ):
+            raise SqlDmlError(
+                f"tx_sql MERGE: ON must be a conjunction of "
+                f"t.col = s.col equalities, got {on!r}. " + _MERGE_GUIDE
+            )
+        (a1, c1), (a2, c2) = [(".".join(a[1][:-1]), a[1][-1]) for a in node[2]]
+        term = f"{a1}.{c1} = {a2}.{c2}"
+        sides = {a1: c1, a2: c2}
+        if t_alias not in sides or (s_alias and s_alias not in sides):
+            raise SqlDmlError(
+                f"tx_sql MERGE: ON term {term!r} does not join "
+                f"the target alias {t_alias!r} to the source. "
+                + _MERGE_GUIDE
+            )
+        if c1 != c2:
+            raise SqlDmlError(
+                f"tx_sql MERGE: pk columns must match by name "
+                f"({c1!r} vs {c2!r}) — merge_tx_table merges on shared "
+                f"pk names. " + _MERGE_GUIDE
+            )
+        pks.append(c1)
+    return pks
+
+
+def _reads_alias(expr: str, alias: str) -> bool:
+    """True when ``expr`` references a column qualified by ``alias``."""
+    qual = alias.split(".")
+    stack = [tx._expr_tree(expr)]
+    while stack:
+        node = stack.pop()
+        if node[0] == "ident":
+            if len(node[1]) > len(qual) and list(node[1][: len(qual)]) == qual:
+                return True
+        elif node[0] == "call":
+            stack.extend(node[2])
+    return False
+
+
+def _do_merge(spark, sql, plan, tables) -> dict:
     """Lower a MERGE statement onto `merge_tx_table` with SQL-standard
     per-row semantics (r11 advice + verdict task 4):
 
@@ -546,50 +588,27 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
     evaluating target-side expressions."""
     from pyspark.sql import functions as F
 
-    path = _resolve(tables, m["tbl"], "MERGE")
-    t_alias = m["talias"] or m["tbl"]
-    s_alias = m["salias"] or (
-        m["src"] if not m["src"].startswith("(") else None
-    )
-    on = m["on"].strip()
+    t_rel, t_alias = _unalias(plan.targetTable())
+    name = _name(t_rel)
+    path = _resolve(tables, name, "MERGE")
+    t_alias = t_alias or name
+    s_node, s_alias = _unalias(plan.sourceTable())
+    s_name = _name(s_node) if s_node.nodeName() == "UnresolvedRelation" else None
+    s_alias = s_alias or s_name
 
-    # --- ON: conjunction of alias-qualified pk equalities
-    pks: list[str] = []
-    for conj in re.split(r"\bAND\b", on, flags=re.IGNORECASE):
-        em = re.fullmatch(
-            r"\s*(" + _IDENT + r")\.(" + _IDENT + r")\s*=\s*("
-            + _IDENT + r")\.(" + _IDENT + r")\s*",
-            conj,
-        )
-        if not em:
-            raise SqlDmlError(
-                f"tx_sql MERGE: ON must be a conjunction of "
-                f"t.col = s.col equalities, got {conj.strip()!r}. "
-                + _MERGE_GUIDE
-            )
-        a1, c1, a2, c2 = em.groups()
-        sides = {a1: c1, a2: c2}
-        if t_alias not in sides or (s_alias and s_alias not in sides):
-            raise SqlDmlError(
-                f"tx_sql MERGE: ON term {conj.strip()!r} does not join "
-                f"the target alias {t_alias!r} to the source. "
-                + _MERGE_GUIDE
-            )
-        if c1 != c2:
-            raise SqlDmlError(
-                f"tx_sql MERGE: pk columns must match by name "
-                f"({c1!r} vs {c2!r}) — merge_tx_table merges on shared "
-                f"pk names. " + _MERGE_GUIDE
-            )
-        pks.append(c1)
-
-    clauses = _parse_merge_clauses(m["clauses"])
+    pks = _merge_keys(_text(sql, plan.mergeCondition()), t_alias, s_alias)
+    clauses = _merge_clauses(sql, plan, t_alias)
     upd = clauses.get("upd")
     ins = clauses.get("ins")
     mdel = clauses.get("mdel")
     nmbs = clauses.get("nmbs")
 
-    src = _source_df(spark, m["src"], lits, tables)
+    if s_name in tables:
+        src = tx.read_table(spark, tables[s_name])
+    elif s_name:
+        src = spark.table(_text(sql, s_node))
+    else:
+        src = _query(spark, sql, s_node, tables)
     tgt_schema = tx._fold(path).spark_schema()
     target_cols = [f.name for f in tgt_schema.fields]
     dt_of = {f.name: f.dataType for f in tgt_schema.fields}
@@ -603,10 +622,8 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
                 f"column in the source"
             )
 
-    def _cond(c, relation):
-        return (
-            F.expr(_unmask(c, lits).strip()) if c else F.lit(True)
-        )
+    def _cond(c):
+        return F.expr(c) if c else F.lit(True)
 
     dcol = "__tx_sql_del"
 
@@ -616,26 +633,18 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
         and upd["sets"] == "*"
         and ins is not None
         and ins["cond"] is None
-        and ins["cols"] is None
+        and ins["vals"] is None
         and nmbs is None
     )
     if fast and mdel is not None and mdel["cond"] is not None:
         # the cheap path evaluates the DELETE condition on the bare
         # source; a target-column reference needs the join path
-        probe = _unmask(mdel["cond"], lits)
-        if re.search(r"(?<![\w.])" + re.escape(t_alias) + r"\.", probe):
-            fast = False
+        fast = not _reads_alias(mdel["cond"], t_alias)
 
     if fast:
         _require_full_source("UPDATE SET * / INSERT *")
         flag = None
         if mdel is not None:
-            expr_sql = _unmask(mdel["cond"], lits).strip() if mdel["cond"] else "true"
-            if s_alias:
-                expr_sql = re.sub(
-                    r"(?<![\w.])" + re.escape(s_alias) + r"\.", "",
-                    expr_sql,
-                )
             # SQL standard: the MATCHED DELETE clause applies to
             # MATCHED rows only — restrict the flag to keys present
             # in the target, so a flagged-but-new key still INSERTS
@@ -648,8 +657,10 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
                 .withColumn("__tx_sql_m", F.lit(True))
             )
             flag = dcol
+            # the condition reads the source under its own alias
             src = (
-                src.withColumn("__tx_sql_raw", F.expr(expr_sql))
+                (src.alias(s_alias) if s_alias else src)
+                .withColumn("__tx_sql_raw", _cond(mdel["cond"]))
                 .join(marker, pks, "left")
                 .withColumn(
                     dcol,
@@ -691,7 +702,7 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
             "inner",
         )
         del_c = (
-            F.coalesce(_cond(mdel["cond"], joined), F.lit(False))
+            F.coalesce(_cond(mdel["cond"]), F.lit(False))
             if mdel is not None
             else F.lit(False)
         )
@@ -709,7 +720,7 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
             )
         if upd is not None:
             upd_rows = joined.where(
-                ~del_c & F.coalesce(_cond(upd["cond"], joined), F.lit(False))
+                ~del_c & F.coalesce(_cond(upd["cond"]), F.lit(False))
             )
             if upd["sets"] == "*":
                 _require_full_source("UPDATE SET *")
@@ -717,10 +728,7 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
                     F.col(f"{s_alias}.{c}").alias(c) for c in target_cols
                 ]
             else:
-                sets = {
-                    c: _unmask(e, lits).strip()
-                    for c, e in upd["sets"].items()
-                }
+                sets = upd["sets"]
                 unknown = [c for c in sets if c not in target_cols]
                 if unknown:
                     raise SqlDmlError(
@@ -747,33 +755,31 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
         unmatched = (
             src.alias(s_alias)
             .join(tgt.select(*pks).distinct(), pks, "left_anti")
-            .where(_cond(ins["cond"], src))
+            .where(_cond(ins["cond"]))
         )
-        if ins["cols"] is None:
+        if ins["vals"] is None:
             _require_full_source("INSERT *")
             proj = [F.col(c) for c in target_cols]
         else:
-            unknown = [c for c in ins["cols"] if c not in target_cols]
+            unknown = [c for c in ins["vals"] if c not in target_cols]
             if unknown:
                 raise SqlDmlError(
                     f"tx_sql MERGE: INSERT column(s) {unknown} not in "
                     f"the target schema ({target_cols})"
                 )
-            missing_pks = [k for k in pks if k not in ins["cols"]]
+            missing_pks = [k for k in pks if k not in ins["vals"]]
             if missing_pks:
                 raise SqlDmlError(
                     f"tx_sql MERGE: INSERT (cols) must list the merge "
                     f"key(s) {missing_pks} — a NULL-keyed insert can "
                     f"never be matched again."
                 )
-            val_of = dict(zip(ins["cols"], ins["vals"]))
+            val_of = ins["vals"]
             # unlisted columns fill NULL at the declared type — SQL
             # INSERT column-list semantics
             proj = [
                 (
-                    F.expr(_unmask(val_of[c], lits))
-                    if c in val_of
-                    else F.lit(None)
+                    F.expr(val_of[c]) if c in val_of else F.lit(None)
                 ).cast(dt_of[c]).alias(c)
                 for c in target_cols
             ]
@@ -782,7 +788,7 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
         untouched = (
             tgt.alias(t_alias)
             .join(src.select(*pks).distinct(), pks, "left_anti")
-            .where(_cond(nmbs["cond"], tgt))
+            .where(_cond(nmbs["cond"]))
         )
         parts.append(_with_flag(untouched.select(*target_cols), True))
     effective = parts[0]
@@ -795,147 +801,47 @@ def _do_merge(spark, masked, lits, tables, m) -> dict:
     return {"op": "merge", "version": version}
 
 
-# ---------------------------------------------------------------------------
-# entry point
-# ---------------------------------------------------------------------------
-
-_RE_INSERT = re.compile(
-    r"^INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?(?P<tbl>" + _IDENT + r")\s*",
-    re.IGNORECASE,
-)
-_RE_DELETE = re.compile(
-    r"^DELETE\s+FROM\s+(?P<tbl>" + _IDENT + r")"
-    r"(?:\s+WHERE\s+(?P<cond>.+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_RE_UPDATE = re.compile(
-    r"^UPDATE\s+(?P<tbl>" + _IDENT + r")\s+SET\s+(?P<sets>.+?)"
-    r"(?:\s+WHERE\s+(?P<cond>.+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_RE_MERGE_HEAD = re.compile(
-    r"^MERGE\s+INTO\s+(?P<tbl>" + _IDENT + r")"
-    r"(?:\s+AS)?(?:\s+(?P<talias>" + _IDENT + r"))?"
-    r"\s+USING\s+",
-    re.IGNORECASE,
-)
-_RE_MERGE_TAIL = re.compile(
-    r"^(?:\s+AS)?(?:\s+(?P<salias>" + _IDENT + r"))?"
-    r"\s+ON\s+(?P<on>.+?)"
-    r"\s+(?P<clauses>WHEN\s+.+)$",
-    re.IGNORECASE | re.DOTALL,
+_CREATE_GUIDE = (
+    "tx_sql CREATE TABLE: expected CREATE TABLE [IF NOT EXISTS] <table> "
+    "(col type, ...) [PARTITIONED BY (cols)] or CREATE TABLE <table> "
+    "[PARTITIONED BY (cols)] AS SELECT ... (a column list and AS SELECT "
+    "are mutually exclusive — CTAS takes its schema from the query; no "
+    "USING / LOCATION / COMMENT / TBLPROPERTIES: the mapping names the "
+    "table's path)."
 )
 
 
-def _parse_merge(masked: str) -> dict | None:
-    """MERGE shape extraction: the USING source is taken by a
-    balanced-paren scan (regexes cap nesting; a subquery of a
-    subquery is perfectly legal), the rest by anchored regexes."""
-    head = _RE_MERGE_HEAD.match(masked)
-    if not head:
-        return None
-    rest = masked[head.end():]
-    if rest.startswith("("):
-        depth = 0
-        end = None
-        for i, c in enumerate(rest):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    end = i + 1
-                    break
-        if end is None:
-            return None
-        src, rest = rest[:end], rest[end:]
-    else:
-        im = re.match(_IDENT, rest)
-        if not im:
-            return None
-        src, rest = im.group(0), rest[im.end():]
-    tail = _RE_MERGE_TAIL.match(rest)
-    if not tail:
-        return None
-    return {
-        "tbl": head.group("tbl"),
-        "talias": head.group("talias"),
-        "src": src,
-        "salias": tail.group("salias"),
-        "on": tail.group("on"),
-        "clauses": tail.group("clauses"),
-    }
-_RE_CREATE = re.compile(
-    r"^CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<tbl>" + _IDENT + r")\s*",
-    re.IGNORECASE,
-)
-_RE_ALTER = re.compile(
-    r"^ALTER\s+TABLE\s+(?P<tbl>" + _IDENT + r")\s+(?P<rest>.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_RE_OPTIMIZE = re.compile(
-    r"^OPTIMIZE\s+(?P<tbl>" + _IDENT + r")"
-    r"(?:\s+ZORDER\s+BY\s*\(\s*(?P<z>[^)]*?)\s*\))?$",
-    re.IGNORECASE,
-)
-
-
-def _balanced_paren(s: str) -> int | None:
-    """End index (exclusive) of the paren group ``s`` starts with."""
-    depth = 0
-    for i, c in enumerate(s):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    return None
-
-
-def _do_create(spark, masked, lits, tables, m) -> dict:
-    path = _resolve(tables, m.group("tbl"), "CREATE")
-    rest = masked[m.end():].strip()
-    cols_sql = None
-    if rest.startswith("("):
-        end = _balanced_paren(rest)
-        if end is None:
-            raise SqlDmlError("tx_sql CREATE TABLE: unbalanced column list")
-        cols_sql, rest = rest[1 : end - 1], rest[end:].strip()
-    pcols = None
-    pm = re.match(
-        r"PARTITIONED\s+BY\s*\(\s*([^)]*?)\s*\)\s*", rest, re.IGNORECASE
-    )
-    if pm:
-        pcols = [c.strip() for c in pm.group(1).split(",")]
-        rest = rest[pm.end():].strip()
-    if m.group("ine") and tx.latest_version(path) >= 0:
+def _do_create(spark, sql, plan, tables) -> dict:
+    path = _resolve(tables, _name(plan.name()), "CREATE")
+    spec = plan.tableSpec()
+    if any(
+        not getattr(spec, f)().isEmpty()
+        for f in ("properties", "provider", "location", "comment", "serde")
+    ):
+        raise SqlDmlError(_CREATE_GUIDE)
+    pcols = []
+    for t in _seq(plan.partitioning()):
+        if t.name() != "identity":
+            raise SqlDmlError(
+                f"tx_sql CREATE TABLE: PARTITIONED BY takes column "
+                f"names, got a {t.name()} transform. " + _CREATE_GUIDE
+            )
+        pcols.append(".".join(t.references()[0].fieldNames()))
+    if plan.ignoreIfExists() and tx.latest_version(path) >= 0:
         return {
             "op": "create",
             "version": tx.latest_version(path),
             "skipped": True,
         }
-    am = re.match(r"AS\s+", rest, re.IGNORECASE)
-    if am:
-        if cols_sql is not None:
-            raise SqlDmlError(
-                "tx_sql CREATE TABLE: a column list and AS SELECT are "
-                "mutually exclusive — CTAS takes its schema from the "
-                "query"
-            )
-        df = _run_select(spark, rest[am.end():], lits, tables)
+    if plan.nodeName() == "CreateTableAsSelect":
+        df = _query(spark, sql, plan.query(), tables, to_end=True)
     else:
-        if rest or cols_sql is None:
-            raise SqlDmlError(
-                "tx_sql CREATE TABLE: expected (col type, ...) "
-                "[PARTITIONED BY (cols)] or [PARTITIONED BY (cols)] "
-                f"AS SELECT ..., got: {rest[:60]!r}"
-            )
-        df = spark.createDataFrame([], _unmask(cols_sql, lits))
+        df = spark.createDataFrame(
+            [], StructType.fromJson(json.loads(plan.tableSchema().json()))
+        )
     return {
         "op": "create",
-        "version": tx.create_table(df, path, partition_cols=pcols),
+        "version": tx.create_table(df, path, partition_cols=pcols or None),
     }
 
 
@@ -947,75 +853,142 @@ _ALTER_GUIDE = (
 )
 
 
-def _do_alter(spark, masked, lits, tables, m) -> dict:
-    path = _resolve(tables, m.group("tbl"), "ALTER")
-    rest = m.group("rest").strip()
-    am = re.fullmatch(
-        r"ADD\s+COLUMNS?\s+\(?\s*(?P<c>" + _IDENT + r")\s+(?P<t>[^,()]+?)\s*\)?",
-        rest, re.IGNORECASE,
-    )
-    if am:
-        return {
-            "op": "alter",
-            "version": tx.add_column(path, am.group("c"), am.group("t")),
-        }
-    rm = re.fullmatch(
-        r"RENAME\s+COLUMN\s+(?P<a>" + _IDENT + r")\s+TO\s+(?P<b>" + _IDENT + r")",
-        rest, re.IGNORECASE,
-    )
-    if rm:
-        return {
-            "op": "alter",
-            "version": tx.rename_column(path, rm.group("a"), rm.group("b")),
-        }
-    dm = re.fullmatch(
-        r"DROP\s+COLUMN\s+(?P<c>" + _IDENT + r")", rest, re.IGNORECASE
-    )
-    if dm:
-        return {"op": "alter", "version": tx.drop_column(path, dm.group("c"))}
-    wm = re.fullmatch(
-        r"ALTER\s+COLUMN\s+(?P<c>" + _IDENT + r")\s+(?:SET\s+DATA\s+)?TYPE\s+"
-        r"(?P<t>\S+)",
-        rest, re.IGNORECASE,
-    )
-    if wm:
-        return {
-            "op": "alter",
-            "version": tx.widen_column_type(path, wm.group("c"), wm.group("t")),
-        }
-    cm = re.fullmatch(
-        r"ADD\s+CONSTRAINT\s+(?P<n>" + _IDENT + r")\s+CHECK\s*"
-        r"\((?P<e>.+)\)",
-        rest, re.IGNORECASE | re.DOTALL,
-    )
-    if cm:
-        return {
-            "op": "alter",
-            "version": tx.add_check_constraint(
-                spark, path, cm.group("n"), _unmask(cm.group("e"), lits)
-            ),
-        }
-    xm = re.fullmatch(
-        r"DROP\s+CONSTRAINT\s+(?P<n>" + _IDENT + r")", rest, re.IGNORECASE
-    )
-    if xm:
-        return {
-            "op": "alter",
-            "version": tx.drop_check_constraint(path, xm.group("n")),
-        }
-    raise SqlDmlError(
-        f"tx_sql ALTER TABLE: unsupported form {rest[:60]!r}. "
-        + _ALTER_GUIDE
-    )
+def _column(field) -> str:
+    """The one top-level column a parsed field reference names."""
+    parts = _seq(field.name())
+    if len(parts) != 1:
+        raise SqlDmlError(
+            f"tx_sql ALTER TABLE: nested field {'.'.join(parts)!r} is not "
+            f"supported. " + _ALTER_GUIDE
+        )
+    return parts[0]
 
 
-def _do_optimize(spark, masked, lits, tables, m) -> dict:
-    path = _resolve(tables, m.group("tbl"), "OPTIMIZE")
-    zorder = (
-        [c.strip() for c in m.group("z").split(",")]
-        if m.group("z")
-        else None
-    )
+def _only(items: list, what: str):
+    if len(items) != 1:
+        raise SqlDmlError(
+            f"tx_sql ALTER TABLE: one {what} per statement. " + _ALTER_GUIDE
+        )
+    return items[0]
+
+
+def _do_alter(spark, sql, plan, tables) -> dict:
+    kind = plan.nodeName()
+    if kind not in (
+        "AddColumns", "RenameColumn", "DropColumns", "AlterColumns",
+        "AddCheckConstraint", "DropConstraint",
+    ):
+        raise SqlDmlError(
+            f"tx_sql ALTER TABLE: unsupported form {kind}. " + _ALTER_GUIDE
+        )
+    table = plan.children().apply(0)
+    if kind == "AddCheckConstraint":  # the table sits under a Filter
+        table = table.child()
+    path = _resolve(tables, _name(table), "ALTER")
+    if kind == "AddColumns":
+        c = _only(_seq(plan.columnsToAdd()), "ADD COLUMN")
+        if not c.nullable() or any(
+            getattr(c, f)().isDefined() for f in ("path", "position", "default")
+        ):
+            raise SqlDmlError(
+                "tx_sql ALTER TABLE: ADD COLUMN takes a nullable top-level "
+                "column without FIRST/AFTER or DEFAULT. " + _ALTER_GUIDE
+            )
+        version = tx.add_column(path, c.colName(), c.dataType().catalogString())
+    elif kind == "RenameColumn":
+        version = tx.rename_column(path, _column(plan.column()), plan.newName())
+    elif kind == "DropColumns":
+        version = tx.drop_column(
+            path, _column(_only(_seq(plan.columnsToDrop()), "DROP COLUMN"))
+        )
+    elif kind == "AlterColumns":
+        spec = _only(_seq(plan.specs()), "ALTER COLUMN")
+        if spec.newDataType().isEmpty() or spec.dropDefault() or any(
+            getattr(spec, f)().isDefined()
+            for f in ("newNullability", "newComment", "newPosition",
+                      "newDefaultExpression")
+        ):
+            raise SqlDmlError(
+                "tx_sql ALTER TABLE: ALTER COLUMN supports TYPE only. "
+                + _ALTER_GUIDE
+            )
+        version = tx.widen_column_type(
+            path, _column(spec.column()),
+            spec.newDataType().get().catalogString(),
+        )
+    elif kind == "AddCheckConstraint":
+        check = plan.checkConstraint()
+        version = tx.add_check_constraint(
+            spark, path, check.name(), _text(sql, check.child())
+        )
+    else:
+        version = tx.drop_check_constraint(path, plan.name())
+    return {"op": "alter", "version": version}
+
+
+# ---------------------------------------------------------------------------
+# the four verbs outside Spark's grammar
+# ---------------------------------------------------------------------------
+
+_VERBS = {
+    "OPTIMIZE": (
+        re.compile(
+            r"^OPTIMIZE\s+(?P<tbl>[\w.`]+)"
+            r"(?:\s+ZORDER\s+BY\s*\(\s*(?P<z>[^)]*?)\s*\))?$",
+            re.IGNORECASE,
+        ),
+        "tx_sql: malformed OPTIMIZE — expected OPTIMIZE <table> "
+        "[ZORDER BY (cols)]",
+    ),
+    "RESTORE": (
+        re.compile(
+            r"^RESTORE\s+TABLE\s+(?P<tbl>[\w.`]+)\s+TO\s+"
+            r"(?:VERSION\s+AS\s+OF\s+(?P<v>\d+)"
+            r"|TIMESTAMP\s+AS\s+OF\s+(?P<ts>'[^']*'|\"[^\"]*\"))$",
+            re.IGNORECASE,
+        ),
+        "tx_sql: malformed RESTORE — expected RESTORE TABLE <table> TO "
+        "VERSION AS OF <n> | TIMESTAMP AS OF '<ts>'",
+    ),
+    "DESCRIBE": (
+        re.compile(r"^DESCRIBE\s+HISTORY\s+(?P<tbl>[\w.`]+)$", re.IGNORECASE),
+        "tx_sql: only DESCRIBE HISTORY <table> is supported",
+    ),
+    "VACUUM": (
+        re.compile(
+            r"^VACUUM\s+(?P<tbl>[\w.`]+)"
+            r"(?:\s+RETAIN\s+(?P<n>\d+)\s+VERSIONS)?$",
+            re.IGNORECASE,
+        ),
+        "tx_sql: malformed VACUUM — expected VACUUM <table> "
+        "[RETAIN <n> VERSIONS]",
+    ),
+}
+
+
+def _do_verb(spark, head: str, body: str, tables):
+    """OPTIMIZE / RESTORE / DESCRIBE HISTORY / VACUUM over the
+    statement with comments and ``;`` blanked out."""
+    pattern, guide = _VERBS[head]
+    m = pattern.match(body)
+    if not m:
+        raise SqlDmlError(guide)
+    path = _resolve(tables, m["tbl"].replace("`", ""), head)
+    if head == "DESCRIBE":
+        return tx.table_history(spark, path)
+    if head == "RESTORE":
+        version = tx.restore_table(
+            spark, path,
+            version=int(m["v"]) if m["v"] else None,
+            timestamp=m["ts"][1:-1] if m["ts"] else None,
+        )
+        return {"op": "restore", "version": version}
+    if head == "VACUUM":
+        kw = {"retain_versions": int(m["n"])} if m["n"] else {}
+        deleted = tx.vacuum_table(path, **kw)
+        return {"op": "vacuum", "version": tx.latest_version(path),
+                "files_deleted": len(deleted)}
+    zorder = [c.strip() for c in m["z"].split(",")] if m["z"] else None
     if tx._fold(path).partition_cols:
         version = tx.compact_partitions(spark, path, zorder_by=zorder)
     else:
@@ -1029,20 +1002,24 @@ def _do_optimize(spark, masked, lits, tables, m) -> dict:
     }
 
 
-_RE_RESTORE = re.compile(
-    r"^RESTORE\s+TABLE\s+(?P<tbl>" + _IDENT + r")\s+TO\s+"
-    r"(?:VERSION\s+AS\s+OF\s+(?P<v>\d+)"
-    r"|TIMESTAMP\s+AS\s+OF\s+(?P<ts>\x00\d+\x00))$",
-    re.IGNORECASE,
-)
-_RE_HISTORY = re.compile(
-    r"^DESCRIBE\s+HISTORY\s+(?P<tbl>" + _IDENT + r")$", re.IGNORECASE
-)
-_RE_VACUUM = re.compile(
-    r"^VACUUM\s+(?P<tbl>" + _IDENT + r")"
-    r"(?:\s+RETAIN\s+(?P<n>\d+)\s+VERSIONS)?$",
-    re.IGNORECASE,
-)
+# ---------------------------------------------------------------------------
+# entry point
+# ---------------------------------------------------------------------------
+
+# per statement kind, the shape a parse error is measured against
+_GUIDES = {
+    "INSERT": "tx_sql INSERT: expected VALUES (...) or SELECT ... after "
+    "INSERT INTO|OVERWRITE <table> [(cols)].",
+    "DELETE": "tx_sql DELETE: expected DELETE FROM <table> "
+    "[WHERE <predicate>].",
+    "UPDATE": "tx_sql UPDATE: expected UPDATE <table> SET col = expr[, ...] "
+    "[WHERE <predicate>]; a SET target that is not a column name does "
+    "not parse.",
+    "MERGE": "tx_sql MERGE: malformed statement, or an unsupported action "
+    "or clause. " + _MERGE_GUIDE,
+    "CREATE": _CREATE_GUIDE,
+    "ALTER": "tx_sql ALTER TABLE: malformed statement. " + _ALTER_GUIDE,
+}
 
 
 def tx_sql(
@@ -1062,121 +1039,73 @@ def tx_sql(
     Returns a DataFrame for SELECT / DESCRIBE HISTORY, else a dict
     with at least ``op`` and ``version``.
     """
-    stmt = _strip_comments(statement).strip().rstrip(";").strip()
-    if not stmt:
+    stream = _tokens(statement)
+    first = stream.LT(1)
+    head = "" if first.getType() == -1 else first.getText().upper()
+    if head in ("", ";"):
         raise SqlDmlError("tx_sql: empty statement")
-    masked, lits = _mask_literals(stmt)
-    head = masked.split(None, 1)[0].upper()
-
-    if head in ("SELECT", "WITH"):
-        return _run_select(spark, masked, lits, tables)
-    if head == "INSERT":
-        m = _RE_INSERT.match(masked)
-        if not m:
-            raise SqlDmlError(
-                "tx_sql: malformed INSERT — expected INSERT INTO|"
-                "OVERWRITE <table> [(cols)] VALUES ... | SELECT ..."
-            )
-        return _do_insert(spark, masked, lits, tables, m)
-    if head == "DELETE":
-        m = _RE_DELETE.match(masked)
-        if not m:
-            raise SqlDmlError(
-                "tx_sql: malformed DELETE — expected DELETE FROM "
-                "<table> [WHERE <predicate>]"
-            )
-        return _do_delete(spark, masked, lits, tables, m, mode)
-    if head == "UPDATE":
-        m = _RE_UPDATE.match(masked)
-        if not m:
-            raise SqlDmlError(
-                "tx_sql: malformed UPDATE — expected UPDATE <table> "
-                "SET col = expr[, ...] [WHERE <predicate>]"
-            )
-        return _do_update(spark, masked, lits, tables, m, mode)
+    if head in _VERBS:
+        body = list(statement)
+        for start, stop, _ in _marks(stream):
+            body[start : stop + 1] = " " * (stop - start + 1)
+        return _do_verb(spark, head, "".join(body).strip(), tables)
     if head == "MERGE":
-        m = _parse_merge(masked)
-        if not m:
-            raise SqlDmlError("tx_sql: malformed MERGE. " + _MERGE_GUIDE)
-        return _do_merge(spark, masked, lits, tables, m)
-    if head == "RESTORE":
-        m = _RE_RESTORE.match(masked)
-        if not m:
-            raise SqlDmlError(
-                "tx_sql: malformed RESTORE — expected RESTORE TABLE "
-                "<table> TO VERSION AS OF <n> | TIMESTAMP AS OF '<ts>'"
-            )
-        path = _resolve(tables, m.group("tbl"), "RESTORE")
-        ts = m.group("ts")
-        version = tx.restore_table(
-            spark, path,
-            version=int(m.group("v")) if m.group("v") else None,
-            timestamp=_unmask(ts, lits).strip("'") if ts else None,
+        statement = _in_spark_clause_order(statement, stream)
+    try:
+        plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(
+            statement
         )
-        return {"op": "restore", "version": version}
-    if head == "DESCRIBE":
-        m = _RE_HISTORY.match(masked)
-        if not m:
-            raise SqlDmlError(
-                "tx_sql: only DESCRIBE HISTORY <table> is supported"
-            )
-        return tx.table_history(
-            spark, _resolve(tables, m.group("tbl"), "DESCRIBE")
-        )
-    if head == "VACUUM":
-        m = _RE_VACUUM.match(masked)
-        if not m:
-            raise SqlDmlError(
-                "tx_sql: malformed VACUUM — expected VACUUM <table> "
-                "[RETAIN <n> VERSIONS]"
-            )
-        path = _resolve(tables, m.group("tbl"), "VACUUM")
-        kw = {"retain_versions": int(m.group("n"))} if m.group("n") else {}
-        deleted = tx.vacuum_table(path, **kw)
-        return {"op": "vacuum", "version": tx.latest_version(path),
-                "files_deleted": len(deleted)}
-    if head == "CREATE":
-        m = _RE_CREATE.match(masked)
-        if not m:
-            raise SqlDmlError(
-                "tx_sql: malformed CREATE — expected CREATE TABLE "
-                "[IF NOT EXISTS] <table> (col type, ...) [PARTITIONED "
-                "BY (cols)] | ... AS SELECT ..."
-            )
-        return _do_create(spark, masked, lits, tables, m)
+    except AnalysisException as e:  # ParseException and parse-time checks
+        guide = _GUIDES.get(head, "tx_sql: Spark cannot parse the statement.")
+        raise SqlDmlError(f"{guide} Spark: {e}") from e
+    kind = plan.nodeName()
+    if kind == "InsertIntoStatement":
+        return _do_insert(spark, statement, plan, tables)
+    if kind == "DeleteFromTable":
+        return _do_delete(spark, statement, plan, tables, mode)
+    if kind == "UpdateTable":
+        return _do_update(spark, statement, plan, tables, mode)
+    if kind == "MergeIntoTable":
+        return _do_merge(spark, statement, plan, tables)
+    if kind in ("CreateTable", "CreateTableAsSelect"):
+        return _do_create(spark, statement, plan, tables)
     if head == "ALTER":
-        m = _RE_ALTER.match(masked)
-        if not m:
-            raise SqlDmlError("tx_sql: malformed ALTER. " + _ALTER_GUIDE)
-        return _do_alter(spark, masked, lits, tables, m)
-    if head == "OPTIMIZE":
-        m = _RE_OPTIMIZE.match(masked)
-        if not m:
-            raise SqlDmlError(
-                "tx_sql: malformed OPTIMIZE — expected OPTIMIZE "
-                "<table> [ZORDER BY (cols)]"
-            )
-        return _do_optimize(spark, masked, lits, tables, m)
-    raise SqlDmlError(
-        f"tx_sql: unsupported statement kind {head!r} — supported: "
-        f"SELECT/WITH, INSERT, UPDATE, DELETE, MERGE, CREATE TABLE, "
-        f"ALTER TABLE, OPTIMIZE, RESTORE TABLE, DESCRIBE HISTORY, "
-        f"VACUUM. (DROP TABLE is deliberately absent — deleting a "
-        f"table is a filesystem operation, not a commit.)"
-    )
+        return _do_alter(spark, statement, plan, tables)
+    command = spark._jvm.org.apache.spark.sql.catalyst.plans.logical.Command
+    if command._java_lang_class.isInstance(plan):
+        raise SqlDmlError(
+            f"tx_sql: unsupported statement kind {head!r} — supported: "
+            f"SELECT/WITH, INSERT, UPDATE, DELETE, MERGE, CREATE TABLE, "
+            f"ALTER TABLE, OPTIMIZE, RESTORE TABLE, DESCRIBE HISTORY, "
+            f"VACUUM. (DROP TABLE is deliberately absent — deleting a "
+            f"table is a filesystem operation, not a commit.)"
+        )
+    return _query(spark, statement, plan, tables, lo=0, to_end=True)
 
 
 def split_statements(script: str) -> list[str]:
-    """Split a SQL script into statements on ``;`` at top level —
-    literals and comments never split (the masking pass handles a
-    ``';'`` inside a string), trailing empties drop."""
-    stripped = _strip_comments(script)
-    masked, lits = _mask_literals(stripped)
-    out = []
-    for part in _split_top(masked, ";"):
-        stmt = _unmask(part, lits).strip()
-        if stmt:
-            out.append(stmt)
+    """Split a SQL script into statements at Spark's ``;`` tokens — a
+    ``;`` inside a quoted literal or a comment never splits; comments
+    and whitespace around a statement are trimmed, empty statements
+    drop. Needs an active SparkSession (the lexer is Spark's)."""
+    stream = _tokens(script)
+    cuts, comments = [], {}
+    for start, stop, semi in _marks(stream):
+        if semi:
+            cuts.append(start)
+        else:
+            comments[start] = stop
+    ends = {stop: start for start, stop in comments.items()}
+    out, lo = [], 0
+    for hi in [*cuts, len(script)]:
+        a, b = lo, hi
+        while a < b and (script[a].isspace() or a in comments):
+            a = comments[a] + 1 if a in comments else a + 1
+        while b > a and (script[b - 1].isspace() or b - 1 in ends):
+            b = ends[b - 1] if b - 1 in ends else b - 1
+        if a < b:
+            out.append(script[a:b])
+        lo = hi + 1
     return out
 
 

@@ -15,9 +15,15 @@ invariants ``get_spark`` sets: naive and UTC timestamps read as
 ``TimestampType`` (instants, not NTZ), decimals keep precision and
 scale, and every field is nullable (Spark reads files as nullable);
 nanosecond columns read as ``LongType`` before the micros projection.
-A footer that cannot be read locally (a directory dataset, a remote
-path) or holds a type that conversion does not map leaves inference to
-Spark.
+A file Spark wrote carries Spark's own schema in its footer metadata;
+Spark's inference reads that schema, so the loader does too (with every
+field nullable, as file sources read them) — INT96 timestamps, which
+Arrow reports as nanoseconds, stay timestamps. A flat directory of
+data files (a Spark-written dataset) takes the schema of its first data
+file in sorted order: the one file Spark's inference reads when schema
+merging is off. A footer that cannot be read locally (a remote path), a
+nested or summary-file directory, schema merging, or a type that
+conversion does not map leaves inference to Spark.
 
 Scale note: the conversion is a codegen'd projection on the scan (no
 shuffle, no UDF); predicate pushdown on other columns is unaffected.
@@ -25,6 +31,7 @@ shuffle, no UDF); predicate pushdown on other columns is unaffected.
 
 from __future__ import annotations
 
+import json
 import os
 import weakref
 
@@ -41,11 +48,40 @@ _FOOTER_SCHEMAS: dict[tuple[str, int, int], tuple[T.StructType | None, list[str]
 _PINNED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
+def _nullable(node):
+    """Spark's ``asNullable`` over a schema's JSON form."""
+    if isinstance(node, dict):
+        return {
+            k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else _nullable(v)
+            for k, v in node.items()
+        }
+    if isinstance(node, list):
+        return [_nullable(v) for v in node]
+    return node
+
+
+def _first_data_file(path: str) -> str | None:
+    """The data file Spark's schema inference reads in a flat dataset
+    directory (sorted names, ``_``/``.`` files hidden); None for nested
+    (partitioned) directories or ones holding summary files."""
+    entries = sorted(os.scandir(path), key=lambda e: e.name)
+    if any(e.name.startswith(("_metadata", "_common_metadata")) for e in entries):
+        return None
+    data = [e for e in entries if not e.name.startswith(("_", "."))]
+    if not data or any(e.is_dir() for e in data):
+        return None
+    return data[0].path
+
+
 def _schema_from_footer(path: str) -> tuple[T.StructType | None, list[str]]:
     try:
         arrow = pq.read_schema(path)
-    except Exception:  # noqa: BLE001 — directory datasets etc.; let Spark infer
+    except Exception:  # noqa: BLE001 — unreadable footer; let Spark infer
         return None, []
+    stored = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if stored:
+        return T.StructType.fromJson(_nullable(json.loads(stored))), []
     ns_cols = [
         f.name
         for f in arrow
@@ -64,11 +100,16 @@ def _schema_from_footer(path: str) -> tuple[T.StructType | None, list[str]]:
 
 
 def _footer_schema(path: str) -> tuple[T.StructType | None, list[str]]:
-    """(Spark read schema, nanosecond columns) from the parquet footer,
-    memoized per (path, size, mtime_ns); the schema is None when the
-    footer cannot be read or holds a type PySpark's Arrow conversion
+    """(Spark read schema, nanosecond columns) from the parquet footer
+    of ``path`` or, for a flat dataset directory, of its first data
+    file, memoized per (file, size, mtime_ns); the schema is None when
+    no footer can be read or it holds a type PySpark's Arrow conversion
     does not map (unsigned integers, nested nanosecond timestamps)."""
     try:
+        if os.path.isdir(path):
+            path = _first_data_file(path)
+            if path is None:
+                return None, []
         st = os.stat(path)
     except OSError:
         return None, []
@@ -99,6 +140,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     _pin_session(spark)
     schema, ns_cols = _footer_schema(path)
+    if os.path.isdir(path) and spark.conf.get(
+        "spark.sql.parquet.mergeSchema", "false"
+    ).lower() == "true":  # inference would read every file
+        schema = None
     reader = spark.read if schema is None else spark.read.schema(schema)
     df = reader.parquet(path)
     for c in ns_cols:

@@ -99,3 +99,29 @@ def test_unmapped_footers_fall_back_to_inference(spark, tmp_path):
     ref = _inferred(spark, str(tmp_path / "u.parquet"))
     assert df.schema == ref.schema
     assert _rows(df) == _rows(ref)
+
+
+def test_spark_written_directory_loads_without_a_job(spark, tmp_path):
+    """A flat directory Spark wrote takes Spark's own stored schema from
+    its first data file: no job, and the schema and rows Spark's
+    inference gives (INT96 timestamps included)."""
+    src = spark.sql(
+        "SELECT id, CAST(id AS INT) AS i, "
+        "TIMESTAMP'2020-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts, "
+        "CAST(id AS DECIMAL(12, 2)) AS dec, array(id) AS arr, "
+        "named_struct('a', id, 'b', 'x') AS st, map('k', id) AS mp, "
+        "DATE'2020-01-01' AS d, CAST(NULL AS STRING) AS n FROM range(7)"
+    ).repartition(3)
+    src.write.parquet(str(tmp_path / "flat.parquet"))
+    j0 = _next_job(spark)
+    df = load_table(spark, str(tmp_path), "flat")
+    assert _next_job(spark) == j0
+    ref = spark.read.parquet(str(tmp_path / "flat.parquet"))
+    assert df.schema == ref.schema
+    assert _rows(df) == _rows(ref)
+    # a partitioned (nested) directory still lets Spark infer
+    src.write.partitionBy("i").parquet(str(tmp_path / "nested.parquet"))
+    df = load_table(spark, str(tmp_path), "nested")
+    ref = spark.read.parquet(str(tmp_path / "nested.parquet"))
+    assert df.schema == ref.schema
+    assert _rows(df) == _rows(ref)

@@ -225,11 +225,10 @@ def test_errors_carry_guidance(spark, tbl, stmt, hint):
 def test_mode_flows_to_verbs(spark, tbl):
     # cow delete rewrites files (no DVs); mor delete records DVs
     tx_sql(spark, "DELETE FROM t WHERE k = 1", {"t": tbl}, mode="cow")
-    assert not tx._fold(tbl).files_with_dv() if hasattr(
-        tx._fold(tbl), "files_with_dv"
-    ) else True
+    assert not any(m.get("dv") for m in tx._fold(tbl).files.values())
     res = tx_sql(spark, "DELETE FROM t WHERE k = 2", {"t": tbl}, mode="mor")
     assert res["mode"] == "mor"
+    assert any(m.get("dv") for m in tx._fold(tbl).files.values())
 
 
 def test_script_execution(spark, tbl, tmp_path):
@@ -531,3 +530,68 @@ def test_merge_insert_column_list_values(spark, tbl):
         (1, 10, "a"), (2, 200, "b"), (3, 30, "a"), (4, 40, "b"),
         (8, 801, None),
     ]
+
+
+# ===========================================================================
+# Spark's own lexer and parse read every statement: valid SQL the
+# hand-written scanner rejected or misread
+# ===========================================================================
+
+
+def test_merge_case_when_in_clauses(spark, tbl):
+    """CASE WHEN inside a SET value and inside a clause condition (the
+    scanner cut clauses at every WHEN and refused the statement)."""
+    spark.createDataFrame(
+        [(1, 60, "x"), (2, 5, "y"), (3, 70, "z")], "k int, v long, s string"
+    ).createOrReplaceTempView("m_case")
+    tx_sql(
+        spark,
+        "MERGE INTO t USING m_case s ON t.k = s.k "
+        "WHEN MATCHED AND CASE WHEN s.s = 'z' THEN false ELSE true END "
+        "THEN UPDATE SET v = CASE WHEN s.v > 50 THEN s.v ELSE t.v END",
+        {"t": tbl},
+    )
+    assert _rows(spark, tbl) == [
+        (1, 60, "a"),   # s.v > 50 -> source value
+        (2, 20, "b"),   # s.v <= 50 -> target value kept
+        (3, 30, "a"),   # condition false -> untouched
+        (4, 40, "b"),
+    ]
+
+
+def test_double_quoted_literals_stay_literals(spark, tbl):
+    """A double-quoted literal is neither rewritten as a table reference
+    nor cut at a -- or ; inside it."""
+    from bi_utils_spark.operators.sqldml import split_statements
+
+    t = {"t": tbl}
+    tx_sql(
+        spark,
+        "INSERT INTO t VALUES (8, 80, 't VERSION AS OF 0'), (9, 90, 'a--b')",
+        t,
+    )
+    got = tx_sql(
+        spark, 'SELECT k FROM t WHERE s = "t VERSION AS OF 0"', t
+    ).collect()
+    assert [r["k"] for r in got] == [8]
+    got = tx_sql(
+        spark, 'SELECT k FROM t WHERE s = "a--b" OR k = 1', t
+    ).collect()
+    assert sorted(r["k"] for r in got) == [1, 9]
+    res = tx_sql(spark, 'DELETE FROM t WHERE s = "x -- y" OR k = 1', t)
+    assert res["rows_deleted"] == 1
+    assert split_statements(
+        'DELETE FROM t WHERE s = "a;b"; UPDATE t SET v = 1'
+    ) == ['DELETE FROM t WHERE s = "a;b"', "UPDATE t SET v = 1"]
+
+
+def test_backquoted_table_name(spark, tbl):
+    res = tx_sql(spark, "DELETE FROM `t` WHERE k = 1", {"t": tbl})
+    assert res["op"] == "delete" and res["rows_deleted"] == 1
+    assert not any(k == 1 for k, _, _ in _rows(spark, tbl))
+
+
+def test_parse_errors_keep_spark_position(spark, tbl):
+    # Spark's own message rides along: line and position in the statement
+    with pytest.raises(SqlDmlError, match=r"pos 13"):
+        tx_sql(spark, "UPDATE t SET = 5", {"t": tbl})
