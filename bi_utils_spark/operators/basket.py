@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bi_utils_spark.operators.materialize import materialize
+
 
 def frequent_item_pairs(
     df: DataFrame,
@@ -37,12 +39,12 @@ def frequent_item_pairs(
     the support floors. Counts are basket-level (duplicates of an
     item within one basket count once)."""
     # the distinct (basket, item) frame feeds the item-count agg AND
-    # the pruned pair join — materialize it once (lazy localCheckpoint,
-    # the multi-consumer discipline; measured 1.69 -> 1.43 s on
-    # q_basket_rules together with the n_baskets change below)
-    bi = df.select(
-        F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
-    ).distinct().localCheckpoint(eager=False)
+    # the pruned pair join — materialize it once
+    bi = materialize(
+        df.select(
+            F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
+        ).distinct()
+    )
     item_counts = bi.groupBy("__i").agg(
         F.count(F.lit(1)).alias("__c")
     )

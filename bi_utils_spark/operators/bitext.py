@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bi_utils_spark.operators.materialize import materialize
+
 _Q9 = 1e9
 
 
@@ -78,10 +80,9 @@ def mine_bitext(
     # legs are the expensive subtrees (an all-pairs scoring join in
     # the exact form), so cut the lineage once per leg — without the
     # cut every consumer re-executes its whole kNN join (the plan
-    # carried 5 scoring legs; with it, 2). The mixing.py lineage-diet
-    # pattern; |src|·k rows per leg, freed with the frame.
-    fwd = knn(src, tgt, k, src_id, tgt_id, vec_col).localCheckpoint(eager=False)
-    bwd = knn(tgt, src, k, tgt_id, src_id, vec_col).localCheckpoint(eager=False)
+    # carried 5 scoring legs; with it, 2). |src|·k rows per leg.
+    fwd = materialize(knn(src, tgt, k, src_id, tgt_id, vec_col))
+    bwd = materialize(knn(tgt, src, k, tgt_id, src_id, vec_col))
 
     # per-vector neighborhood mass AND actual neighbor count: Σ of
     # 1e-9-quantized neighbor scores (exact BIGINT — an avg of

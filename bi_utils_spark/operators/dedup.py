@@ -30,6 +30,7 @@ from bi_utils_spark.operators.lshkern import (
     per_doc_signatures,
     simhash64,
 )
+from bi_utils_spark.operators.materialize import materialize
 
 
 def _orderable(dt: T.DataType) -> bool:
@@ -200,14 +201,10 @@ def jaccard_similarity_join(
     # The set frame feeds two plan consumers in either branch (the
     # self-join sides below / the doc-frequency aggregate + the work
     # join) and the kernel output carries no exchange ReuseExchange
-    # could share, so it is materialized once (localCheckpoint, sized
-    # like the corpus' distinct shingle sets). Its blocks stay in
-    # executor storage until the frame is garbage-collected, and a
-    # lost executor loses them: a localCheckpoint has no lineage to
-    # recompute from.
-    doc_sets = per_doc_signatures(
-        df, id_col, text_col, shingle_n, want_set=True
-    ).localCheckpoint()
+    # could share, so it is materialized once.
+    doc_sets = materialize(
+        per_doc_signatures(df, id_col, text_col, shingle_n, want_set=True)
+    )
     dist = doc_sets.select("id", F.explode("sh_set").alias("sh"))
     if not prefix_filter:
         # Carry the set size alongside every shingle row: pair-group keys
@@ -497,9 +494,7 @@ def minhash_near_dup_join(
     corpus-scaled state the plan carries is 512 B/doc of signatures
     plus the shingle sets. That frame feeds four plan consumers (two
     banding self-join sides, two verify sides) and carries no exchange
-    ReuseExchange could share, so it is materialized once
-    (localCheckpoint); at 100 TB, write the per-doc frame out bucketed
-    by id instead.
+    ReuseExchange could share, so it is materialized once.
 
     The verify join re-attaches the shingle-hash sets only for
     candidate pairs (a tiny fraction of the corpus) and computes
@@ -512,14 +507,16 @@ def minhash_near_dup_join(
     unique: rows sharing an id would each band and verify as their own
     document and yield duplicate pairs.
     """
-    per_doc = per_doc_signatures(
-        df,
-        id_col,
-        text_col,
-        shingle_n,
-        coeffs=minhash_coeffs(num_hashes, seed),
-        want_set=True,
-    ).localCheckpoint()
+    per_doc = materialize(
+        per_doc_signatures(
+            df,
+            id_col,
+            text_col,
+            shingle_n,
+            coeffs=minhash_coeffs(num_hashes, seed),
+            want_set=True,
+        )
+    )
     sigs = per_doc.select("id", "minhash")
     cand = minhash_candidates(sigs, num_bands, max_bucket_size)
     sets = per_doc.select("id", F.col("sh_set").alias("sh"))
@@ -690,11 +687,10 @@ def simhash_near_dup_join(
     fps, both id-expansion sides, both hamming-0 sides) and carries no
     exchange ReuseExchange could share, so the fingerprint kernel
     would re-run per consumer. It is therefore materialized once
-    (``localCheckpoint`` — 16 B/doc, the same
-    corpus-becomes-signature-table bound as MinHash). Pass
-    ``fingerprints`` (an (id, fp) frame, e.g. an already-checkpointed
-    ``simhash64_rows``) to share one materialization across several
-    joins/attestations.
+    (16 B/doc, the same corpus-becomes-signature-table bound as
+    MinHash). Pass ``fingerprints`` (an (id, fp) frame, e.g. a
+    materialized ``simhash64_rows``) to share one materialization
+    across several joins/attestations.
 
     Fingerprints are computed per input row, so ``id_col`` must be
     unique: rows sharing an id would pair with each other as
@@ -703,7 +699,7 @@ def simhash_near_dup_join(
     fp = (
         fingerprints
         if fingerprints is not None
-        else simhash64_rows(df, id_col, text_col, shingle_n).localCheckpoint()
+        else materialize(simhash64_rows(df, id_col, text_col, shingle_n))
     )
     nc = max_hamming + 1
     widths = [64 // nc + (1 if i < 64 % nc else 0) for i in range(nc)]

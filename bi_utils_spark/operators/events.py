@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bi_utils_spark.operators.materialize import materialize
+
 
 def funnel_counts(
     events: DataFrame,
@@ -345,7 +347,10 @@ def rfm_scores(
     now = events.agg(
         F.unix_micros(F.max(ts_col)).alias("__now_us")
     )
-    per_user = (
+    # three percent-rank passes each make bounded driver fetches;
+    # they share one materialization of the per-user table instead of
+    # re-aggregating the stream
+    per_user = materialize(
         events.groupBy(F.col(user_col))
         .agg(
             F.unix_micros(F.max(ts_col)).alias("__last_us"),
@@ -363,10 +368,6 @@ def rfm_scores(
             ),
         )
         .drop("__now_us", "__last_us")
-        # three percent-rank passes each make bounded driver fetches;
-        # cut the lineage once so they share one materialization of
-        # the per-user table instead of re-aggregating the stream
-        .localCheckpoint(eager=False)
     )
 
     def tile(pr_col, invert=False):

@@ -69,50 +69,31 @@ def attach_percent_rank(
     job's probe count — rank VALUES are provably identical for any
     boundary set, so the default change is plan-only.
 
-    r12 plan-build shape: TWO bounded driver jobs and no persist
-    churn — the split-point probe runs shuffle-free over the RAW
-    column (row-weighted boundaries; placement only steers
-    parallelism, the rank arithmetic is exact for any boundary set)
-    instead of over a persisted counts aggregate, and the bucket-
-    totals fetch aggregates the counts subtree directly. The former
-    persist/unpersist pair per call is gone; the returned plan
-    recomputes the counts aggregate once at exec, as before. Offsets
-    stay baked literals so the plan carries NO unpartitioned window
-    (the repo canary) — see the lambda-reinlining note below for why
-    the fetch derives from the aggregate, never a keys-only
-    projection (measured 38 s vs 0.7 s at sf0.1 on quality_score
-    when the aggregate collapses)."""
+    Plan-build shape: TWO bounded driver jobs (the split-point probe
+    and the bucket-totals fetch) each aggregate the distinct-score
+    counts, and the returned plan aggregates them once more at exec.
+    No storage outlives the call. A caller whose ``df`` is expensive
+    to compute materializes it first (operators.materialize), so
+    all three read stored rows. Offsets stay baked literals so the
+    plan carries NO unpartitioned window (the repo canary) — see the
+    lambda-reinlining note below for why the fetch derives from the
+    aggregate, never a keys-only projection (measured 38 s vs 0.7 s
+    at sf0.1 on quality_score when the aggregate collapses)."""
     return _attach_percent_rank_impl(df, score_col, out_col, num_buckets)
 
 
 def _apr_plan(
     df: DataFrame, score_col: str, num_buckets: int
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Shared percent-rank machinery: the distinct-score counts frame
     with its range bucket attached — see attach_percent_rank.
 
-    The counts aggregate is persist()-ed so the split-point probe and
-    the bucket-totals fetch share one materialization of the upstream
-    scoring subtree; the caller unpersists it right after its last
-    driver probe (balanced persist/unpersist per call — no session
-    accumulation, the r4-ADVICE leak canary). The consumer's final
-    plan recomputes the counts aggregate once at exec. (A lazy
-    localCheckpoint would let the consumer reuse the probe's
-    partitions too, but on this Spark build checkpointed plan RDDs
-    stay strongly reachable JVM-side for the session lifetime —
-    measured: ContextCleaner never drains them even after the frames
-    are dropped and GC'd — which is the exact storage leak the canary
-    exists to catch.) The aggregate boundary also keeps the
-    lambda-reinlining collapse structurally impossible: __cnt is
-    aggregated, so the probe plans below can't be pruned into a raw
-    scan."""
+    The aggregate boundary keeps the lambda-reinlining collapse
+    structurally impossible: __cnt is aggregated, so the probe plans
+    below can't be pruned into a raw scan."""
     from pyspark.sql.types import NumericType
 
-    counts = (
-        df.groupBy(score_col)
-        .agg(F.count("*").alias("__cnt"))
-        .persist()
-    )
+    counts = df.groupBy(score_col).agg(F.count("*").alias("__cnt"))
     bounds: list[float] = []
     if isinstance(df.schema[score_col].dataType, NumericType) and num_buckets > 1:
         probs = [i / num_buckets for i in range(1, num_buckets)]
@@ -136,7 +117,7 @@ def _apr_plan(
         bucket = F.size(F.filter(barr, lambda x: x < sc))
     else:
         bucket = F.lit(0)
-    return counts.withColumn("__bk", bucket), counts
+    return counts.withColumn("__bk", bucket)
 
 
 def _attach_percent_rank_impl(
@@ -147,7 +128,7 @@ def _attach_percent_rank_impl(
             1024,
             int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
         )
-    b, counts = _apr_plan(df, score_col, num_buckets)
+    b = _apr_plan(df, score_col, num_buckets)
     w_in = (
         Window.partitionBy("__bk")
         .orderBy(score_col)
@@ -172,9 +153,6 @@ def _attach_percent_rank_impl(
         b.groupBy("__bk").agg(F.sum("__cnt").alias("__bt")).collect(),
         key=lambda r: r["__bk"],
     )
-    # Last driver probe done — release the shared materialization.
-    # The returned plan recomputes the counts aggregate once at exec.
-    counts.unpersist(blocking=False)
     total = sum(r["__bt"] for r in btot_rows)
     off_map: dict[int, int] = {}
     off = 0
@@ -246,14 +224,7 @@ def attach_percent_ranks(
             )
         ).alias("__mv")
     ).select(F.col("__mv.__m").alias("__m"), F.col("__mv.__v").alias("__v"))
-    # persist + balanced unpersist after the last driver probe (see
-    # _apr_plan for why not localCheckpoint: it leaks session-lifetime
-    # storage on this Spark build).
-    counts = (
-        melt.groupBy("__m", "__v")
-        .agg(F.count("*").alias("__cnt"))
-        .persist()
-    )
+    counts = melt.groupBy("__m", "__v").agg(F.count("*").alias("__cnt"))
     probs = [i / num_buckets for i in range(1, num_buckets)]
     qrows = (
         counts.groupBy("__m")
@@ -286,7 +257,6 @@ def attach_percent_ranks(
     btot_rows = (
         b.groupBy("__m", "__bk").agg(F.sum("__cnt").alias("__bt")).collect()
     )
-    counts.unpersist(blocking=False)
     totals: dict[int, int] = {}
     off_maps: dict[int, dict[int, int]] = {}
     for r in sorted(btot_rows, key=lambda r: (r["__m"], r["__bk"])):

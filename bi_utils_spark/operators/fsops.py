@@ -1,20 +1,23 @@
 """Shared filesystem + partition-overwrite primitives for the table
-maintenance tier (merge, widening, compaction) — one copy of the two
-disciplines those operators must never let diverge:
+maintenance tier (merge, widening, compaction, delta folds) — one copy
+of the two disciplines those operators must never let diverge:
 
 1. Hadoop FileSystem access (works on file://, hdfs://, s3a:// —
    local-only ``shutil``/``pathlib`` calls silently no-op on object
    storage);
-2. the read-then-overwrite safety dance: MATERIALIZE (cache + count)
-   before dynamically overwriting partition directories the plan just
-   read from, restoring the session's overwrite mode afterwards.
+2. the read-then-overwrite safety dance: MATERIALIZE before
+   dynamically overwriting partition directories the plan just read
+   from, with the overwrite mode set on the writer, never the session.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from bi_utils_spark.operators.materialize import materialize
 
 
 def hadoop_fs(spark, path: str):
@@ -36,14 +39,39 @@ def overwrite_partitions(
     """Dynamic-partition-overwrite ``df`` into ``path``: only the
     partition directories present in ``df`` are replaced; every other
     directory's files stay byte-identical. The frame is materialized
-    (cache + count) FIRST because the caller just read those same
-    directories — no job may read and overwrite the same files."""
-    df.cache()
-    df.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    FIRST because the caller just read those same directories — no
+    job may read and overwrite the same files."""
+    (
+        materialize(df)
+        .write.partitionBy(*partition_cols)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
+
+
+def fold_partitions(
+    spark,
+    path: str,
+    delta: DataFrame,
+    partition_col: str,
+    combine: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Fold ``delta`` into the table at ``path``, partitioned by
+    ``partition_col``: read ONLY the partitions the delta touches
+    (partition pruning), ``combine`` their rows unioned with the
+    delta's, and overwrite just those partitions. History never
+    moves; a missing table is created from the delta alone."""
+    from pyspark.sql.utils import AnalysisException
+
+    # the delta feeds the touched-partition collect and the fold
+    d = materialize(delta)
+    touched = [r[0] for r in d.select(partition_col).distinct().collect()]
     try:
-        df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        df.unpersist()
+        existing = spark.read.parquet(path).filter(
+            F.col(partition_col).isin(touched)
+        )
+        combined = combine(existing.unionByName(d))
+    except AnalysisException:
+        combined = d
+    overwrite_partitions(spark, combined, [partition_col], path)

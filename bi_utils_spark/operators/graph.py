@@ -20,11 +20,9 @@ the right trade at cluster diameters seen in dedup).
 Scale design:
 - per round: one shuffle of the edge list (join on node) + one
   aggregation — both keyed on node ids, broadcast-free, AQE-skew-safe;
-- ``localCheckpoint`` after every round cuts the lineage so round k
-  does not replay rounds 1..k-1 (iterative-algorithm requirement;
-  on a real cluster prefer ``spark.sparkContext.setCheckpointDir`` +
-  ``checkpoint()`` for fault tolerance — localCheckpoint trades that
-  for speed, fine where a failed job is simply rerun);
+- every round's labels are materialized, which cuts the lineage so
+  round k does not replay rounds 1..k-1 (iterative-algorithm
+  requirement);
 - convergence test is one count() per round on the changed-label
   frame — the only driver-side action, O(1) result.
 """
@@ -33,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bi_utils_spark.operators.materialize import materialize
 
 
 def connected_components(
@@ -80,18 +80,16 @@ def connected_components(
                 probe,
                 edges.schema[src].dataType.simpleString(),
             )
-    sym = (
+    sym = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
-    labels = (
+    labels = materialize(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         nbr_min = (
@@ -99,7 +97,7 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(nbr_min, labels["node"] == nbr_min["u"], "left")
             .select(
                 "node",
@@ -108,7 +106,7 @@ def connected_components(
                 ).alias("component"),
                 (F.col("nbr_component") < F.col("component")).alias("__chg"),
             )
-        ).localCheckpoint()
+        )
         changed = new_labels.filter(F.col("__chg")).count()
         labels = new_labels.drop("__chg")
         if changed == 0:
@@ -212,16 +210,15 @@ def pagerank(
     |nodes| outgrows a broadcast — set ``broadcast_ranks=False``)
     join of the |nodes|-row rank table against the edges plus one
     partial-aggregable groupBy(dst); the dangling term is a 1-row
-    broadcast. Rank frames localCheckpoint per iteration so lineage
+    broadcast. Rank frames are materialized per iteration so lineage
     stays flat. n_iter sequential jobs — the irreducible structure of
     power iteration.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n = nodes.count()
     if n == 0:
@@ -230,16 +227,16 @@ def pagerank(
             [], "node long, rank_q long, rank double"
         )
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    edges_deg = e.join(
-        F.broadcast(deg) if broadcast_ranks else deg, "src"
-    ).localCheckpoint(eager=False)
+    edges_deg = materialize(
+        e.join(F.broadcast(deg) if broadcast_ranks else deg, "src")
+    )
     base_q = (PR_SCALE - damping_pct * PR_SCALE // 100) // n
     ranks = nodes.select(
         "node", F.lit(PR_SCALE // n).cast("long").alias("rq")
     )
-    dangling = nodes.join(
-        deg, nodes["node"] == deg["src"], "left_anti"
-    ).localCheckpoint(eager=False)
+    dangling = materialize(
+        nodes.join(deg, nodes["node"] == deg["src"], "left_anti")
+    )
     for _ in range(n_iter):
         r = F.broadcast(ranks) if broadcast_ranks else ranks
         contribs = (
@@ -255,7 +252,7 @@ def pagerank(
                           dangling["node"] == F.col("__n"))
             .agg(F.coalesce(F.sum("rq"), F.lit(0)).alias("dang"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
             .crossJoin(F.broadcast(dang))
             .select(
@@ -270,7 +267,6 @@ def pagerank(
                 .cast("long")
                 .alias("rq"),
             )
-            .localCheckpoint(eager=False)
         )
     return ranks.select(
         "node",
@@ -310,9 +306,9 @@ def triangle_counts(
     counts only — never adjacency lists — cross a shuffle.
     """
     # the edge set is reused four times (degrees, orientation,
-    # closure probe, coefficient join) — cut the lineage once so the
-    # distinct is not recomputed per consumer
-    e = canonical_edges(edges, src, dst).localCheckpoint(eager=False)
+    # closure probe, coefficient join) — materialized so the distinct
+    # is not recomputed per consumer
+    e = materialize(canonical_edges(edges, src, dst))
     deg = (
         e.select(
             F.explode(F.array(F.col("a"), F.col("b"))).alias("v")
@@ -391,10 +387,10 @@ def label_propagation(
 
     Per round: one edge-label join + one (node, label) count + one
     per-node arg-min/max — all keyed shuffles, no broadcasts of
-    corpus-sized state; ``localCheckpoint`` bounds lineage. Returns
-    (node, label).
+    corpus-sized state; materializing each round bounds lineage.
+    Returns (node, label).
     """
-    e = canonical_edges(edges, src, dst).localCheckpoint(eager=False)
+    e = materialize(canonical_edges(edges, src, dst))
     sym = e.unionAll(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).select(F.col("a").alias("s"), F.col("b").alias("d"))
@@ -424,14 +420,10 @@ def label_propagation(
                 )
             ).alias("__m")
         ).select("node", (-F.col("__m.nl")).alias("__new"))
-        labels = (
-            labels.join(pick, "node", "left")
-            .select(
+        labels = materialize(
+            labels.join(pick, "node", "left").select(
                 "node",
-                F.coalesce(F.col("__new"), F.col("label")).alias(
-                    "label"
-                ),
+                F.coalesce(F.col("__new"), F.col("label")).alias("label"),
             )
-            .localCheckpoint(eager=False)
         )
     return labels

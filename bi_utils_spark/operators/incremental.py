@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bi_utils_spark.operators.fsops import fold_partitions
+
 
 def rollup_delta(
     delta: DataFrame,
@@ -86,31 +88,13 @@ def apply_rollup_delta(
     delta's, re-combines, and rewrites just those partitions
     (partitionOverwriteMode=dynamic). History never moves.
     """
-    d = rollup_delta(delta, ts_col, bucket, group_cols, sum_cols, distinct_cols)
-    d = d.persist()
-    dates = [r["bucket_date"] for r in d.select("bucket_date").distinct().collect()]
-
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        existing = spark.read.parquet(target_path).filter(
-            F.col("bucket_date").isin(dates)
-        )
-        combined = _combine(
-            existing.unionByName(d), group_cols, sum_cols, distinct_cols
-        )
-    except AnalysisException:
-        combined = d
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        combined.write.mode("overwrite").partitionBy("bucket_date").parquet(
-            target_path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        d.unpersist()
+    fold_partitions(
+        spark,
+        target_path,
+        rollup_delta(delta, ts_col, bucket, group_cols, sum_cols, distinct_cols),
+        "bucket_date",
+        lambda rows: _combine(rows, group_cols, sum_cols, distinct_cols),
+    )
 
 
 def read_rollup(

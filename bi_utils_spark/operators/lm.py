@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bi_utils_spark.operators.fsops import fold_partitions
+from bi_utils_spark.operators.materialize import materialize
 from bi_utils_spark.operators.textstats import tokens
 
 
@@ -479,12 +481,12 @@ def bpe_train(
     aggregation over the VOCAB table plus a single-row driver action
     (the argmax pair), then a map-only symbol rewrite. n_merges
     sequential vocab-sized jobs — the irreducible sequential structure
-    of BPE — with a lazy localCheckpoint every ``checkpoint_every``
+    of BPE — with the state materialized every ``checkpoint_every``
     steps so plan depth stays bounded (the mixing.py lineage-diet
     pattern). Ties break by pair text, so the merge sequence is
     deterministic and engine-portable.
 
-    The initial state is EAGERLY localCheckpoint-ed: the model table
+    The initial state is materialized: the model table
     is vocab-bounded by construction, but its LINEAGE reaches back to
     the corpus aggregation that built it — without the cut, every one
     of the n_merges sequential argmax jobs would re-run that corpus
@@ -493,23 +495,23 @@ def bpe_train(
 
     Size-tiered (r12, the connected_components discipline): a plain
     ``limit(driver_max_vocab + 1).collect()`` probe over the
-    checkpointed state pulls the (term, c) rows; when the vocab fits
+    materialized state pulls the (term, c) rows; when the vocab fits
     ``driver_max_vocab`` the whole merge loop runs driver-side
     (:func:`_bpe_train_driver`) — n_merges sequential argmax jobs
     plus the final state job collapse into ZERO further Spark jobs.
     Identical results by construction (equality property-tested).
     The probe is Spark's escalating take (one partition first, more
-    per round) over the checkpoint's cached blocks, so an over-bound
+    per round) over the materialized blocks, so an over-bound
     vocab costs the distributed path a few cheap jobs, never a second
     corpus pass. ``driver_max_vocab=0`` forces the distributed loop.
     """
     spark = model.sparkSession
-    state = model.select(
-        "term", _spaced_symbols("term").alias("spaced"), "c"
-    ).localCheckpoint(eager=True)
+    state = materialize(
+        model.select("term", _spaced_symbols("term").alias("spaced"), "c")
+    )
     if driver_max_vocab > 0:
         # Plain escalating take (r13, per r12 ADVICE): the child is a
-        # scan of the eager checkpoint above — re-running a round is
+        # scan of the materialized state above — re-running a round is
         # a cached-block read, and an over-bound vocab exits after
         # probing ~1 partition instead of shipping LocalLimit'd rows
         # from every partition through a single-partition exchange.
@@ -549,7 +551,7 @@ def bpe_train(
             "spaced", _apply_merge(F.col("spaced"), a, b)
         )
         if step_no % checkpoint_every == 0:
-            state = state.localCheckpoint(eager=False)
+            state = materialize(state)
     from bi_utils_spark.operators.localrel import local_df
 
     merges_df = local_df(
@@ -578,33 +580,15 @@ def apply_model_delta(
     scratch model of the concatenated corpora (associativity of
     counts; asserted in tests).
     """
-    d = delta_model.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets))
-    ).persist()
-    touched = [r["term_bucket"] for r in d.select("term_bucket").distinct().collect()]
-
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        existing = spark.read.parquet(target_path).filter(
-            F.col("term_bucket").isin(touched)
-        )
-        combined = (
-            existing.unionByName(d)
-            .groupBy("term", "term_bucket")
-            .agg(F.sum("c").alias("c"))
-        )
-    except AnalysisException:
-        combined = d
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        combined.write.mode("overwrite").partitionBy("term_bucket").parquet(
-            target_path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        d.unpersist()
+    fold_partitions(
+        spark,
+        target_path,
+        delta_model.withColumn(
+            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets))
+        ),
+        "term_bucket",
+        lambda rows: rows.groupBy("term", "term_bucket").agg(F.sum("c").alias("c")),
+    )
 
 
 def read_model(spark, target_path: str) -> DataFrame:

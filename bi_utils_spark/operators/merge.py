@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bi_utils_spark.operators.materialize import materialize
+
 # The merge-managed timestamp column names (reference `utils.py:270`):
 # set by the merge itself, never taken from the source. Shared with
 # txtable's schema-evolution logic so the two contracts cannot drift.
@@ -157,27 +159,34 @@ def merge_into_path(
     insert branch (the reference assumed pre-created DWH tables; an
     engine should not).
     """
+    target = _target_or_empty(spark, target_path, source, kwargs)
+    # Materialize before overwriting the input path we just read.
+    materialize(merge_upsert(target, source, pks, **kwargs)).write.mode(
+        "overwrite"
+    ).parquet(target_path)
+
+
+def _target_or_empty(
+    spark, target_path: str, source: DataFrame, kwargs: dict, pred=None
+) -> DataFrame:
+    """The parquet target at ``target_path`` (rows matching ``pred``),
+    or, when no table is there yet, an empty frame of the source's
+    columns plus the merge's two managed timestamp columns."""
     from pyspark.sql.types import StructField, StructType, TimestampType
     from pyspark.sql.utils import AnalysisException
 
     try:
         target = spark.read.parquet(target_path)
+        return target if pred is None else target.filter(pred)
     except AnalysisException:
-        ins, upd = kwargs.get("managed_ts", ("insert_timestamp", "update_timestamp"))
-        schema = StructType(
-            list(source.schema.fields)
-            + [
-                StructField(ins, TimestampType(), True),
-                StructField(upd, TimestampType(), True),
-            ]
+        managed = (
+            kwargs.get("insert_ts_col", INSERT_TS_COL),
+            kwargs.get("update_ts_col", UPDATE_TS_COL),
         )
-        target = spark.createDataFrame([], schema)
-    merged = merge_upsert(target, source, pks, **kwargs)
-    # Materialize before overwriting the input path we just read.
-    merged.cache()
-    merged.count()
-    merged.write.mode("overwrite").parquet(target_path)
-    merged.unpersist()
+        schema = StructType(
+            [*source.schema.fields, *(StructField(c, TimestampType()) for c in managed)]
+        )
+        return spark.createDataFrame([], schema)
 
 
 def merge_into_partitioned_path(
@@ -209,8 +218,6 @@ def merge_into_partitioned_path(
     """
     from functools import reduce
 
-    from pyspark.sql.utils import AnalysisException
-
     if isinstance(pks, str):
         pks = [c.strip() for c in pks.split(",")]
     missing = [c for c in partition_cols if c not in source.columns]
@@ -218,31 +225,17 @@ def merge_into_partitioned_path(
         raise ValueError(f"merge: partition cols {missing} missing from source")
 
     touched = source.select(*partition_cols).distinct().collect()
-    try:
-        pred = reduce(
-            lambda a, b: a | b,
-            [
-                reduce(
-                    lambda a, b: a & b,
-                    [F.col(c) == F.lit(r[c]) for c in partition_cols],
-                )
-                for r in touched
-            ],
-        )
-        target = spark.read.parquet(target_path).filter(pred)
-    except AnalysisException:
-        from pyspark.sql.types import StructField, StructType, TimestampType
-
-        ins = kwargs.get("insert_ts_col", "insert_timestamp")
-        upd = kwargs.get("update_ts_col", "update_timestamp")
-        schema = StructType(
-            list(source.schema.fields)
-            + [
-                StructField(ins, TimestampType(), True),
-                StructField(upd, TimestampType(), True),
-            ]
-        )
-        target = spark.createDataFrame([], schema)
+    pred = reduce(
+        lambda a, b: a | b,
+        [
+            reduce(
+                lambda a, b: a & b,
+                [F.col(c) == F.lit(r[c]) for c in partition_cols],
+            )
+            for r in touched
+        ],
+    )
+    target = _target_or_empty(spark, target_path, source, kwargs, pred)
     merged = merge_upsert(target, source, pks, **kwargs)
     # Shared read-then-overwrite discipline (materialize first, only
     # the partition dirs present in `merged` replaced — bootstrap

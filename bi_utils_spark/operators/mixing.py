@@ -33,6 +33,7 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bi_utils_spark.operators.materialize import materialize
 from bi_utils_spark.operators.splits import _bucket_hex
 from bi_utils_spark.operators.textstats import token_count
 
@@ -225,10 +226,10 @@ def curriculum_order(
     ``reuse`` (default True, VERDICT r4 #6): the ranked-and-banded
     frame feeds TWO consumers — the per-(phase, bucket) counts and
     the final position join — which would otherwise each re-run the
-    upstream scoring + rank join. A lazy ``localCheckpoint`` at the
-    fan-out point materializes it once (the q_llm_pipeline shared-
-    stage discipline); pass ``reuse=False`` to keep the plan fully
-    lazy (e.g. when the caller already checkpointed upstream).
+    upstream scoring + rank join. It is materialized once at the
+    fan-out point (the q_llm_pipeline shared-stage discipline); pass
+    ``reuse=False`` to keep the plan fully lazy (e.g. when the caller
+    already materialized upstream).
     """
     from bi_utils_spark.operators.filtering import attach_percent_rank
 
@@ -244,7 +245,7 @@ def curriculum_order(
         .withColumn("__b", F.substring("__h", 1, bucket_hex_chars))
     )
     if reuse:
-        staged = staged.localCheckpoint(eager=False)
+        staged = materialize(staged)
     bcnt = staged.groupBy("phase", "__b").agg(F.count("*").alias("__c"))
     bw = (
         Window.partitionBy("phase")

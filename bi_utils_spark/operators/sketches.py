@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bi_utils_spark.operators.materialize import materialize
+
 _HEX = 13  # 52 bits — exact in a double, portable across engines
 
 
@@ -147,9 +149,7 @@ def heavy_hitters(
     (every key writes `depth` cells, so sum(cnt) = depth * N) — the
     corpus is scanned exactly once, no separate count pass.
     """
-    sketch = countmin_table(df, key_col, depth, width).localCheckpoint(
-        eager=False
-    )
+    sketch = materialize(countmin_table(df, key_col, depth, width))
     n_row = sketch.agg(
         (F.sum("cnt") / F.lit(depth)).cast("long").alias("__n")
     )

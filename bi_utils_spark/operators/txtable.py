@@ -59,6 +59,7 @@ Why this scales to 100 TB:
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -69,9 +70,13 @@ from dataclasses import dataclass, field
 from typing import Sequence
 from urllib.parse import unquote
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from bi_utils_spark.operators.materialize import materialize
 
 LOG_DIR = "_txlog"
 DATA_DIR = "data"
@@ -776,9 +781,9 @@ def _apply_identity(
     added, {col: new high-water mark}).
 
     Distributed allocation with NO global sort and NO driver
-    round-trip of data: the delta is pinned with one eager
-    localCheckpoint (so partition sizes and intra-partition order are
-    stable across jobs), per-partition row counts (one tiny count
+    round-trip of data: the delta is pinned with one materialization
+    (so partition sizes and intra-partition order are stable across
+    jobs), per-partition row counts (one tiny count
     job) become a broadcast offset map, and each row's dense rank is
     pure column arithmetic on ``monotonically_increasing_id`` (which
     encodes partition_id << 33 | row_offset). Everything stays in
@@ -792,7 +797,7 @@ def _apply_identity(
                 f"identity column {col!r} is GENERATED ALWAYS — "
                 "writers must not supply it"
             )
-    df = df.localCheckpoint(eager=True)
+    df = materialize(df)
     counts = (
         df.select(F.spark_partition_id().alias("__p"))
         .groupBy("__p")
@@ -2526,6 +2531,36 @@ def _typed_change_rows(
     return keyed.select(*cols, F.col(CDF_TYPE_COL))
 
 
+def _retry_on_vacuumed_snapshot(verb):
+    """Row-level verbs read their snapshot's data files and deletion-
+    vector sidecars in Spark jobs well after resolving it. When a
+    concurrent commit plus a vacuum removes one of those files first,
+    the job dies on the missing file. That is the same lost optimistic
+    race a commit-time conflict reports, so it surfaces as
+    ConcurrentWriteError, chained from the engine error, and the
+    caller's retry resolves a fresh snapshot. The snapshot checked is
+    the latest version when the verb starts, the one it resolves."""
+
+    @functools.wraps(verb)
+    def guarded(spark, path, *args, **kwargs):
+        read_version = latest_version(path)
+        try:
+            return verb(spark, path, *args, **kwargs)
+        except (PySparkException, Py4JJavaError, FileNotFoundError) as e:
+            moved = latest_version(path) > read_version
+            files = _fold(path, read_version).files if moved else {}
+            dvs = [m["dv"]["path"] for m in files.values() if m.get("dv")]
+            if any(not os.path.exists(os.path.join(path, r)) for r in [*files, *dvs]):
+                raise ConcurrentWriteError(
+                    f"files of snapshot {read_version} at {path} were "
+                    "vacuumed after a concurrent commit"
+                ) from e
+            raise
+
+    return guarded
+
+
+@_retry_on_vacuumed_snapshot
 def merge_tx_table(
     spark: SparkSession,
     path: str,
@@ -2698,14 +2733,14 @@ def merge_tx_table(
     def _allocate(merged: DataFrame) -> tuple[DataFrame, dict]:
         # identity under MERGE: matched rows kept their target id
         # through the fold; inserted rows surfaced with a NULL id.
-        # One eager checkpoint materializes the rewrite set (so the
-        # split below doesn't run the merge join twice), then only
+        # One materialization of the rewrite set (so the split
+        # below doesn't run the merge join twice), then only
         # the null-id slice pays allocation. An interleaved
         # allocation is a commit-time CONFLICT, not a rebase — ids
         # are baked into the staged files (see _rewrite_commit).
         if not snap.identity:
             return merged, {}
-        merged = merged.localCheckpoint(eager=True)
+        merged = materialize(merged)
         idc = list(snap.identity)
         have = None
         for c in idc:
@@ -2999,6 +3034,43 @@ def _dv_write_distributed(
     ]
 
 
+def _dv_records(
+    path: str, matched: DataFrame, want: dict, n_new: int, max_dv_rows: int
+) -> list[dict]:
+    """The new sidecars for the (__f, __pos) rows of ``matched``, each
+    the UNION of its file's old and new masked positions. Up to
+    ``max_dv_rows`` positions pack through the driver (8 B/row, one
+    round trip); beyond that each file's task writes its own sidecar
+    (`_dv_write_distributed`) and the driver sees only pointers."""
+    if n_new > max_dv_rows:
+        return _dv_write_distributed(path, matched, want)
+    import numpy as np
+
+    def _pack(key, pdf):
+        import pandas as pd
+
+        pos = np.unique(pdf["__pos"].to_numpy(dtype="int64"))
+        return pd.DataFrame({"f": [key[0]], "payload": [pos.astype("<i8").tobytes()]})
+
+    abs_to_rel = {os.path.abspath(os.path.join(path, rel)): rel for rel in want}
+    packed = (
+        matched.select("__f", "__pos")
+        .groupBy("__f")
+        .applyInPandas(_pack, "f string, payload binary")
+        .collect()
+    )
+    records = []
+    for r in packed:
+        rel = abs_to_rel[r["f"]]
+        pos = np.frombuffer(r["payload"], dtype="<i8")
+        old = want[rel].get("dv")
+        if old:
+            pos = np.union1d(pos, _dv_decode(_dv_load(path, old["path"])))
+        records.append(_dv_write(path, rel, pos))
+    return records
+
+
+@_retry_on_vacuumed_snapshot
 def delete_from_table(
     spark: SparkSession,
     path: str,
@@ -3153,54 +3225,17 @@ def delete_from_table(
     if snap.cdc_enabled:
         # ONE materialization shared by the count, the position pack,
         # and the change-row staging — not three predicate scans
-        matched_full = live.where(
-            F.coalesce(cond, F.lit(False))
-        ).localCheckpoint(eager=True)
+        matched_full = materialize(live.where(F.coalesce(cond, F.lit(False))))
         matched = matched_full.select("__f", "__pos")
     n_new = matched.count()
     if n_new == 0:
         return none
-    if n_new > max_dv_rows:
-        # too many positions to pack through the driver — write the
-        # sidecars where the data is; the driver sees only pointers
-        dv_records = _dv_write_distributed(path, matched, want)
-    else:
-
-        def _pack(key, pdf):
-            import numpy as np
-            import pandas as pd
-
-            pos = np.unique(pdf["__pos"].to_numpy(dtype="int64"))
-            return pd.DataFrame(
-                {
-                    "f": [key[0]],
-                    "n": [int(pos.size)],
-                    "payload": [pos.astype("<i8").tobytes()],
-                }
-            )
-
-        packed = (
-            matched.groupBy("__f")
-            .applyInPandas(_pack, "f string, n long, payload binary")
-            .collect()
-        )
-        import numpy as np
-
-        dv_records = []
-        for r in packed:
-            rel = abs_to_rel[r["f"]]
-            new_pos = np.frombuffer(r["payload"], dtype="<i8")
-            old = want[rel].get("dv")
-            if old:
-                new_pos = np.union1d(
-                    new_pos, _dv_decode(_dv_load(path, old["path"]))
-                )
-            dv_records.append(_dv_write(path, rel, new_pos))
+    dv_records = _dv_records(path, matched, want, n_new, max_dv_rows)
     up = _protocol_upgrade(snap, reader=["deletionVectors"])
     extra = {"predicate": pred_repr, **({"protocol": up} if up else {})}
     if snap.cdc_enabled:
         # the newly-masked rows ARE the change rows (read back from
-        # the checkpointed match — existing DVs were applied by the
+        # the materialized match — existing DVs were applied by the
         # live read, so a re-run emits nothing)
         gone = matched_full.select(
             *[F.col(f.name) for f in schema.fields]
@@ -3224,6 +3259,7 @@ def delete_from_table(
     }
 
 
+@_retry_on_vacuumed_snapshot
 def update_table(
     spark: SparkSession,
     path: str,
@@ -3363,7 +3399,7 @@ def update_table(
         if snap.cdc_enabled:
             # one materialization feeds the constraint probe, the
             # rewrite stage, and both change-row legs
-            pre_rows = pre_rows.localCheckpoint(eager=True)
+            pre_rows = materialize(pre_rows)
         post = _updated(pre_rows)
         _enforce_constraints(post, snap.constraints)
         rewritten = src.where(~matched_pred).unionByName(post)
@@ -3408,7 +3444,7 @@ def update_table(
     if snap.cdc_enabled:
         # one materialization feeds the count, the post-image stage,
         # the position pack, and the change-row staging
-        matched = matched.localCheckpoint(eager=True)
+        matched = materialize(matched)
     n_new = matched.count()
     if n_new == 0:
         return none
@@ -3423,44 +3459,7 @@ def update_table(
         table_schema=schema,
     )
 
-    if n_new > max_dv_rows:
-        # positions stream through executors; driver sees pointers
-        dv_records = _dv_write_distributed(path, matched, want)
-    else:
-
-        def _pack(key, pdf):
-            import numpy as np
-            import pandas as pd
-
-            pos = np.unique(pdf["__pos"].to_numpy(dtype="int64"))
-            return pd.DataFrame(
-                {
-                    "f": [key[0]],
-                    "payload": [pos.astype("<i8").tobytes()],
-                }
-            )
-
-        packed = (
-            matched.select("__f", "__pos")
-            .groupBy("__f")
-            .applyInPandas(_pack, "f string, payload binary")
-            .collect()
-        )
-        import numpy as np
-
-        abs_to_rel = {
-            os.path.abspath(os.path.join(path, rel)): rel for rel in want
-        }
-        dv_records = []
-        for r in packed:
-            rel = abs_to_rel[r["f"]]
-            new_pos = np.frombuffer(r["payload"], dtype="<i8")
-            old = want[rel].get("dv")
-            if old:
-                new_pos = np.union1d(
-                    new_pos, _dv_decode(_dv_load(path, old["path"]))
-                )
-            dv_records.append(_dv_write(path, rel, new_pos))
+    dv_records = _dv_records(path, matched, want, n_new, max_dv_rows)
     up = _protocol_upgrade(snap, reader=["deletionVectors"])
     extra = {
         "predicate": pred_repr,

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bi_utils_spark.functions.litarrays import lit_double_array
+from bi_utils_spark.operators.materialize import materialize
 
 _MANIFEST = "_MANIFEST.json"
 
@@ -225,15 +226,8 @@ def ivf_index_probe_many(
         F.col("id").alias("__qid"), F.col("u").alias("__qu"), "cell_id"
     )
     # One materialization feeds BOTH the probed-cell collect and the
-    # candidate join. This must be a CHECKPOINT, not a lazy persist:
-    # probe_cells is collected from the first materialization, and a
-    # lost-then-recomputed cache block over a NONDETERMINISTIC query
-    # source (sample(), unordered limit()) could re-assign queries to
-    # cells outside probe_cells — silently dropping their candidates.
-    # The checkpoint pins exactly one assignment; on executor loss
-    # the job fails loudly and the caller retries, which beats
-    # silent-wrong top-k.
-    q = q.localCheckpoint(eager=True)
+    # candidate join, so both see one assignment of queries to cells.
+    q = materialize(q)
     probe_cells = sorted(
         int(r["cell_id"])
         for r in q.select("cell_id").distinct().collect()

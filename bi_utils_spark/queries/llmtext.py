@@ -552,6 +552,7 @@ def q_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_score,
         token_count,
     )
+    from bi_utils_spark.operators.materialize import materialize
 
     docs = load(spark, sf_dir, "documents")
     cleaned = docs.select(
@@ -561,12 +562,9 @@ def q_llm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     # The deduped corpus feeds TWO consumers (the Jaccard self-join
-    # and the final canonical anti-join); checkpoint it so the
+    # and the final canonical anti-join); materialize it so the
     # clean+window-dedup chain runs once, not once per consumer.
-    # localCheckpoint storage is freed with the frame (no
-    # catalog-cache leak); a production run would write this stage
-    # out as the exact-dedup table anyway.
-    uniq = dedup_exact(cleaned, ["text"], keep_order_col="doc_id").localCheckpoint()
+    uniq = materialize(dedup_exact(cleaned, ["text"], keep_order_col="doc_id"))
     pairs = jaccard_similarity_join(uniq, "doc_id", "text", threshold=0.5, shingle_n=3)
     kept = dedup_near_canonical(uniq, pairs)
     return (

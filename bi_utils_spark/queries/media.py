@@ -362,17 +362,15 @@ def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash_near_dup_pairs,
         synthesize_phash_test_images,
     )
+    from bi_utils_spark.operators.materialize import materialize
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
     # the summary fans out over media (payload dedup, class count)
     # and hashes (pairs consume it twice via the band self-join, plus
-    # n_images) — materialize each ONCE (lazy localCheckpoint, the
-    # mixing.py lineage-diet pattern) so the codec mapInPandas stages
-    # don't re-run per consumer (measured 6.5 -> ~2 s at sf0.1)
-    media = synthesize_phash_test_images(docs).localCheckpoint(
-        eager=False
-    )
-    hashes = perceptual_hashes(media).localCheckpoint(eager=False)
+    # n_images) — materialize each ONCE so the codec mapInPandas
+    # stages don't re-run per consumer (measured 6.5 -> ~2 s at sf0.1)
+    media = materialize(synthesize_phash_test_images(docs))
+    hashes = materialize(perceptual_hashes(media))
     pairs = phash_near_dup_pairs(hashes, max_hamming=3)
     n_images = hashes.agg(F.count("*").alias("n_images"))
     n_classes = media.agg(F.countDistinct("cls").alias("n_classes"))

@@ -181,12 +181,13 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash64_rows,
         simhash_near_dup_join,
     )
+    from bi_utils_spark.operators.materialize import materialize
 
     docs = load(spark, sf_dir, "documents")
     # One fingerprint pass shared by the banded join (5 plan consumers)
     # and the brute-force check (2 sides): 16 B/doc materialized once
     # instead of re-running the 65-lane aggregation per consumer.
-    fp = simhash64_rows(docs, "doc_id", "text").localCheckpoint()
+    fp = materialize(simhash64_rows(docs, "doc_id", "text"))
     banded = simhash_near_dup_join(
         docs, "doc_id", "text", max_hamming=3, fingerprints=fp
     ).select("id_a", "id_b")

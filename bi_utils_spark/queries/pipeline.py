@@ -710,10 +710,14 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_quality_tophalf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bi_utils_spark.operators.filtering import attach_percent_rank
+    from bi_utils_spark.operators.materialize import materialize
     from bi_utils_spark.operators.textstats import quality_score
 
     docs = load(spark, sf_dir, "documents")
-    scored = docs.select("doc_id", quality_score("text").alias("quality"))
+    # the scores feed both rank probes and the final join
+    scored = materialize(
+        docs.select("doc_id", quality_score("text").alias("quality"))
+    )
     ranked = attach_percent_rank(scored, "quality", "pr")
     return ranked.filter(F.col("pr") >= 0.5).select("doc_id", "quality", "pr")
 
@@ -1576,16 +1580,15 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bi_utils_spark.operators.lm import unigram_logprob_scores
     from bi_utils_spark.operators.mixing import curriculum_order
+    from bi_utils_spark.operators.materialize import materialize
 
     docs = load(spark, sf_dir, "documents")
-    # one lazy checkpoint: the scoring subtree feeds the rank-CDF
+    # one materialization: the scoring subtree feeds the rank-CDF
     # build fetches AND both curriculum branches (the q_llm_pipeline
     # shared-stage discipline) — down to 3 exchanges in the final
     # plan (see BENCH_PLANS.json), from 23 without any reuse
-    scores = (
-        unigram_logprob_scores(docs)
-        .select("doc_id", "avg_logprob")
-        .localCheckpoint(eager=False)
+    scores = materialize(
+        unigram_logprob_scores(docs).select("doc_id", "avg_logprob")
     )
     return curriculum_order(scores, "doc_id", "avg_logprob").select(
         "doc_id", "phase", "pos"

@@ -1889,13 +1889,14 @@ def q_simhash_near_dup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         simhash64_rows,
         simhash_near_dup_join,
     )
+    from bi_utils_spark.operators.materialize import materialize
 
     docs = load(spark, sf_dir, "documents")
     keys = ["id_a", "id_b"]
     # One fingerprint pass shared by the capped AND uncapped joins
     # (5 plan consumers each): without it the 65-lane aggregation
     # re-runs up to 10x across the two banding plans.
-    fp = simhash64_rows(docs, "doc_id", "text").localCheckpoint()
+    fp = materialize(simhash64_rows(docs, "doc_id", "text"))
     uncapped = simhash_near_dup_join(
         docs, "doc_id", "text", max_hamming=3, fingerprints=fp
     ).select(*keys)

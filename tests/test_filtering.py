@@ -103,12 +103,12 @@ def test_approx_thresholds_and_filter(spark):
 
 def test_percent_rank_does_not_leak_cached_frames(spark):
     """ADVICE r4: every call used to persist the counts frame for the
-    session lifetime with no release path. r12 holds the counts in a
-    lazy localCheckpoint instead: storage lives exactly as long as
-    the returned plan and is released by the ContextCleaner once the
-    consumer drops it — assert that dropping the frames actually
-    drains storage back to the baseline (the session-lifetime leak
-    the old persist had would survive this)."""
+    session lifetime with no release path. attach_percent_rank now
+    stores nothing: its two driver probes and the returned plan each
+    aggregate the counts. Assert that the calls leave storage at the
+    baseline. Storage freed only by GC cannot pass this probe: each
+    getPersistentRDDs() map sits in a py4j reference cycle and pins
+    every RDD it lists until Python's cyclic GC runs."""
     import gc
     import time
 

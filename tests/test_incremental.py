@@ -84,3 +84,50 @@ def test_hll_estimate_close_to_exact(spark, sf_dir):
         F.countDistinct("user_id").alias("exact"),
     ).first()
     assert abs(r["approx"] - r["exact"]) / max(r["exact"], 1) < 0.05
+
+
+def test_dynamic_overwrite_leaves_session_conf_alone(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """overwrite_partitions asks for dynamic partition overwrite on the
+    writer, so it and the two delta folds built on it never set the
+    session-wide key another thread may be writing under."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from bi_utils_spark.operators.fsops import overwrite_partitions
+    from bi_utils_spark.operators.lm import apply_model_delta, unigram_model
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    keys_set = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, k, v):
+        keys_set.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    try:
+        path = str(tmp_path / "parts")
+        schema = "v int, p string"
+        spark.createDataFrame([(1, "a"), (2, "b")], schema).write.partitionBy(
+            "p"
+        ).parquet(path)
+        overwrite_partitions(
+            spark, spark.createDataFrame([(3, "a")], schema), ["p"], path
+        )
+        got = sorted((r["v"], r["p"]) for r in spark.read.parquet(path).collect())
+        assert got == [(2, "b"), (3, "a")]  # only partition a replaced
+        day = _events(spark, sf_dir).filter(F.to_date("ts") == "2024-01-01")
+        apply_rollup_delta(
+            spark, str(tmp_path / "rollup"), day,
+            ts_col="ts", bucket="1 hour", group_cols=["event_type"],
+        )
+        docs = spark.createDataFrame([(1, "a b a")], ["doc_id", "text"])
+        apply_model_delta(spark, str(tmp_path / "model"), unigram_model(docs))
+        assert key not in keys_set
+        assert spark.conf.get(key) == "static"
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(key, prev)

@@ -340,3 +340,19 @@ def test_merge_partition_scoped_missing_partition_col_raises(spark, tmp_path):
         merge_into_partitioned_path(
             spark, str(tmp_path / "none"), source, ["id"], ["pdate"]
         )
+
+
+def test_merge_into_path_bootstrap_keeps_custom_timestamp_names(spark, tmp_path):
+    # the first merge into an empty path creates the table with the
+    # managed timestamp columns the caller named, not the defaults
+    from bi_utils_spark.operators.merge import merge_into_path
+
+    path = str(tmp_path / "boot")
+    source = spark.createDataFrame([(1, "x")], ["id", "payload"])
+    merge_into_path(
+        spark, path, source, ["id"], now=F.lit(T1),
+        insert_ts_col="ins_ts", update_ts_col="upd_ts",
+    )
+    rows = spark.read.parquet(path).collect()
+    assert sorted(rows[0].asDict()) == ["id", "ins_ts", "payload", "upd_ts"]
+    assert len(rows) == 1 and str(rows[0]["ins_ts"]) == T1

@@ -1240,3 +1240,49 @@ def test_materialize_after_update_keeps_result(spark, ptable):
     assert not any(
         m.get("dv") for m in tx._fold(ptable).files.values()
     )
+
+
+# ---------------------------------------------------------------------------
+# a snapshot vacuumed under a running verb
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "verb",
+    [
+        lambda spark, p: tx.delete_from_table(spark, p, F.col("k") == 2),
+        lambda spark, p: tx.update_table(spark, p, "k = 2", {"v": "v + 1"}),
+        lambda spark, p: tx.merge_tx_table(
+            spark, p, _rows(spark, (2, "A", 222)), ["k"]
+        ),
+    ],
+    ids=["delete", "update", "merge"],
+)
+def test_vacuumed_snapshot_raises_concurrent_write(
+    spark, tmp_path, monkeypatch, verb
+):
+    """A racing commit plus a vacuum that removes the DV sidecar the
+    verb's snapshot lists, after the verb resolved it: the verb's
+    Spark job dies on the missing file, which must surface as the
+    retryable ConcurrentWriteError, and a retry must succeed."""
+    ptable = str(tmp_path / "one_file")
+    rows = [(k, "A", 10 * k) for k in range(1, 7)]
+    tx.create_table(_rows(spark, *rows).coalesce(1), ptable)
+    tx.delete_from_table(spark, ptable, F.col("k") == 1)
+    real = tx._dv_positions_frame
+    raced = []
+
+    def racing(spark_, path, dvd):
+        if not raced:
+            raced.append(True)
+            tx.delete_from_table(spark, ptable, F.col("k") == 3)
+            tx.vacuum_table(ptable, retain_versions=1, stray_age_seconds=0.0)
+        return real(spark_, path, dvd)
+
+    monkeypatch.setattr(tx, "_dv_positions_frame", racing)
+    with pytest.raises(tx.ConcurrentWriteError) as err:
+        verb(spark, ptable)
+    assert raced and err.value.__cause__ is not None
+    verb(spark, ptable)
+    assert set(_as_dict(tx.read_table(spark, ptable))) >= {4, 5, 6}
+    assert not {1, 3} & set(_as_dict(tx.read_table(spark, ptable)))
