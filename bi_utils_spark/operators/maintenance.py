@@ -29,6 +29,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def list_partition_files(
@@ -149,12 +150,14 @@ def compact_partitioned_path(
     Σ groups tasks — each output file gets its own task, so file
     sizes land within a hash-uniformity factor of ``target_bytes``.
 
-    Row→partition matching reads the table with partition-column type
-    inference DISABLED, so the column value is the directory's text
-    verbatim (``id=00123`` stays ``"00123"`` — inference would render
-    it back as ``123``, silently matching nothing AND renaming the
-    directory on rewrite); NULL partitions match Hive's
-    ``__HIVE_DEFAULT_PARTITION__``. As a backstop against any
+    Row→partition matching reads the partition columns as STRINGS
+    through a read schema (Spark then takes a declared partition
+    column's directory text without type inference, so ``id=00123``
+    stays ``"00123"`` — inference would render it back as ``123``,
+    silently matching nothing AND renaming the directory on rewrite);
+    NULL partitions match Hive's ``__HIVE_DEFAULT_PARTITION__``. The
+    session conf is never touched, so concurrent readers on the
+    shared session keep their inference. As a backstop against any
     residual naming divergence (e.g. percent-escaped characters), the
     write is VERIFIED by re-listing: a planned partition whose file
     count did not drop to its target raises instead of reporting
@@ -188,53 +191,53 @@ def compact_partitioned_path(
     if not plan:
         return []
 
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev_infer = spark.conf.get(infer_key, "true")
-    spark.conf.set(infer_key, "false")
-    try:
-        df = spark.read.parquet(path)
-        missing = [c for c in partition_cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"compact: partition cols {missing} not in table")
-        # partition-directory string of each row — with inference off
-        # the column IS the directory text; NULL renders as Hive's
-        # default-partition directory name
-        dir_col = F.concat_ws(
-            "/",
-            *[
-                F.concat(
-                    F.lit(f"{c}="),
-                    F.coalesce(
-                        F.col(c).cast("string"),
-                        F.lit("__HIVE_DEFAULT_PARTITION__"),
-                    ),
-                )
-                for c in partition_cols
-            ],
+    inferred = spark.read.parquet(path).schema
+    missing = [c for c in partition_cols if c not in inferred.fieldNames()]
+    if missing:
+        raise ValueError(f"compact: partition cols {missing} not in table")
+    df = spark.read.schema(
+        StructType(
+            [f for f in inferred.fields if f.name not in partition_cols]
+            + [StructField(c, StringType()) for c in partition_cols]
         )
-        n_map = F.create_map(
-            *[F.lit(x) for d, s in plan.items() for x in (d, s["n_target"])]
-        )
-        data_cols = [c for c in df.columns if c not in partition_cols]
-        selected = df.withColumn("__dir", dir_col).filter(
-            F.element_at(n_map, F.col("__dir")).isNotNull()
-        )
-        grp_hash = (
-            F.xxhash64(*[F.col(c) for c in data_cols])
-            if data_cols
-            else F.lit(0).cast("long")
-        )
-        grouped = selected.withColumn(
-            "__grp",
-            F.pmod(grp_hash, F.element_at(n_map, F.col("__dir"))).cast("int"),
-        ).drop("__dir")
-        total_tasks = sum(s["n_target"] for s in plan.values())
-        compacted = grouped.repartition(
-            total_tasks, *partition_cols, F.col("__grp")
-        ).drop("__grp")
-        overwrite_partitions(spark, compacted, partition_cols, path)
-    finally:
-        spark.conf.set(infer_key, prev_infer)
+    ).parquet(path)
+    # partition-directory string of each row — a string partition
+    # column IS the directory text; NULL renders as Hive's
+    # default-partition directory name
+    dir_col = F.concat_ws(
+        "/",
+        *[
+            F.concat(
+                F.lit(f"{c}="),
+                F.coalesce(
+                    F.col(c).cast("string"),
+                    F.lit("__HIVE_DEFAULT_PARTITION__"),
+                ),
+            )
+            for c in partition_cols
+        ],
+    )
+    n_map = F.create_map(
+        *[F.lit(x) for d, s in plan.items() for x in (d, s["n_target"])]
+    )
+    data_cols = [c for c in df.columns if c not in partition_cols]
+    selected = df.withColumn("__dir", dir_col).filter(
+        F.element_at(n_map, F.col("__dir")).isNotNull()
+    )
+    grp_hash = (
+        F.xxhash64(*[F.col(c) for c in data_cols])
+        if data_cols
+        else F.lit(0).cast("long")
+    )
+    grouped = selected.withColumn(
+        "__grp",
+        F.pmod(grp_hash, F.element_at(n_map, F.col("__dir"))).cast("int"),
+    ).drop("__dir")
+    total_tasks = sum(s["n_target"] for s in plan.values())
+    compacted = grouped.repartition(
+        total_tasks, *partition_cols, F.col("__grp")
+    ).drop("__grp")
+    overwrite_partitions(spark, compacted, partition_cols, path)
     # Post-write verification: silent no-ops (a directory name the
     # row-side rendering could not reproduce) must FAIL, not report
     # success with the small files still in place. Scoped to the plan

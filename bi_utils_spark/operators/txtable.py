@@ -1533,16 +1533,34 @@ def _coerce_pv(value, dt):
 
 
 def _read_files(
-    spark: SparkSession, path: str, files: dict, schema: StructType
+    spark: SparkSession,
+    path: str,
+    files: dict,
+    schema: StructType,
+    addresses: bool = False,
 ) -> DataFrame:
     """Read a manifest-resolved file subset: grouped per commit dir
     (each group one ``basePath`` so directory-encoded partition
     columns re-materialize), then unioned. Files spell columns by
     their PHYSICAL names; the result aliases back to the logical
     schema (a pure projection — no extra plan nodes when the column
-    mapping is inactive)."""
+    mapping is inactive).
+
+    ``addresses=True`` adds each row's physical address: its file's
+    absolute path (``__f``) and its row ordinal within the file
+    (``__pos``, parquet ``_metadata.row_index``) — the coordinates
+    deletion vectors address rows by. Metadata columns are
+    constant-folded by the scan, so the plan stays JVM-only."""
     phys = _to_physical(schema)
     pmap = _phys_map(schema)
+    addr = (
+        [
+            _strip_uri_scheme(F.col("_metadata.file_path")).alias("__f"),
+            F.col("_metadata.row_index").alias("__pos"),
+        ]
+        if addresses
+        else []
+    )
     groups: dict[str, list[str]] = {}
     for rel, meta in files.items():
         groups.setdefault(meta["commit_dir"], []).append(
@@ -1553,7 +1571,8 @@ def _read_files(
         reader = spark.read.schema(phys).option(
             "basePath", os.path.join(path, commit_dir)
         )
-        parts.append(reader.parquet(*sorted(names)))
+        part = reader.parquet(*sorted(names))
+        parts.append(part.select("*", *addr) if addr else part)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -1562,7 +1581,8 @@ def _read_files(
             *[
                 F.col(_phys_of(f)).alias(f.name)
                 for f in schema.fields
-            ]
+            ],
+            *(["__f", "__pos"] if addr else []),
         )
     return out
 
@@ -1660,50 +1680,6 @@ def _strip_uri_scheme(col):
     return F.regexp_replace(col, "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
 
 
-def _read_files_meta(
-    spark: SparkSession, path: str, files: dict, schema: StructType
-) -> DataFrame:
-    """`_read_files` + physical row addresses: every row carries its
-    file's absolute path (``__f``) and row ordinal within the file
-    (``__pos``, parquet ``_metadata.row_index``) — the coordinates
-    deletion vectors address rows by. Metadata columns are
-    constant-folded by the scan, so the plan stays JVM-only."""
-    phys = _to_physical(schema)
-    pmap = _phys_map(schema)
-    groups: dict[str, list[str]] = {}
-    for rel, meta in files.items():
-        groups.setdefault(meta["commit_dir"], []).append(
-            os.path.join(path, rel)
-        )
-    parts = []
-    for commit_dir, names in sorted(groups.items()):
-        reader = spark.read.schema(phys).option(
-            "basePath", os.path.join(path, commit_dir)
-        )
-        parts.append(
-            reader.parquet(*sorted(names)).select(
-                "*",
-                _strip_uri_scheme(F.col("_metadata.file_path")).alias(
-                    "__f"
-                ),
-                F.col("_metadata.row_index").alias("__pos"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if pmap:
-        out = out.select(
-            *[
-                F.col(_phys_of(f)).alias(f.name)
-                for f in schema.fields
-            ],
-            "__f",
-            "__pos",
-        )
-    return out
-
-
 def _dv_positions_frame(
     spark: SparkSession, path: str, dvd: dict
 ) -> DataFrame:
@@ -1712,35 +1688,17 @@ def _dv_positions_frame(
     driver never materializes position lists (the bloom-build
     packed-rows discipline, in reverse)."""
     rows = [
-        (
-            os.path.abspath(os.path.join(path, rel)),
-            os.path.join(path, meta["dv"]["path"]),
-        )
+        (os.path.abspath(os.path.join(path, rel)), meta["dv"]["path"])
         for rel, meta in dvd.items()
     ]
     desc = spark.createDataFrame(rows, "f string, dv string")
 
     def _decode(batches):
-        import base64 as b64mod
-        import json as jsonmod
-
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
-            for f, dvp in zip(pdf["f"], pdf["dv"]):
-                with open(dvp) as fh:
-                    rec = jsonmod.load(fh)
-                raw = b64mod.b64decode(rec["payload"])
-                if rec["enc"] == "pos":
-                    pos = np.frombuffer(raw, dtype="<i8").astype("int64")
-                else:
-                    pos = np.flatnonzero(
-                        np.unpackbits(
-                            np.frombuffer(raw, dtype=np.uint8),
-                            bitorder="little",
-                        )
-                    ).astype("int64")
+            for f, dv_rel in zip(pdf["f"], pdf["dv"]):
+                pos = _dv_decode(_dv_load(path, dv_rel))
                 yield pd.DataFrame({"f": f, "pos": pos})
 
     return desc.repartition(max(1, min(len(rows), 64))).mapInPandas(
@@ -1764,9 +1722,9 @@ def _read_files_live_meta(
     dvd = {r: m for r, m in files.items() if m.get("dv")}
     parts = []
     if plain:
-        parts.append(_read_files_meta(spark, path, plain, schema))
+        parts.append(_read_files(spark, path, plain, schema, addresses=True))
     if dvd:
-        raw = _read_files_meta(spark, path, dvd, schema)
+        raw = _read_files(spark, path, dvd, schema, addresses=True)
         pos = _dv_positions_frame(spark, path, dvd)
         if _dv_total(dvd) <= DV_BROADCAST_MAX_ROWS:
             pos = F.broadcast(pos)
@@ -2871,46 +2829,23 @@ def merge_tx_table(
                     # copies retire, bystander rows restage into their
                     # own (unchanged) partitions
                     removed = sorted(set(removed) | set(moved))
-        if removed:
-            target = _read_files_live(
-                spark,
-                path,
-                {rel: snap.files[rel] for rel in removed},
-                schema,
-            )
-        else:
-            target = spark.createDataFrame([], schema)
-        merged, hwm = _allocate(_apply(target))
-        added = _stage(merged, path, pcols, table_schema=schema)
-        extra: dict = {"identity_hwm": hwm} if hwm else {}
-        if snap.cdc_enabled:
-            extra["cdc"] = _merge_change_data(
-                spark, path, target, added, pks, schema
-            )
-        return _rewrite_commit(
-            path,
-            snap.version,
-            "merge",
-            added,
-            sorted(removed),
-            schema=widened,
-            app=app,
-            conflict="partitions",
-            touched_partitions=touched_set,
-            pcols=list(pcols),
-            # only an ALLOCATING rewrite can collide with an
-            # interleaved allocation — a merge with zero inserts
-            # stages only existing ids at or below the old mark
-            identity_cols=set(snap.identity) if hwm else None,
-            extra=extra or None,
+        scope: dict = {
+            "conflict": "partitions",
+            "touched_partitions": touched_set,
+            "pcols": list(pcols),
+        }
+    else:
+        # unpartitioned: the whole snapshot is the rewrite's scope
+        removed, scope = list(snap.files), {}
+    if removed:
+        target = _read_files_live(
+            spark, path, {rel: snap.files[rel] for rel in removed}, schema
         )
-    if snap.files:
-        target = _read_files_live(spark, path, snap.files, schema)
     else:
         target = spark.createDataFrame([], schema)
     merged, hwm = _allocate(_apply(target))
-    added = _stage(merged, path, [], table_schema=schema)
-    extra = {"identity_hwm": hwm} if hwm else {}
+    added = _stage(merged, path, pcols, table_schema=schema)
+    extra: dict = {"identity_hwm": hwm} if hwm else {}
     if snap.cdc_enabled:
         extra["cdc"] = _merge_change_data(
             spark, path, target, added, pks, schema
@@ -2920,11 +2855,15 @@ def merge_tx_table(
         snap.version,
         "merge",
         added,
-        sorted(snap.files),
+        sorted(removed),
         schema=widened,
         app=app,
+        # only an ALLOCATING rewrite can collide with an interleaved
+        # allocation — a merge with zero inserts stages only existing
+        # ids at or below the old mark
         identity_cols=set(snap.identity) if hwm else None,
         extra=extra or None,
+        **scope,
     )
 
 
@@ -2964,28 +2903,27 @@ def _merge_change_data(
 
 
 # ---------------------------------------------------------------------------
-# row-level DELETE: merge-on-read (deletion vectors) or copy-on-write
+# row-level DELETE and UPDATE: merge-on-read (deletion vectors) or
+# copy-on-write, one body
 # ---------------------------------------------------------------------------
 
 
-def _dv_write_distributed(
-    path: str,
-    matched: DataFrame,
-    want: dict,
-) -> list[dict]:
-    """Write per-file deletion-vector sidecars EXECUTOR-SIDE: matched
-    (file, position) rows shuffle once by file, each group's task
-    unions with the file's previous sidecar, encodes, and writes its
-    own sidecar with the tmp+os.replace discipline (`_dv_write` run
-    where the data is) — the driver receives ONLY (file, dv_path,
-    cardinality) pointer rows, bounded by the touched FILE count,
-    never the masked row count. This lifts the `max_dv_rows` driver
-    bound: masking any fraction of a 100 TB table streams positions
+def _dv_records(
+    path: str, matched: DataFrame, want: dict
+) -> tuple[list[dict], int]:
+    """Write the deletion-vector sidecars for the (__f, __pos) rows of
+    ``matched`` EXECUTOR-SIDE and return (commit records, rows newly
+    masked). Rows shuffle once by file; each group's task unions its
+    positions with the file's previous sidecar, encodes, and writes
+    its own sidecar with the tmp+os.replace discipline (`_dv_write`
+    run where the data is). The driver receives only one (file,
+    dv_path, cardinality, newly masked) row per touched file, never
+    the positions, so masking any fraction of a 100 TB table streams
     through executors. Requires executors to share the table's
     filesystem with the driver — the same property staged data files
     already rely on. A crash leaves unreferenced sidecars (strays)
-    that readers never consult and vacuum reaps after the age
-    guard."""
+    that readers never consult and vacuum reaps after the age guard.
+    Nothing matched: no task runs, no sidecar is written."""
     info = {
         os.path.abspath(os.path.join(path, rel)): (
             rel,
@@ -2993,26 +2931,26 @@ def _dv_write_distributed(
         )
         for rel, meta in want.items()
     }
-    table_root = os.path.abspath(path)
+    root = os.path.abspath(path)
 
     def _pack_write(key, pdf):
         import numpy as np
         import pandas as pd
 
-        from bi_utils_spark.operators import txtable as _t
-
         rel, old_rel = info[key[0]]
-        pos = np.unique(pdf["__pos"].to_numpy(dtype="int64"))
-        if old_rel:
-            pos = np.union1d(
-                pos, _t._dv_decode(_t._dv_load(table_root, old_rel))
-            )
-        rec = _t._dv_write(table_root, rel, pos)
+        new = np.unique(pdf["__pos"].to_numpy(dtype="int64"))
+        pos = (
+            np.union1d(new, _dv_decode(_dv_load(root, old_rel)))
+            if old_rel
+            else new
+        )
+        rec = _dv_write(root, rel, pos)
         return pd.DataFrame(
             {
-                "file": [rec["file"]],
+                "file": [rel],
                 "dv_path": [rec["dv_path"]],
                 "cardinality": [rec["cardinality"]],
+                "masked": [new.size],
             }
         )
 
@@ -3020,11 +2958,12 @@ def _dv_write_distributed(
         matched.select("__f", "__pos")
         .groupBy("__f")
         .applyInPandas(
-            _pack_write, "file string, dv_path string, cardinality long"
+            _pack_write,
+            "file string, dv_path string, cardinality long, masked long",
         )
         .collect()
     )
-    return [
+    records = [
         {
             "file": r["file"],
             "dv_path": r["dv_path"],
@@ -3032,42 +2971,201 @@ def _dv_write_distributed(
         }
         for r in rows
     ]
+    return records, sum(int(r["masked"]) for r in rows)
 
 
-def _dv_records(
-    path: str, matched: DataFrame, want: dict, n_new: int, max_dv_rows: int
-) -> list[dict]:
-    """The new sidecars for the (__f, __pos) rows of ``matched``, each
-    the UNION of its file's old and new masked positions. Up to
-    ``max_dv_rows`` positions pack through the driver (8 B/row, one
-    round trip); beyond that each file's task writes its own sidecar
-    (`_dv_write_distributed`) and the driver sees only pointers."""
-    if n_new > max_dv_rows:
-        return _dv_write_distributed(path, matched, want)
-    import numpy as np
+def _row_level_dml(
+    spark: SparkSession,
+    path: str,
+    condition,
+    set_exprs: dict | None,
+    mode: str,
+    partition_filter: dict | None,
+    skip: dict | None,
+) -> dict:
+    """The one body of `delete_from_table` and `update_table`. DELETE
+    is the case with no post-image (``set_exprs`` None); UPDATE stages
+    the matched rows' post-images beside the same mask or rewrite.
 
-    def _pack(key, pdf):
-        import pandas as pd
+    Steps: prune the candidate files (``partition_filter`` at the
+    manifest, then zone maps on ``skip`` or the ranges derived from
+    the predicate), scan their LIVE rows with physical addresses, and
+    either rewrite the files holding matches (``cow``) or mask the
+    matches with deletion vectors (``mor``); then one ``files``-scoped
+    commit. With change data on, matched rows that feed more than one
+    job (the mask, the post-image, the change rows) are materialized
+    once; a COW delete's matched rows feed only its change rows."""
+    is_update = set_exprs is not None
+    verb = "update" if is_update else "delete"
+    fn = "update_table" if is_update else "delete_from_table"
+    if mode not in ("mor", "cow"):
+        raise ValueError(f"{fn}: unknown mode {mode!r}")
+    cond = F.expr(condition) if isinstance(condition, str) else condition
+    pred_repr = condition if isinstance(condition, str) else str(condition)
+    extra: dict = {"predicate": pred_repr}
+    snap = _fold(path)
+    _require_writer(snap, path)
+    schema = snap.spark_schema()
+    names = schema.fieldNames()
+    if is_update:
+        for c in set_exprs:
+            if c not in names:
+                raise ValueError(f"{fn}: SET column {c!r} not in table")
+            if c in snap.partition_cols:
+                raise ValueError(
+                    f"{fn}: {c!r} is a partition column — a row "
+                    "changing partitions is a delete+insert; use "
+                    "merge_tx_table"
+                )
+            if c in snap.generated:
+                raise ValueError(
+                    f"{fn}: {c!r} is a generated column — SET its "
+                    "base column(s) and it recomputes automatically"
+                )
+            if c in snap.identity:
+                raise ValueError(
+                    f"{fn}: {c!r} is an identity column "
+                    "(GENERATED ALWAYS) — it cannot be SET"
+                )
+        set_cols = {
+            c: (F.expr(e) if isinstance(e, str) else e)
+            for c, e in set_exprs.items()
+        }
+        extra["set"] = sorted(set_exprs)
+    want = snap.files
+    if partition_filter:
+        types = {f.name: f.dataType for f in schema.fields}
+        rendered = {
+            k: _render_pv(_coerce_pv(v, types[k]) if k in types else v)
+            for k, v in partition_filter.items()
+        }
+        want, pf_exact = _pf_prune(want, rendered)
+        if not pf_exact:
+            # older-spec files survived fail-open: the partition
+            # scope becomes part of the row predicate so no row
+            # outside it can match
+            for k, v in partition_filter.items():
+                cv = _coerce_pv(v, types[k]) if k in types else v
+                cond = cond & (
+                    F.col(k).isNull() if cv is None else F.col(k) == F.lit(cv)
+                )
+    if skip is None:
+        skip = predicate_skip_ranges(cond)
+    if skip:
+        want = _prune_files(
+            want, skip, schema, snap.partition_cols, snap.generated
+        )
+    count_key = f"rows_{verb}d"
+    none = {"version": None, "mode": mode, count_key: 0, "files_touched": 0}
+    if not want:
+        return none
+    hit = F.coalesce(cond, F.lit(False))
 
-        pos = np.unique(pdf["__pos"].to_numpy(dtype="int64"))
-        return pd.DataFrame({"f": [key[0]], "payload": [pos.astype("<i8").tobytes()]})
+    def _post_image(pre: DataFrame) -> DataFrame:
+        # SET expressions see the ORIGINAL row: compute all the new
+        # values from the input columns before any replacement
+        out = pre
+        tmp = {}
+        for c, e in set_cols.items():
+            tmp[c] = f"__set_{c}"
+            out = out.withColumn(tmp[c], e)
+        for c, t in tmp.items():
+            field = next(f for f in schema.fields if f.name == c)
+            out = out.withColumn(c, F.col(t).cast(field.dataType))
+        out = out.drop(*tmp.values())
+        if snap.generated:
+            # a SET on a base column stales its derived columns —
+            # recompute unconditionally on the post-image rows
+            out = _apply_generated(out, snap.generated, recompute=True)
+        post = out.select(*names)
+        _enforce_constraints(post, snap.constraints)
+        return post
 
-    abs_to_rel = {os.path.abspath(os.path.join(path, rel)): rel for rel in want}
-    packed = (
-        matched.select("__f", "__pos")
-        .groupBy("__f")
-        .applyInPandas(_pack, "f string, payload binary")
-        .collect()
+    live = _read_files_live_meta(spark, path, want, schema)
+    if mode == "cow":
+        hit_rows = (
+            live.where(hit)
+            .groupBy("__f")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        )
+        if not hit_rows:
+            return none
+        abs_to_rel = {
+            os.path.abspath(os.path.join(path, rel)): rel for rel in want
+        }
+        touched = {
+            abs_to_rel[r["__f"]]: want[abs_to_rel[r["__f"]]]
+            for r in hit_rows
+        }
+        n = sum(int(r["n"]) for r in hit_rows)
+        src = _read_files_live(spark, path, touched, schema)
+        pre = src.where(hit)
+        if snap.cdc_enabled and is_update:
+            pre = materialize(pre)
+        post = _post_image(pre) if is_update else None
+        kept = src.where(~hit)
+        added = _stage(
+            kept if post is None else kept.unionByName(post),
+            path,
+            snap.partition_cols,
+            table_schema=schema,
+        )
+        removed, dv = sorted(touched), None
+    else:
+        # the NEWLY-matched set: existing DVs were applied by the live
+        # read, so re-running a predicate masks nothing new
+        pre = live.where(hit)
+        if snap.cdc_enabled:
+            pre = materialize(pre)
+        post = _post_image(pre) if is_update else None
+        dv, n = _dv_records(path, pre, want)
+        if not n:
+            return none
+        # post-images land before the commit that references them — a
+        # crash leaves only vacuum-able strays
+        added = (
+            []
+            if post is None
+            else _stage(post, path, snap.partition_cols, table_schema=schema)
+        )
+        removed = []
+        up = _protocol_upgrade(snap, reader=["deletionVectors"])
+        if up:
+            extra["protocol"] = up
+    if snap.cdc_enabled:
+        # the statement knows its change rows by construction — no
+        # join and no pk requirement: the matched rows are the deletes
+        # or the update pre-images, the post-images the updates
+        if post is None:
+            changes = pre.select(*names).withColumn(
+                CDF_TYPE_COL, F.lit("delete")
+            )
+        else:
+            changes = (
+                pre.select(*names)
+                .withColumn(CDF_TYPE_COL, F.lit("update_preimage"))
+                .unionByName(
+                    post.withColumn(CDF_TYPE_COL, F.lit("update_postimage"))
+                )
+            )
+        extra["cdc"] = _stage_change_data(spark, path, changes, schema)
+    version = _rewrite_commit(
+        path,
+        snap.version,
+        verb,
+        added,
+        removed,
+        conflict="files",
+        dv=dv,
+        extra=extra,
     )
-    records = []
-    for r in packed:
-        rel = abs_to_rel[r["f"]]
-        pos = np.frombuffer(r["payload"], dtype="<i8")
-        old = want[rel].get("dv")
-        if old:
-            pos = np.union1d(pos, _dv_decode(_dv_load(path, old["path"])))
-        records.append(_dv_write(path, rel, pos))
-    return records
+    return {
+        "version": version,
+        "mode": mode,
+        count_key: n,
+        "files_touched": len(removed or dv),
+    }
 
 
 @_retry_on_vacuumed_snapshot
@@ -3078,7 +3176,6 @@ def delete_from_table(
     mode: str = "mor",
     partition_filter: dict | None = None,
     skip: dict | None = None,
-    max_dv_rows: int = 10_000_000,
 ) -> dict:
     """Row-level ``DELETE FROM <table> WHERE condition`` — the verb
     the reference's pipelines reach through SQL DELETE, with Delta
@@ -3118,15 +3215,13 @@ def delete_from_table(
     rows (existing DVs applied), so re-running the same predicate
     commits nothing and the change feed emits each row's delete
     exactly once. New sidecars hold the UNION of a file's masked
-    rows; the old sidecar stays for time travel until vacuum.
-    ``max_dv_rows`` picks the sidecar-write topology (r10): at or
-    below it, packed positions collect to the driver (8 B/row, one
-    round trip); above it, each touched file's task writes its own
-    sidecar EXECUTOR-SIDE (`_dv_write_distributed`) and the driver
-    collects only (file, pointer, cardinality) rows — masking any
-    fraction succeeds in MOR mode, no driver bound. (When the masked
-    fraction is large, ``mode="cow"`` is usually still cheaper than
-    carrying huge masks — a topology choice, no longer an error.)
+    rows; the old sidecar stays for time travel until vacuum. Each
+    touched file's task writes its own sidecar executor-side
+    (`_dv_records`) and the driver collects only (file, pointer,
+    cardinality) rows, so masking any fraction succeeds in MOR mode
+    with no driver bound. (When the masked fraction is large,
+    ``mode="cow"`` is usually still cheaper than carrying huge
+    masks.)
 
     Concurrency: appends compose (WriteSerializable — the delete
     applies to rows as of its snapshot); any interleaved commit that
@@ -3135,128 +3230,9 @@ def delete_from_table(
     ``{"version", "mode", "rows_deleted", "files_touched"}`` —
     ``version`` None when nothing matched (no commit).
     """
-    if mode not in ("mor", "cow"):
-        raise ValueError(f"delete_from_table: unknown mode {mode!r}")
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    pred_repr = condition if isinstance(condition, str) else str(condition)
-    snap = _fold(path)
-    _require_writer(snap, path)
-    schema = snap.spark_schema()
-    want = snap.files
-    if partition_filter:
-        types = {f.name: f.dataType for f in schema.fields}
-        rendered = {
-            k: _render_pv(_coerce_pv(v, types[k]) if k in types else v)
-            for k, v in partition_filter.items()
-        }
-        want, pf_exact = _pf_prune(want, rendered)
-        if not pf_exact:
-            # older-spec files survived fail-open: the partition
-            # scope becomes part of the row predicate so no row
-            # outside it can match
-            for k, v in partition_filter.items():
-                cv = _coerce_pv(v, types[k]) if k in types else v
-                cond = cond & (
-                    F.col(k).isNull() if cv is None else F.col(k) == F.lit(cv)
-                )
-    if skip is None:
-        skip = predicate_skip_ranges(cond)
-    if skip:
-        want = _prune_files(
-            want, skip, schema, snap.partition_cols, snap.generated
-        )
-    none = {
-        "version": None,
-        "mode": mode,
-        "rows_deleted": 0,
-        "files_touched": 0,
-    }
-    if not want:
-        return none
-    live = _read_files_live_meta(spark, path, want, schema)
-    matched = live.where(F.coalesce(cond, F.lit(False))).select(
-        "__f", "__pos"
+    return _row_level_dml(
+        spark, path, condition, None, mode, partition_filter, skip
     )
-    abs_to_rel = {
-        os.path.abspath(os.path.join(path, rel)): rel for rel in want
-    }
-    if mode == "cow":
-        hit_rows = (
-            matched.groupBy("__f").agg(F.count("*").alias("n")).collect()
-        )
-        if not hit_rows:
-            return none
-        hit = {
-            abs_to_rel[r["__f"]]: want[abs_to_rel[r["__f"]]]
-            for r in hit_rows
-        }
-        kept = _read_files_live(spark, path, hit, schema).where(
-            ~F.coalesce(cond, F.lit(False))
-        )
-        added = _stage(
-            kept, path, snap.partition_cols, table_schema=schema
-        )
-        extra: dict = {"predicate": pred_repr}
-        if snap.cdc_enabled:
-            # the deleted rows ARE the change rows — no join needed
-            gone = (
-                _read_files_live(spark, path, hit, schema)
-                .where(F.coalesce(cond, F.lit(False)))
-                .select(*[F.col(f.name) for f in schema.fields])
-                .withColumn(CDF_TYPE_COL, F.lit("delete"))
-            )
-            extra["cdc"] = _stage_change_data(spark, path, gone, schema)
-        version = _rewrite_commit(
-            path,
-            snap.version,
-            "delete",
-            added,
-            sorted(hit),
-            conflict="files",
-            extra=extra,
-        )
-        return {
-            "version": version,
-            "mode": "cow",
-            "rows_deleted": sum(int(r["n"]) for r in hit_rows),
-            "files_touched": len(hit),
-        }
-    matched_full = None
-    if snap.cdc_enabled:
-        # ONE materialization shared by the count, the position pack,
-        # and the change-row staging — not three predicate scans
-        matched_full = materialize(live.where(F.coalesce(cond, F.lit(False))))
-        matched = matched_full.select("__f", "__pos")
-    n_new = matched.count()
-    if n_new == 0:
-        return none
-    dv_records = _dv_records(path, matched, want, n_new, max_dv_rows)
-    up = _protocol_upgrade(snap, reader=["deletionVectors"])
-    extra = {"predicate": pred_repr, **({"protocol": up} if up else {})}
-    if snap.cdc_enabled:
-        # the newly-masked rows ARE the change rows (read back from
-        # the materialized match — existing DVs were applied by the
-        # live read, so a re-run emits nothing)
-        gone = matched_full.select(
-            *[F.col(f.name) for f in schema.fields]
-        ).withColumn(CDF_TYPE_COL, F.lit("delete"))
-        extra["cdc"] = _stage_change_data(spark, path, gone, schema)
-    version = _rewrite_commit(
-        path,
-        snap.version,
-        "delete",
-        [],
-        [],
-        conflict="files",
-        dv=dv_records,
-        extra=extra,
-    )
-    return {
-        "version": version,
-        "mode": "mor",
-        "rows_deleted": int(n_new),
-        "files_touched": len(dv_records),
-    }
 
 
 @_retry_on_vacuumed_snapshot
@@ -3267,7 +3243,6 @@ def update_table(
     set: dict,
     mode: str = "mor",
     partition_filter: dict | None = None,
-    max_dv_rows: int = 10_000_000,
 ) -> dict:
     """Row-level ``UPDATE <table> SET col = expr WHERE condition`` —
     the last DML verb (INSERT=`append_table`, MERGE=`merge_tx_table`,
@@ -3275,10 +3250,11 @@ def update_table(
     shape:
 
     - ``mode="mor"`` (default): matched rows are MASKED in their
-      files via deletion vectors and their updated images land as
-      newly-staged files, all in ONE commit — cost is the matched
-      ROWS (scan + small write), never a rewrite of every touched
-      file. Updating 0.1% of a 100 TB table writes 0.1% of the data.
+      files via deletion vectors (written executor-side, as for
+      DELETE) and their updated images land as newly-staged files,
+      all in ONE commit — cost is the matched ROWS (scan + small
+      write), never a rewrite of every touched file. Updating 0.1%
+      of a 100 TB table writes 0.1% of the data.
     - ``mode="cow"``: files containing matches are rewritten with
       the SET applied in place (file-granularity copy-on-write) —
       right when the matched fraction is large.
@@ -3299,202 +3275,9 @@ def update_table(
     commit touching the same files conflicts, disjoint rewrites
     rebase. Returns ``{"version", "mode", "rows_updated",
     "files_touched"}`` (version None when nothing matched)."""
-    if mode not in ("mor", "cow"):
-        raise ValueError(f"update_table: unknown mode {mode!r}")
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    pred_repr = condition if isinstance(condition, str) else str(condition)
-    snap = _fold(path)
-    _require_writer(snap, path)
-    schema = snap.spark_schema()
-    names = schema.fieldNames()
-    for c in set:
-        if c not in names:
-            raise ValueError(f"update_table: SET column {c!r} not in table")
-        if c in snap.partition_cols:
-            raise ValueError(
-                f"update_table: {c!r} is a partition column — a row "
-                "changing partitions is a delete+insert; use "
-                "merge_tx_table"
-            )
-        if c in snap.generated:
-            raise ValueError(
-                f"update_table: {c!r} is a generated column — SET its "
-                "base column(s) and it recomputes automatically"
-            )
-        if c in snap.identity:
-            raise ValueError(
-                f"update_table: {c!r} is an identity column "
-                "(GENERATED ALWAYS) — it cannot be SET"
-            )
-    set_cols = {
-        c: (F.expr(e) if isinstance(e, str) else e) for c, e in set.items()
-    }
-    want = snap.files
-    if partition_filter:
-        types = {f.name: f.dataType for f in schema.fields}
-        rendered = {
-            k: _render_pv(_coerce_pv(v, types[k]) if k in types else v)
-            for k, v in partition_filter.items()
-        }
-        want, pf_exact = _pf_prune(want, rendered)
-        if not pf_exact:
-            for k, v in partition_filter.items():
-                cv = _coerce_pv(v, types[k]) if k in types else v
-                cond = cond & (
-                    F.col(k).isNull() if cv is None else F.col(k) == F.lit(cv)
-                )
-    derived = predicate_skip_ranges(cond)
-    if derived:
-        want = _prune_files(
-            want, derived, schema, snap.partition_cols, snap.generated
-        )
-    none = {
-        "version": None,
-        "mode": mode,
-        "rows_updated": 0,
-        "files_touched": 0,
-    }
-    if not want:
-        return none
-    matched_pred = F.coalesce(cond, F.lit(False))
-
-    def _updated(df: DataFrame) -> DataFrame:
-        # SET expressions see the ORIGINAL row: compute all the new
-        # values from the input columns before any replacement
-        out = df
-        tmp = {}
-        for c, e in set_cols.items():
-            t = f"__set_{c}"
-            tmp[c] = t
-            out = out.withColumn(t, e)
-        for c, t in tmp.items():
-            field = next(f for f in schema.fields if f.name == c)
-            out = out.withColumn(c, F.col(t).cast(field.dataType))
-        out = out.drop(*tmp.values())
-        if snap.generated:
-            # a SET on a base column stales its derived columns —
-            # recompute unconditionally on the post-image rows
-            out = _apply_generated(out, snap.generated, recompute=True)
-        return out
-
-    live = _read_files_live_meta(spark, path, want, schema)
-    if mode == "cow":
-        hit_rows = (
-            live.where(matched_pred)
-            .groupBy("__f")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        if not hit_rows:
-            return none
-        abs_to_rel = {
-            os.path.abspath(os.path.join(path, rel)): rel for rel in want
-        }
-        hit = {
-            abs_to_rel[r["__f"]]: want[abs_to_rel[r["__f"]]]
-            for r in hit_rows
-        }
-        src = _read_files_live(spark, path, hit, schema)
-        pre_rows = src.where(matched_pred)
-        if snap.cdc_enabled:
-            # one materialization feeds the constraint probe, the
-            # rewrite stage, and both change-row legs
-            pre_rows = materialize(pre_rows)
-        post = _updated(pre_rows)
-        _enforce_constraints(post, snap.constraints)
-        rewritten = src.where(~matched_pred).unionByName(post)
-        added = _stage(
-            rewritten.select(*names),
-            path,
-            snap.partition_cols,
-            table_schema=schema,
-        )
-        extra: dict = {"predicate": pred_repr, "set": sorted(set)}
-        if snap.cdc_enabled:
-            # the UPDATE knows its pre/post pairs by construction —
-            # no join, and no pk requirement
-            extra["cdc"] = _stage_change_data(
-                spark,
-                path,
-                pre_rows.select(*names)
-                .withColumn(CDF_TYPE_COL, F.lit("update_preimage"))
-                .unionByName(
-                    post.select(*names).withColumn(
-                        CDF_TYPE_COL, F.lit("update_postimage")
-                    )
-                ),
-                schema,
-            )
-        version = _rewrite_commit(
-            path,
-            snap.version,
-            "update",
-            added,
-            sorted(hit),
-            conflict="files",
-            extra=extra,
-        )
-        return {
-            "version": version,
-            "mode": "cow",
-            "rows_updated": sum(int(r["n"]) for r in hit_rows),
-            "files_touched": len(hit),
-        }
-    matched = live.where(matched_pred)
-    if snap.cdc_enabled:
-        # one materialization feeds the count, the post-image stage,
-        # the position pack, and the change-row staging
-        matched = materialize(matched)
-    n_new = matched.count()
-    if n_new == 0:
-        return none
-    # stage the POST-images first (data lands before the commit that
-    # references it — crash leaves only vacuum-able strays)
-    post = _updated(matched).select(*names)
-    _enforce_constraints(post, snap.constraints)
-    added = _stage(
-        post,
-        path,
-        snap.partition_cols,
-        table_schema=schema,
+    return _row_level_dml(
+        spark, path, condition, set, mode, partition_filter, None
     )
-
-    dv_records = _dv_records(path, matched, want, n_new, max_dv_rows)
-    up = _protocol_upgrade(snap, reader=["deletionVectors"])
-    extra = {
-        "predicate": pred_repr,
-        "set": sorted(set),
-        **({"protocol": up} if up else {}),
-    }
-    if snap.cdc_enabled:
-        extra["cdc"] = _stage_change_data(
-            spark,
-            path,
-            matched.select(*names)
-            .withColumn(CDF_TYPE_COL, F.lit("update_preimage"))
-            .unionByName(
-                post.select(*names).withColumn(
-                    CDF_TYPE_COL, F.lit("update_postimage")
-                )
-            ),
-            schema,
-        )
-    version = _rewrite_commit(
-        path,
-        snap.version,
-        "update",
-        added,
-        [],
-        conflict="files",
-        dv=dv_records,
-        extra=extra,
-    )
-    return {
-        "version": version,
-        "mode": "mor",
-        "rows_updated": int(n_new),
-        "files_touched": len(dv_records),
-    }
 
 
 def materialize_deletes(
@@ -5949,8 +5732,8 @@ def _dv_fresh_mask_rows(
         descs.append(
             (
                 os.path.abspath(os.path.join(path, rel)),
-                os.path.join(path, rec["dv_path"]),
-                os.path.join(path, old["path"]) if old else None,
+                rec["dv_path"],
+                old["path"] if old else None,
             )
         )
         total += int(rec.get("cardinality") or 0)
@@ -5959,32 +5742,15 @@ def _dv_fresh_mask_rows(
     desc = spark.createDataFrame(descs, "f string, new string, old string")
 
     def _diff(batches):
-        import base64 as b64mod
-        import json as jsonmod
-
         import numpy as np
         import pandas as pd
 
-        def _load(p):
-            with open(p) as fh:
-                rec = jsonmod.load(fh)
-            raw = b64mod.b64decode(rec["payload"])
-            if rec["enc"] == "pos":
-                return np.frombuffer(raw, dtype="<i8").astype("int64")
-            return np.flatnonzero(
-                np.unpackbits(
-                    np.frombuffer(raw, dtype=np.uint8),
-                    bitorder="little",
-                )
-            ).astype("int64")
-
         for pdf in batches:
             for f, new, old in zip(pdf["f"], pdf["new"], pdf["old"]):
-                pos = _load(new)
-                if old is not None and not (
-                    isinstance(old, float)
-                ):  # pandas renders SQL NULL as None or NaN
-                    pos = np.setdiff1d(pos, _load(old))
+                pos = _dv_decode(_dv_load(path, new))
+                # pandas renders SQL NULL as None or NaN
+                if isinstance(old, str):
+                    pos = np.setdiff1d(pos, _dv_decode(_dv_load(path, old)))
                 yield pd.DataFrame({"f": f, "pos": pos})
 
     pos = desc.repartition(max(1, min(len(descs), 64))).mapInPandas(
@@ -5992,7 +5758,7 @@ def _dv_fresh_mask_rows(
     )
     if total <= DV_BROADCAST_MAX_ROWS:
         pos = F.broadcast(pos)
-    raw = _read_files_meta(spark, path, files, schema)
+    raw = _read_files(spark, path, files, schema, addresses=True)
     cond = (raw["__f"] == pos["f"]) & (raw["__pos"] == pos["pos"])
     return raw.join(pos, cond, "left_semi").select(
         *[F.col(f.name) for f in schema.fields]

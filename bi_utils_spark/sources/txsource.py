@@ -104,23 +104,10 @@ def _coerce(value: str, spark_type: str):
 
 
 def _dv_positions(dv_path: str) -> set[int]:
-    """Masked row ordinals from a deletion-vector sidecar."""
-    import base64
-
-    import numpy as np
-
+    """Masked row ordinals from the deletion-vector sidecar at
+    ``dv_path`` (the payload decodes in `txtable._dv_decode`)."""
     with open(dv_path) as fh:
-        rec = json.load(fh)
-    raw = base64.b64decode(rec["payload"])
-    if rec["enc"] == "pos":
-        pos = np.frombuffer(raw, dtype="<i8")
-    else:
-        pos = np.flatnonzero(
-            np.unpackbits(
-                np.frombuffer(raw, dtype=np.uint8), bitorder="little"
-            )
-        )
-    return set(int(p) for p in pos)
+        return set(tx._dv_decode(json.load(fh)).tolist())
 
 
 def _read_file_rows(

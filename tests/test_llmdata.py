@@ -547,7 +547,7 @@ def test_winnowing_fp_freq_cap(spark):
     assert (1, 2) not in capped, "boilerplate-only pair must drop"
 
 
-def test_dedup_operators_leave_no_cache(spark, docs):
+def test_dedup_operators_leave_no_cache(spark, docs, drain_stored):
     # VERDICT r2 #3: operators must not leak cached partitions — the
     # reused subtrees are deduped by ReuseExchange, not persist().
     # Delta-based and GC-settled: other tests in the shared session
@@ -556,7 +556,6 @@ def test_dedup_operators_leave_no_cache(spark, docs):
     # measurements — settle GC first and assert no INCREASE (a
     # concurrent release must never mask-fail the check).
     import gc
-    import time
 
     spark.catalog.clearCache()
     gc.collect()
@@ -568,17 +567,10 @@ def test_dedup_operators_leave_no_cache(spark, docs):
     # Settle AFTER the operators too: their internal localCheckpoint
     # frames are unreferenced the moment each call returns, but the
     # release path (py4j detach queue -> JVM GC -> ContextCleaner) is
-    # asynchronous and can lag ~10 s. A bounded retry keeps the
+    # asynchronous and can lag ~10 s. A bounded drain keeps the
     # canary's teeth — a persist() without unpersist is STRONGLY
     # referenced and never drains, so it still fails.
-    n_cached = base + 1
-    for _ in range(40):
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-        n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()  # noqa: SLF001
-        if n_cached <= base:
-            break
-        time.sleep(0.5)
+    n_cached = drain_stored(base, budget_s=20)
     assert n_cached <= base, f"{n_cached - base} cached RDDs left behind"
 
 

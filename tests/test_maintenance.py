@@ -220,3 +220,27 @@ def test_compaction_handles_zero_padded_partition_values(spark, tmp_path):
     assert len(files) == 1  # compacted IN PLACE, dir name preserved
     assert not pathlib.Path(path, "pid=123").exists()
     assert spark.read.parquet(path).count() == 100
+
+
+def test_compaction_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """The compactor reads partition columns as their directory text
+    through a read schema, so it never sets the session-wide inference
+    key another thread may be reading under."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    keys_set = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, k, v):
+        keys_set.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    path = str(tmp_path / "conf")
+    spark.range(100).select(
+        F.lit("00123").alias("pid"), F.col("id")
+    ).repartition(4).write.partitionBy("pid").parquet(path)
+    done = compact_partitioned_path(spark, path, ["pid"])
+    assert [d["partition"] for d in done] == ["pid=00123"]
+    assert spark.read.parquet(path).count() == 100
+    assert keys_set == []

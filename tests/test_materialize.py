@@ -5,7 +5,6 @@ from __future__ import annotations
 import gc
 import io
 import pathlib
-import time
 import tokenize
 
 from pyspark.sql import functions as F
@@ -47,7 +46,7 @@ def test_upstream_udf_runs_once_per_row(spark):
     assert calls.value == 200  # neither consumer re-ran the UDF
 
 
-def test_storage_drains_after_frame_is_dropped(spark):
+def test_storage_drains_after_frame_is_dropped(spark, drain_stored):
     gc.collect()
     spark._jvm.System.gc()  # noqa: SLF001
     base = _n_stored(spark)
@@ -58,18 +57,7 @@ def test_storage_drains_after_frame_is_dropped(spark):
         assert _n_stored(spark) > base
 
     use_and_drop()
-    n = base + 1
-    for _ in range(20):  # ContextCleaner is async; nudge and poll
-        # Each getPersistentRDDs() map is a py4j object in a Python
-        # reference cycle: collect it, then give py4j's finalizer
-        # thread (it wakes once a second) time to release it on the
-        # JVM side before the JVM GC, or the probe pins what it counts.
-        gc.collect()
-        time.sleep(1.2)
-        spark._jvm.System.gc()  # noqa: SLF001
-        n = _n_stored(spark)
-        if n <= base:
-            break
+    n = drain_stored(base, budget_s=24)  # ContextCleaner is async
     assert n <= base, f"{n - base} materialized RDDs left behind"
 
 

@@ -163,9 +163,9 @@ def test_mor_delete_partition_filter_prunes_scan(spark, ptable):
 
 
 def test_mor_delete_beyond_max_dv_rows_goes_distributed(spark, ptable):
-    # r10: beyond the bound the delete no longer raises — sidecars
-    # are written executor-side (full coverage in test_txdvdist)
-    out = tx.delete_from_table(spark, ptable, F.lit(True), max_dv_rows=3)
+    # r10: masking every row no longer raises — sidecars are written
+    # executor-side (full coverage in test_txdvdist)
+    out = tx.delete_from_table(spark, ptable, F.lit(True))
     assert out["mode"] == "mor"
     assert tx.read_table(spark, ptable).count() == 0
 
@@ -1286,3 +1286,141 @@ def test_vacuumed_snapshot_raises_concurrent_write(
     verb(spark, ptable)
     assert set(_as_dict(tx.read_table(spark, ptable))) >= {4, 5, 6}
     assert not {1, 3} & set(_as_dict(tx.read_table(spark, ptable)))
+
+
+# ---------------------------------------------------------------------------
+# one row-level DML body
+# ---------------------------------------------------------------------------
+
+
+def _table_files(path):
+    """Every file under the table except its commit log."""
+    return sorted(
+        os.path.relpath(os.path.join(d, n), path)
+        for d, _dirs, names in os.walk(path)
+        if tx.LOG_DIR not in os.path.relpath(d, path).split(os.sep)
+        for n in names
+    )
+
+
+@pytest.mark.parametrize("cdf", [False, True], ids=["cdf_off", "cdf_on"])
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("verb", ["delete", "update"])
+def test_row_level_dml_matrix(spark, tmp_path, verb, mode, cdf):
+    """DELETE and UPDATE share one body: for each verb, mode and
+    change-data setting, a statement that matches nothing commits
+    nothing and writes no sidecar or data file; a match changes
+    exactly the matched rows and the change feed types them; a
+    re-run MOR delete masks nothing new."""
+    path = str(tmp_path / "t")
+    rows = [(k, "A" if k % 2 else "B", 10 * k) for k in range(1, 9)]
+    tx.create_table(_rows(spark, *rows).repartition(2), path)
+    if cdf:
+        tx.enable_change_data(path)
+    key = f"rows_{verb}d"
+
+    def run(cond):
+        if verb == "delete":
+            return tx.delete_from_table(spark, path, cond, mode=mode)
+        return tx.update_table(spark, path, cond, {"v": "v + 1"}, mode=mode)
+
+    v0, files0 = tx.latest_version(path), _table_files(path)
+    # no derivable range, so the files are scanned and match nothing
+    out = run("v % 7 = 100")
+    assert out == {"version": None, "mode": mode, key: 0, "files_touched": 0}
+    assert (tx.latest_version(path), _table_files(path)) == (v0, files0)
+    out = run("k <= 3")
+    assert out["version"] == v0 + 1 and out[key] == 3
+    got = _as_dict(tx.read_table(spark, path))
+    if verb == "delete":
+        assert set(got) == set(range(4, 9))
+    else:
+        assert {k: v for k, (_, v) in got.items()} == {
+            k: 10 * k + (k <= 3) for k in range(1, 9)
+        }
+    feed = tx.table_changes_cdf(
+        spark, path, ["k"], after_version=v0, include_preimage=True
+    )
+    changes = {(r["k"], r["_change_type"], r["v"]) for r in feed.collect()}
+    if verb == "delete":
+        assert changes == {(k, "delete", 10 * k) for k in (1, 2, 3)}
+    else:
+        assert changes == {
+            (k, t, 10 * k + d)
+            for k in (1, 2, 3)
+            for t, d in (("update_preimage", 0), ("update_postimage", 1))
+        }
+    if verb == "delete" and mode == "mor":
+        again = run("k <= 3")
+        assert again["version"] is None and again[key] == 0
+
+
+def _next_job(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()  # noqa: SLF001
+
+
+@pytest.mark.parametrize("verb, most", [("delete", 7), ("update", 10)])
+def test_mor_dml_counts_in_the_mask_job(spark, tmp_path, verb, most):
+    """The executor-side sidecar writer also returns each file's newly
+    masked count, so a MOR statement runs no separate count job. On a
+    two-file table that already carries a deletion vector, the
+    statement starts at most 7 (delete) or 10 (update) Spark jobs —
+    a separate count made those 8 and 11."""
+    path = str(tmp_path / "t")
+    rows = [(k, "A" if k % 2 else "B", 10 * k) for k in range(40)]
+    tx.create_table(_rows(spark, *rows).repartition(2), path)
+    tx.delete_from_table(spark, path, "k = 1")
+    j0 = _next_job(spark)
+    if verb == "delete":
+        out = tx.delete_from_table(spark, path, "k < 10")
+    else:
+        out = tx.update_table(spark, path, "k < 10", {"v": "v + 1"})
+    jobs = _next_job(spark) - j0
+    assert out[f"rows_{verb}d"] == 9 and out["files_touched"] == 2
+    assert jobs <= most, f"{verb} started {jobs} jobs"
+
+
+def _sidecar_decodes(path):
+    """(function, line) of every ``unpackbits`` call and every
+    ``b64decode`` of a sidecar ``payload`` in one module."""
+    import ast
+
+    tree = ast.parse(path.read_text())
+    found = []
+
+    def walk(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = (
+                child.name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else fn
+            )
+            if isinstance(child, ast.Call):
+                name = getattr(child.func, "attr", getattr(child.func, "id", ""))
+                if name == "unpackbits" or (
+                    name == "b64decode" and "payload" in ast.unparse(child)
+                ):
+                    found.append((inner, child.lineno))
+            walk(child, inner)
+
+    walk(tree, None)
+    return found
+
+
+def test_sidecar_payload_decodes_in_one_place():
+    """The deletion-vector payload format is decoded only by
+    `txtable._dv_decode`; every reader goes through it."""
+    import pathlib
+
+    pkg = pathlib.Path(tx.__file__).resolve().parent.parent
+    txtable = pkg / "operators" / "txtable.py"
+    assert {fn for fn, _ in _sidecar_decodes(txtable)} == {"_dv_decode"}
+    offenders = [
+        f"{p.relative_to(pkg)}:{line} in {fn}"
+        for p in sorted(pkg.rglob("*.py"))
+        for fn, line in _sidecar_decodes(p)
+        if not (p == txtable and fn == "_dv_decode")
+    ]
+    assert not offenders, "decode sidecars with _dv_decode:\n" + "\n".join(
+        offenders
+    )

@@ -1,11 +1,10 @@
 """Distributed deletion-vector sidecar writes (r10).
 
-Above ``max_dv_rows`` the MOR delete/update no longer raises: each
-touched file's task writes its own sidecar executor-side
-(tmp+os.replace) and the driver collects only pointer rows — masking
-any fraction of the table succeeds in MOR mode. Crash debris (stray
-sidecars and .tmp- files) is invisible to readers and reaped by
-vacuum's age guard.
+Every MOR delete/update writes its sidecars executor-side: each
+touched file's task writes its own sidecar (tmp+os.replace) and the
+driver collects only pointer rows — masking any fraction of the table
+succeeds in MOR mode. Crash debris (stray sidecars and .tmp- files)
+is invisible to readers and reaped by vacuum's age guard.
 """
 
 from __future__ import annotations
@@ -30,14 +29,12 @@ def test_mor_delete_beyond_bound_writes_executor_side(spark, tmp_path):
     b = str(tmp_path / "collect")
     for p in (a, b):
         tx.create_table(_rows(spark, 200).repartition(4), p)
-    # max_dv_rows=3 forces the distributed path for the 100-row mask
-    r = tx.delete_from_table(
-        spark, a, "k % 2 = 0", mode="mor", max_dv_rows=3
-    )
+    # the 100-row mask is written by the executor-side writer
+    r = tx.delete_from_table(spark, a, "k % 2 = 0", mode="mor")
     assert r["mode"] == "mor" and r["rows_deleted"] == 100
     r2 = tx.delete_from_table(spark, b, "k % 2 = 0", mode="mor")
     assert r2["rows_deleted"] == 100
-    # same result through either topology; zero files rewritten
+    # same result on two identical tables; zero files rewritten
     assert sorted(
         x["k"] for x in tx.read_table(spark, a).collect()
     ) == sorted(x["k"] for x in tx.read_table(spark, b).collect())
@@ -53,26 +50,22 @@ def test_mor_delete_beyond_bound_writes_executor_side(spark, tmp_path):
 def test_distributed_path_unions_previous_sidecar(spark, tmp_path):
     path = str(tmp_path / "u")
     tx.create_table(_rows(spark, 100).coalesce(1), path)
-    tx.delete_from_table(spark, path, "k < 10", mode="mor", max_dv_rows=2)
-    tx.delete_from_table(
-        spark, path, "k >= 90", mode="mor", max_dv_rows=2
-    )
+    tx.delete_from_table(spark, path, "k < 10", mode="mor")
+    tx.delete_from_table(spark, path, "k >= 90", mode="mor")
     got = sorted(r["k"] for r in tx.read_table(spark, path).collect())
     assert got == list(range(10, 90))
     # the live pointer's cardinality is the UNION of both deletes
     (meta,) = tx._fold(path).files.values()
     assert meta["dv"]["cardinality"] == 20
     # re-running the predicate masks nothing new (live-row semantics)
-    r = tx.delete_from_table(spark, path, "k < 10", mode="mor", max_dv_rows=2)
+    r = tx.delete_from_table(spark, path, "k < 10", mode="mor")
     assert r["version"] is None and r["rows_deleted"] == 0
 
 
 def test_mor_update_beyond_bound(spark, tmp_path):
     path = str(tmp_path / "up")
     tx.create_table(_rows(spark, 120).repartition(3), path)
-    r = tx.update_table(
-        spark, path, "k < 100", {"v": "v + 1"}, mode="mor", max_dv_rows=5
-    )
+    r = tx.update_table(spark, path, "k < 100", {"v": "v + 1"}, mode="mor")
     assert r["mode"] == "mor" and r["rows_updated"] == 100
     rows = {x["k"]: x["v"] for x in tx.read_table(spark, path).collect()}
     assert len(rows) == 120
@@ -105,11 +98,11 @@ def test_crash_debris_invisible_and_reaped(spark, tmp_path):
 
 
 def test_distributed_dv_cdf_still_typed(spark, tmp_path):
-    """The change feed reads distributed-written sidecars exactly like
-    driver-written ones (same format, same pointer discipline)."""
+    """The change feed reads executor-written sidecars (same format,
+    same pointer discipline as every sidecar)."""
     path = str(tmp_path / "feed")
     tx.create_table(_rows(spark, 50).coalesce(1), path)
-    tx.delete_from_table(spark, path, "k < 5", mode="mor", max_dv_rows=2)
+    tx.delete_from_table(spark, path, "k < 5", mode="mor")
     feed = tx.table_changes_cdf(spark, path, ["k"], after_version=0)
     got = {(r["k"], r["_change_type"]) for r in feed.collect()}
     assert got == {(k, "delete") for k in range(5)}
