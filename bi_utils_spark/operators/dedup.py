@@ -3,8 +3,9 @@
 Four tiers, cheapest first — a production pipeline runs them in order:
 
 1. :func:`dedup_exact` — content-hash groupBy (one shuffle on the hash).
-2. :func:`jaccard_similarity_join` — exact n-gram/token Jaccard via an
-   inverted-index self-join (the oracle-checkable ground truth).
+2. :func:`jaccard_similarity_join` — exact n-gram/token Jaccard via a
+   prefix-filtered inverted-index self-join (the oracle-checkable
+   ground truth).
 3. MinHash + LSH banding — :func:`minhash_signatures` →
    :func:`minhash_near_dup_join`: sub-quadratic candidate generation,
    then exact verification of candidates only.
@@ -20,6 +21,8 @@ Scale notes inline per operator.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -125,15 +128,6 @@ def dedup_exact(
 # ---------------------------------------------------------------------------
 
 
-# Below this threshold the PPJoin prefix stops pruning: prefix length is
-# sz − ceil(t·sz) + 1 ≈ (1−t)·sz + 1, so at t=0.5 the "pruned" index still
-# holds ~half of every shingle set while the plan pays two extra shuffles
-# (doc-frequency join + candidate dedup). Interleaved A/B at sf0.1
-# (documents, 3-shingles, t=0.5): one-stage 0.80 s vs PPJoin 3.13 s
-# steady-state — the crossover sits near t≈0.7 (see SCALE.md).
-PPJOIN_MIN_THRESHOLD = 0.7
-
-
 def jaccard_similarity_join(
     df: DataFrame,
     id_col: str,
@@ -141,55 +135,47 @@ def jaccard_similarity_join(
     threshold: float = 0.7,
     shingle_n: int = 1,
     max_token_doc_freq: int | None = None,
-    prefix_filter: bool | None = None,
 ) -> DataFrame:
     """All pairs (a < b) with token/shingle Jaccard ≥ threshold.
 
-    Two exact plans, chosen by threshold when ``prefix_filter`` is
-    None (the default):
+    One exact plan: an inverted-index self-join with PPJoin-style
+    lossless pruning (Bayardo et al. WWW'07 / Vernica et al.
+    SIGMOD'10 for the MapReduce form):
 
-    - ``prefix_filter=True`` — inverted-index plan with PPJoin-style
-      lossless pruning (Bayardo et al. WWW'07 / Vernica et al.
-      SIGMOD'10 for the MapReduce form):
+    1. prefix filter — order shingles globally rare-first (ascending
+       doc frequency); a pair with Jaccard ≥ t must share a shingle
+       within each set's first ``sz − ceil(t·sz) + 1`` shingles, so
+       only those prefixes are indexed and self-joined;
+    2. length filter — qualifying pairs satisfy ``t·|A| ≤ |B| ≤
+       |A|/t``, applied inside the candidate join;
+    3. verify — exact |A∩B| via array_intersect on the full shingle
+       sets, for surviving candidates only (the verify step
+       :func:`minhash_near_dup_join` shares).
 
-      1. prefix filter — order shingles globally rare-first (ascending
-         doc frequency); a pair with Jaccard ≥ t must share a shingle
-         within each set's first ``sz − ceil(t·sz) + 1`` shingles, so
-         only those prefixes are indexed and self-joined;
-      2. length filter — qualifying pairs satisfy ``t·|A| ≤ |B| ≤
-         |A|/t``, applied inside the candidate join;
-      3. verify — exact |A∩B| via array_intersect on the full ordered
-         shingle sets, for surviving candidates only.
-
-    - ``prefix_filter=False`` — plain one-stage co-occurrence count
-      over the full inverted index (fewer shuffles; wins when the
-      prefix wouldn't prune).
-
-    Plan choice: the prefix indexes a ``(1−t)`` fraction of every set,
-    so it only pays for its extra doc-frequency and candidate-dedup
-    shuffles when ``t`` is high. Auto mode uses PPJoin for
-    ``t ≥ PPJOIN_MIN_THRESHOLD`` (measured crossover, SCALE.md) and
-    the one-stage plan below it.
+    The prefix plan is never slower beyond tiny inputs, even at low
+    t where the prefix holds about half of every set (4 cores,
+    3-shingles, pair sets identical to a full co-occurrence count):
+    sf0.1 ``documents`` 2.34 s vs 2.32 s at t=0.5 and 1.47 vs 2.54 s
+    at t=0.7; 8k generated documents 2.96 vs 5.17 s at t=0.5; 100k
+    documents 40.9 s, while the full-index self-join (Σ df² rows)
+    had not finished after 300 s. See SCALE.md "Dedup tiers".
 
     ``max_token_doc_freq`` drops shingles occurring in more than that
-    many documents from *candidate generation* (the skew guard for
-    boilerplate shingles at corpus scale). With the cap both plans
-    lose recall but never report a false pair: the prefix plan still
-    verifies exact Jaccard on the full sets, and the one-stage plan's
-    co-occurrence counts can only shrink (its reported ``jaccard`` is
-    a lower bound for capped pairs). Leave None for exact results.
+    many documents from the prefix entries (the skew guard for
+    boilerplate shingles at corpus scale). A capped run loses
+    candidates, never correctness: it reports the exact Jaccard for a
+    subset of the exact pairs, because the verify step reads the full
+    sets. Leave None for the complete result.
 
     Scale: the shuffle key of the candidate join is the shingle;
     ultra-common shingles are skew + quadratic blowup. The prefix
-    filter removes them structurally for large sets at high t (common
-    shingles sort last and fall outside every prefix); at low t use
-    ``max_token_doc_freq``.
+    filter removes them structurally (common shingles sort last and
+    fall outside every prefix unless a set is small or t is low);
+    ``max_token_doc_freq`` bounds what is left.
 
     Shingle sets are computed per input row, so ``id_col`` must be
     unique: rows sharing an id are not merged into one document.
     """
-    if prefix_filter is None:
-        prefix_filter = threshold >= PPJOIN_MIN_THRESHOLD
     # Shingle identity is carried as 64→31-bit hashes, not strings:
     # the corpus is tokenized once, the inverted index and the
     # self-join shuffle 8-byte keys, and Jaccard over the distinct
@@ -198,74 +184,33 @@ def jaccard_similarity_join(
     # map-only Arrow kernel (lshkern.per_doc_signatures), so no token
     # row crosses an exchange before the inverted-index join.
     #
-    # The set frame feeds two plan consumers in either branch (the
-    # self-join sides below / the doc-frequency aggregate + the work
-    # join) and the kernel output carries no exchange ReuseExchange
-    # could share, so it is materialized once.
+    # The set frame feeds the doc-frequency aggregate, the prefix
+    # entries and both verify sides, and the kernel output carries no
+    # exchange ReuseExchange could share, so it is materialized once.
     doc_sets = materialize(
         per_doc_signatures(df, id_col, text_col, shingle_n, want_set=True)
     )
     dist = doc_sets.select("id", F.explode("sh_set").alias("sh"))
-    if not prefix_filter:
-        # Carry the set size alongside every shingle row: pair-group keys
-        # then already hold both sizes, so no post-aggregation size joins.
-        # The size is free off the kernel's set column — no count window.
-        inv = doc_sets.select(
-            "id",
-            F.size("sh_set").alias("sz"),
-            F.explode("sh_set").alias("tok"),
-        )
-        if max_token_doc_freq is not None:
-            freq = inv.groupBy("tok").agg(F.count("*").alias("df_tok"))
-            inv = (
-                inv.join(freq.filter(F.col("df_tok") <= max_token_doc_freq), "tok")
-                .drop("df_tok")
-            )
-        a, b = inv.alias("a"), inv.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.tok") == F.col("b.tok")) & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.sz").alias("sz_a"),
-                F.col("b.sz").alias("sz_b"),
-            )
-            .agg(F.count("*").alias("inter"))
-        )
-        return _jaccard_from_counts(pairs, threshold)
-
     dfq = dist.groupBy("sh").agg(F.count("*").alias("dfq"))
-    work = dist.join(dfq, "sh")
-    # One groupBy(id) produces everything per-doc at once: the FULL
-    # shingle set ordered rare-first (global order = (doc freq asc,
-    # shingle hash) — total and data-independent, as the prefix lemma
-    # requires), its size, and the prefix length. This replaces two
-    # window passes (count + row_number over id) with a single shuffle,
-    # and the ordered array doubles as the verify-stage operand. The
-    # doc-freq cap is applied to the *prefix entries only* (below), so
-    # sz and the verify arrays always reflect the unfiltered sets —
-    # capped runs lose candidates, never report a wrong Jaccard.
-    sets = (
-        work.groupBy("id")
-        .agg(F.sort_array(F.collect_list(F.struct("dfq", "sh"))).alias("arr"))
-        .withColumn("sz", F.size("arr"))
-        .withColumn(
-            "plen",
-            F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1,
-        )
-        .withColumn("shs", F.transform("arr", lambda x: x["sh"]))
-    )
-    pref_entries = F.slice("arr", F.lit(1), F.col("plen"))
+    # One groupBy(id) orders each doc's shingles rare-first (global
+    # order = (doc freq asc, shingle hash) — total and
+    # data-independent, as the prefix lemma requires). The doc-freq
+    # cap applies to the prefix entries only, so sz (and the verify
+    # step, which reads doc_sets) always reflects the full sets.
+    arr = F.col("arr")
+    plen = F.size(arr) - F.ceil(F.lit(threshold) * F.size(arr)) + 1
+    pref_entries = F.slice(arr, F.lit(1), plen)
     if max_token_doc_freq is not None:
         pref_entries = F.filter(
             pref_entries, lambda x: x["dfq"] <= F.lit(max_token_doc_freq)
         )
-    prefix = sets.select(
-        "id", "sz", F.explode(pref_entries).alias("p")
-    ).select("id", "sz", F.col("p.sh").alias("sh"))
+    prefix = (
+        dist.join(dfq, "sh")
+        .groupBy("id")
+        .agg(F.sort_array(F.collect_list(F.struct("dfq", "sh"))).alias("arr"))
+        .select("id", F.size(arr).alias("sz"), F.explode(pref_entries).alias("p"))
+        .select("id", "sz", F.col("p.sh").alias("sh"))
+    )
     a, b = prefix.alias("a"), prefix.alias("b")
     cand = (
         a.join(
@@ -282,47 +227,39 @@ def jaccard_similarity_join(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    # Verify joins attach the two ordered shingle arrays (one row per
-    # doc side, not one row per shingle) and compute |A∩B| in codegen
-    # with array_intersect. Bytes shuffled are still ~|candidates| ×
-    # 2 × avg set size — the win is row count (no per-shingle join +
-    # groupBy over exploded rows), not shuffle volume; a hot doc's
-    # array is duplicated once per candidate it appears in. At 100 TB
-    # bucket `sets` by id (or broadcast the high-fanout docs) so the
-    # verify join co-locates without re-shuffling the arrays.
-    sa = sets.select(
-        F.col("id").alias("id_a"),
-        F.col("shs").alias("shs_a"),
-        F.col("sz").alias("sz_a"),
+    return _verified_jaccard(cand, doc_sets, threshold)
+
+
+def _verified_jaccard(
+    cand: DataFrame, doc_sets: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidate pairs whose exact
+    shingle-set Jaccard is at least ``threshold``.
+
+    Both documents' ``sh_set`` re-attach from the materialized
+    per-doc frame (one row per doc side, not one per shingle) and
+    |A∩B| is computed in codegen with array_intersect. Bytes shuffled
+    are ~|candidates| × 2 × avg set size; a hot doc's set is
+    duplicated once per candidate it appears in. At 100 TB bucket the
+    set frame by id (or broadcast the high-fanout docs) so the verify
+    join co-locates without re-shuffling the sets."""
+    sets = doc_sets.select("id", F.col("sh_set").alias("sh"))
+    a = sets.alias("sa")
+    b = sets.alias("sb")
+    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
+    union = (
+        F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - inter
     )
-    sb = sets.select(
-        F.col("id").alias("id_b"),
-        F.col("shs").alias("shs_b"),
-        F.col("sz").alias("sz_b"),
-    )
-    pairs = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
+    return (
+        cand.join(a, F.col("id_a") == F.col("sa.id"))
+        .join(b, F.col("id_b") == F.col("sb.id"))
         .select(
             "id_a",
             "id_b",
-            "sz_a",
-            "sz_b",
-            F.size(F.array_intersect("shs_a", "shs_b")).alias("inter"),
+            (inter.cast("double") / union.cast("double")).alias("jaccard"),
         )
+        .filter(F.col("jaccard") >= threshold)
     )
-    return _jaccard_from_counts(pairs, threshold)
-
-
-def _jaccard_from_counts(pairs: DataFrame, threshold: float) -> DataFrame:
-    return pairs.select(
-        "id_a",
-        "id_b",
-        (
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double")
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -496,9 +433,10 @@ def minhash_near_dup_join(
     banding self-join sides, two verify sides) and carries no exchange
     ReuseExchange could share, so it is materialized once.
 
-    The verify join re-attaches the shingle-hash sets only for
-    candidate pairs (a tiny fraction of the corpus) and computes
-    |A∩B| / |A∪B| with array_intersect — no false positives in the
+    The verify join (shared with :func:`jaccard_similarity_join`)
+    re-attaches the shingle-hash sets only for candidate pairs (a
+    tiny fraction of the corpus) and computes |A∩B| / |A∪B| with
+    array_intersect — no false positives in the
     output; recall is governed by the (bands, rows) choice and, when
     set, ``max_bucket_size`` (hot-bucket cap, see
     :func:`minhash_candidates`).
@@ -519,23 +457,7 @@ def minhash_near_dup_join(
     )
     sigs = per_doc.select("id", "minhash")
     cand = minhash_candidates(sigs, num_bands, max_bucket_size)
-    sets = per_doc.select("id", F.col("sh_set").alias("sh"))
-    a = sets.alias("sa")
-    b = sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    union = (
-        F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - inter
-    )
-    return (
-        cand.join(a, F.col("id_a") == F.col("sa.id"))
-        .join(b, F.col("id_b") == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verified_jaccard(cand, per_doc, threshold)
 
 
 def minhash_estimated_jaccard(a: Column, b: Column) -> Column:
@@ -947,6 +869,79 @@ def winnowing_near_dup_join(
 # ---------------------------------------------------------------------------
 
 
+def _unit_doc_freq(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    min_df: int,
+    split: str,
+    identity: Callable[[Column], Column],
+    name: str,
+) -> DataFrame:
+    """(``name``, df) for every non-blank unit of ``text_col`` split
+    on the regex ``split`` whose ``identity`` (a Column → Column
+    form of the unit) occurs in >= ``min_df`` distinct documents, df
+    descending, ties by identity ascending."""
+    units = df.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.split(F.col(text_col), split, -1)).alias("u"),
+    ).filter(F.trim("u") != "")
+    return (
+        units.groupBy(identity(F.col("u")).alias(name))
+        .agg(F.countDistinct("id").alias("df"))
+        .filter(F.col("df") >= min_df)
+        .orderBy(F.desc("df"), F.asc(name))
+    )
+
+
+def _remove_boilerplate_units(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    min_df: int,
+    split: str,
+    identity: Callable[[Column], Column],
+    joiner: str,
+    count_name: str,
+) -> DataFrame:
+    """Drop every non-blank unit (``text_col`` split on the regex
+    ``split``) whose ``identity`` occurs in >= ``min_df`` distinct
+    documents and rejoin the survivors in order with ``joiner``:
+    (``id_col``, text_cleaned, ``count_name``, n_removed). Only the
+    sha2 of each unit's identity crosses the doc-frequency shuffle
+    and the flag join."""
+    units = df.select(
+        F.col(id_col).alias("id"),
+        F.posexplode(F.split(F.col(text_col), split, -1)).alias("pos", "u"),
+    ).withColumn("uh", F.sha2(identity(F.col("u")), 256))
+    flags = (
+        units.filter(F.trim("u") != "")
+        .groupBy("uh")
+        .agg(F.countDistinct("id").alias("__df"))
+        .filter(F.col("__df") >= min_df)
+    )
+    flagged = units.join(flags, "uh", "left").withColumn(
+        "__rm",
+        (F.col("__df").isNotNull() & (F.trim("u") != "")).cast("int"),
+    )
+    kept = F.array_sort(
+        F.collect_list(F.when(F.col("__rm") == 0, F.struct("pos", "u")))
+    )
+    return (
+        flagged.groupBy("id")
+        .agg(
+            F.array_join(
+                F.transform(kept, lambda x: x["u"]), joiner
+            ).alias("text_cleaned"),
+            F.count("*").alias(count_name),
+            F.sum("__rm").alias("n_removed"),
+        )
+        .select(
+            F.col("id").alias(id_col), "text_cleaned", count_name, "n_removed"
+        )
+    )
+
+
 def line_doc_freq(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -957,22 +952,15 @@ def line_doc_freq(
     DISTINCT documents — the boilerplate inventory, df descending
     (ties: line ascending) so the worst offenders lead.
 
-    Scale shape: one posexplode (map-only), then a distinct-count
+    Scale shape: one explode (map-only), then a distinct-count
     aggregation keyed on the line — countDistinct partial-aggregates
     map-side, so hot lines (the exact rows we are hunting) never
     funnel raw multiplicity into one reducer. Output is only the
     lines ABOVE the threshold — at 100 TB that is the small end of
     the distribution, not the corpus.
     """
-    lines = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), "\n", -1)).alias("line"),
-    ).filter(F.trim("line") != "")
-    return (
-        lines.groupBy("line")
-        .agg(F.countDistinct("id").alias("df"))
-        .filter(F.col("df") >= min_df)
-        .orderBy(F.desc("df"), F.asc("line"))
+    return _unit_doc_freq(
+        df, id_col, text_col, min_df, "\n", lambda u: u, "line"
     )
 
 
@@ -997,36 +985,8 @@ def remove_boilerplate_lines(
     total, and (the near-dup discipline throughout this module) no
     doc-pair enumeration anywhere.
     """
-    lines = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), "\n", -1)).alias("pos", "line"),
-    ).withColumn("lh", F.sha2(F.col("line"), 256))
-    flags = (
-        lines.filter(F.trim("line") != "")
-        .groupBy("lh")
-        .agg(F.countDistinct("id").alias("__df"))
-        .filter(F.col("__df") >= min_df)
-    )
-    flagged = lines.join(flags, "lh", "left").withColumn(
-        "__rm", F.col("__df").isNotNull().cast("int")
-    )
-    kept = F.array_sort(
-        F.collect_list(
-            F.when(F.col("__rm") == 0, F.struct("pos", "line"))
-        )
-    )
-    return (
-        flagged.groupBy("id")
-        .agg(
-            F.array_join(
-                F.transform(kept, lambda x: x["line"]), "\n"
-            ).alias("text_cleaned"),
-            F.count("*").alias("n_lines"),
-            F.sum("__rm").alias("n_removed"),
-        )
-        .select(
-            F.col("id").alias(id_col), "text_cleaned", "n_lines", "n_removed"
-        )
+    return _remove_boilerplate_units(
+        df, id_col, text_col, min_df, "\n", lambda u: u, "\n", "n_lines"
     )
 
 
@@ -1044,15 +1004,8 @@ def paragraph_doc_freq(
     min_df. Identity is the trimmed paragraph; same scale shape as
     :func:`line_doc_freq` (map-only explode, partial-aggregated
     distinct count, above-threshold output only)."""
-    paras = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), r"\n{2,}", -1)).alias("para"),
-    ).filter(F.trim("para") != "")
-    return (
-        paras.groupBy(F.trim("para").alias("paragraph"))
-        .agg(F.countDistinct("id").alias("df"))
-        .filter(F.col("df") >= min_df)
-        .orderBy(F.desc("df"), F.asc("paragraph"))
+    return _unit_doc_freq(
+        df, id_col, text_col, min_df, r"\n{2,}", F.trim, "paragraph"
     )
 
 
@@ -1072,40 +1025,7 @@ def remove_boilerplate_paragraphs(
     Scale shape == :func:`remove_boilerplate_lines`: sha2 digests
     shuffle, paragraph text never does; flag join + one ordered
     collect_list per doc; no pair enumeration."""
-    paras = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), r"\n{2,}", -1)).alias(
-            "pos", "para"
-        ),
-    ).withColumn("ph", F.sha2(F.trim(F.col("para")), 256))
-    flags = (
-        paras.filter(F.trim("para") != "")
-        .groupBy("ph")
-        .agg(F.countDistinct("id").alias("__df"))
-        .filter(F.col("__df") >= min_df)
-    )
-    flagged = paras.join(flags, "ph", "left").withColumn(
-        "__rm",
-        (F.col("__df").isNotNull() & (F.trim("para") != "")).cast("int"),
-    )
-    kept = F.array_sort(
-        F.collect_list(
-            F.when(F.col("__rm") == 0, F.struct("pos", "para"))
-        )
-    )
-    return (
-        flagged.groupBy("id")
-        .agg(
-            F.array_join(
-                F.transform(kept, lambda x: x["para"]), "\n\n"
-            ).alias("text_cleaned"),
-            F.count("*").alias("n_paragraphs"),
-            F.sum("__rm").alias("n_removed"),
-        )
-        .select(
-            F.col("id").alias(id_col),
-            "text_cleaned",
-            "n_paragraphs",
-            "n_removed",
-        )
+    return _remove_boilerplate_units(
+        df, id_col, text_col, min_df, r"\n{2,}", F.trim, "\n\n",
+        "n_paragraphs",
     )

@@ -2527,7 +2527,6 @@ def merge_tx_table(
     now=None,
     delete_col: str | None = None,
     broadcast_deletes: bool = True,
-    validate_partition_stability: bool = False,
     merge_schema: bool = False,
     app: tuple[str, int] | None = None,
     max_source_partitions: int = 100_000,
@@ -2555,9 +2554,8 @@ def merge_tx_table(
       correctness by construction, priced at one tiny source-range
       agg, zone-map prefiltering of the untouched files on the pk
       ranges, and one column-pruned semi-join over the survivors;
-      ``"error"`` raises loudly BEFORE anything commits
-      (``validate_partition_stability=True`` is the back-compat
-      alias); ``"ignore"`` restores the scope-strict behavior for
+      ``"error"`` raises loudly BEFORE anything commits;
+      ``"ignore"`` restores the scope-strict behavior for
       upstreams that contractually never move keys (zero extra cost,
       strands duplicates if the contract is broken).
     - **Unpartitioned table:** full-snapshot rewrite (the honest
@@ -2759,11 +2757,10 @@ def merge_tx_table(
         ]
         if stale:
             removed = sorted(set(removed) | set(stale))
-        pm = "error" if validate_partition_stability else on_partition_move
-        if pm not in ("migrate", "error", "ignore"):
+        if on_partition_move not in ("migrate", "error", "ignore"):
             raise ValueError(
                 f"merge_tx_table: on_partition_move must be "
-                f"'migrate' | 'error' | 'ignore', got {pm!r}"
+                f"'migrate' | 'error' | 'ignore', got {on_partition_move!r}"
             )
         removed_set = set(removed)
         outside = {
@@ -2771,7 +2768,7 @@ def merge_tx_table(
             for rel, meta in snap.files.items()
             if rel not in removed_set
         }
-        if outside and pm != "ignore":
+        if outside and on_partition_move != "ignore":
             # a source row whose partition value CHANGED (trivial to
             # hit with a generated partition column — update the base
             # timestamp and the derived partition moves) matches a
@@ -2808,7 +2805,7 @@ def merge_tx_table(
                     .distinct()
                     .collect()
                 )
-                if hit_rows and pm == "error":
+                if hit_rows and on_partition_move == "error":
                     raise ValueError(
                         f"merge_tx_table: {len(hit_rows)} file(s) hold "
                         "target rows OUTSIDE the source's partitions "
@@ -3304,23 +3301,7 @@ def materialize_deletes(
     }
     if not dvd:
         return None
-    schema = snap.spark_schema()
-    df = _read_files_live(spark, path, dvd, schema)
-    counts = _group_counts(snap, path, list(dvd), 1, None, spark=spark)
-    df = _compaction_layout(
-        spark, df, snap.partition_cols, counts, None, 12
-    )
-    added = _stage(
-        df, path, snap.partition_cols, table_schema=schema
-    )
-    return _rewrite_commit(
-        path,
-        snap.version,
-        "purge",
-        added,
-        sorted(dvd),
-        conflict="files",
-    )
+    return _rewrite_files(spark, path, snap, list(dvd), "purge")
 
 
 # ---------------------------------------------------------------------------
@@ -3615,6 +3596,56 @@ def _compaction_layout(
     return out
 
 
+def _rewrite_files(
+    spark: SparkSession,
+    path: str,
+    snap: Snapshot,
+    rels: Sequence[str],
+    action: str,
+    target_files: int = 1,
+    target_bytes: int | None = None,
+    zorder_by: Sequence[str] | None = None,
+    zorder_bits: int = 12,
+) -> int:
+    """Rewrite the live rows of the files ``rels`` of ``snap`` into
+    per-partition groups (:func:`_group_counts`), optionally
+    Z-ordered with manifest-derived bounds, and commit the swap as
+    ``action`` under ``conflict="files"`` — an interleaved commit
+    rebases past it when it touches none of ``rels``. Deletion
+    vectors apply on the read, so masked rows are not rewritten. The
+    one body of `compact_table`, `compact_partitions` and
+    `materialize_deletes`; returns the new version."""
+    schema = snap.spark_schema()
+    df = (
+        _read_files_live(
+            spark, path, {rel: snap.files[rel] for rel in rels}, schema
+        )
+        if rels
+        else spark.createDataFrame([], schema)
+    )
+    counts = _group_counts(
+        snap, path, rels, target_files, target_bytes, spark=spark
+    )
+    bounds = (
+        _zorder_bounds_from_manifest(snap, rels, zorder_by)
+        if zorder_by
+        else None
+    )
+    df = _compaction_layout(
+        spark,
+        df,
+        snap.partition_cols,
+        counts,
+        zorder_by,
+        zorder_bits,
+        zorder_bounds=bounds,
+    )
+    added = _stage(df, path, snap.partition_cols, table_schema=schema)
+    return _rewrite_commit(
+        path, snap.version, action, added, sorted(rels), conflict="files"
+    )
+
+
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -3641,36 +3672,16 @@ def compact_table(
     swap."""
     snap = _fold(path)
     _require_writer(snap, path)
-    schema = snap.spark_schema()
-    df = read_table(spark, path, version=snap.version)
-    counts = _group_counts(
-        snap, path, list(snap.files), target_files, target_bytes,
-        spark=spark,
-    )
-    bounds = (
-        _zorder_bounds_from_manifest(snap, list(snap.files), zorder_by)
-        if zorder_by
-        else None
-    )
-    df = _compaction_layout(
+    return _rewrite_files(
         spark,
-        df,
-        snap.partition_cols,
-        counts,
+        path,
+        snap,
+        list(snap.files),
+        "compact",
+        target_files,
+        target_bytes,
         zorder_by,
         zorder_bits,
-        zorder_bounds=bounds,
-    )
-    added = _stage(
-        df, path, snap.partition_cols, table_schema=schema
-    )
-    return _rewrite_commit(
-        path,
-        snap.version,
-        "compact",
-        added,
-        sorted(snap.files),
-        conflict="files",
     )
 
 
@@ -3816,37 +3827,16 @@ def compact_partitions(
     ]
     if not removed:
         return None
-    schema = snap.spark_schema()
-    df = _read_files_live(
-        spark, path, {rel: snap.files[rel] for rel in removed}, schema
-    )
-    counts = _group_counts(
-        snap, path, removed, target_files, target_bytes, spark=spark
-    )
-    bounds = (
-        _zorder_bounds_from_manifest(snap, removed, zorder_by)
-        if zorder_by
-        else None
-    )
-    df = _compaction_layout(
+    return _rewrite_files(
         spark,
-        df,
-        snap.partition_cols,
-        counts,
+        path,
+        snap,
+        removed,
+        "compact",
+        target_files,
+        target_bytes,
         zorder_by,
         zorder_bits,
-        zorder_bounds=bounds,
-    )
-    added = _stage(
-        df, path, snap.partition_cols, table_schema=schema
-    )
-    return _rewrite_commit(
-        path,
-        snap.version,
-        "compact",
-        added,
-        sorted(removed),
-        conflict="files",
     )
 
 
@@ -5627,35 +5617,11 @@ def table_changes(
     high-water mark predates surviving history, and resuming past
     the gap would silently skip the truncated commits' rows."""
     snap = _fold(path)  # validates table exists; latest schema
-    commits, _ = _list_log(path)
-    cset = set(commits)
-    hi = commits[-1] if up_to is None else up_to
-    if hi > commits[-1]:
-        raise ValueError(
-            f"table_changes: up_to=v{hi} exceeds the latest commit "
-            f"v{commits[-1]}"
-        )
-    if after_version > commits[-1]:
-        raise ValueError(
-            f"table_changes: after_version=v{after_version} exceeds "
-            f"the latest commit v{commits[-1]} — a stale or foreign "
-            "high-water mark; silently returning nothing would hide it"
-        )
-    if up_to is not None and up_to < after_version:
-        raise ValueError(
-            f"table_changes: up_to=v{up_to} < after_version="
-            f"v{after_version} — swapped or stale arguments; an empty "
-            "range is only legal at equality (no new commits)"
-        )
+    hi, _ = _cdf_validate_range(
+        path, after_version, up_to, verb="table_changes", base=False
+    )
     added: dict[str, dict] = {}
     for v in range(after_version + 1, hi + 1):
-        if v not in cset:
-            raise ValueError(
-                f"table_changes: commit v{v} is no longer in the log "
-                f"(surviving range starts at v{commits[0]}) — history "
-                "was truncated (forget_keys); re-baseline the "
-                "consumer from a full read_table snapshot"
-            )
         e = _load_entry(path, v)
         if e["action"] not in ("append", "create", "clone"):
             raise ValueError(
@@ -5675,32 +5641,50 @@ def table_changes(
 
 
 def _cdf_validate_range(
-    path: str, after_version: int, up_to: int | None
+    path: str,
+    after_version: int,
+    up_to: int | None,
+    verb: str = "cdf",
+    base: bool = True,
 ) -> tuple[int, list[int]]:
+    """Check the change range (after_version, up_to] against the log;
+    return (hi, commits) with hi = up_to or the latest commit.
+
+    Raises ValueError, prefixed ``verb``, when a bound exceeds the
+    latest commit (a stale or foreign high-water mark), when the
+    bounds are swapped (an empty range is legal only at equality), or
+    when a commit the range reads was truncated away (forget_keys,
+    expire_log): resuming past the gap would silently skip its rows.
+    With ``base`` the snapshot at ``after_version`` is read too (the
+    change feed folds it), so that commit must survive as well."""
     commits, _ = _list_log(path)
     if not commits:
         raise FileNotFoundError(f"no tx table at {path}")
     hi = commits[-1] if up_to is None else up_to
     if hi > commits[-1]:
         raise ValueError(
-            f"cdf: up_to=v{hi} exceeds the latest commit v{commits[-1]}"
+            f"{verb}: up_to=v{hi} exceeds the latest commit v{commits[-1]}"
         )
     if after_version > commits[-1]:
         raise ValueError(
-            f"cdf: after_version=v{after_version} exceeds the latest "
-            f"commit v{commits[-1]} — a stale or foreign high-water mark"
+            f"{verb}: after_version=v{after_version} exceeds the latest "
+            f"commit v{commits[-1]} — a stale or foreign high-water "
+            "mark; silently returning nothing would hide it"
         )
     if up_to is not None and up_to < after_version:
         raise ValueError(
-            f"cdf: up_to=v{up_to} < after_version=v{after_version} — "
-            "swapped or stale arguments"
+            f"{verb}: up_to=v{up_to} < after_version=v{after_version} — "
+            "swapped or stale arguments; an empty range is only legal "
+            "at equality (no new commits)"
         )
     cset = set(commits)
-    for v in range(max(after_version, 0), hi + 1):
+    first = max(after_version, 0) if base else after_version + 1
+    for v in range(first, hi + 1):
         if v not in cset:
             raise ValueError(
-                f"cdf: commit v{v} is no longer in the log (history "
-                "truncated by forget_keys) — re-baseline the consumer "
+                f"{verb}: commit v{v} is no longer in the log (surviving "
+                f"range starts at v{commits[0]}) — history was truncated "
+                "(forget_keys, expire_log); re-baseline the consumer "
                 "from a full read_table snapshot"
             )
     return hi, commits
@@ -6172,6 +6156,35 @@ def foreach_batch_sink(path: str, app_id: str):
     return _sink
 
 
+def _retrying_batch_sink(
+    apply, path: str, pks, app_id: str, max_retries: int, kwargs: dict
+):
+    """A `foreachBatch` function that runs ``apply(spark, path,
+    batch_df, pks, app=(app_id, batch_id), **kwargs)`` per non-empty
+    micro-batch, retrying a lost optimistic race (ConcurrentWriteError)
+    up to ``max_retries`` times; each retry re-reads the snapshot."""
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        for attempt in range(max_retries + 1):
+            try:
+                apply(
+                    batch_df.sparkSession,
+                    path,
+                    batch_df,
+                    pks,
+                    app=(app_id, int(batch_id)),
+                    **kwargs,
+                )
+                return
+            except ConcurrentWriteError:
+                if attempt == max_retries:
+                    raise
+
+    return _sink
+
+
 def foreach_batch_merge_sink(
     path: str,
     pks: Sequence[str] | str,
@@ -6200,25 +6213,9 @@ def foreach_batch_merge_sink(
     batch_df (the engine's own), so the sink needs no captured
     SparkSession — same shape as :func:`foreach_batch_sink`."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        for attempt in range(max_retries + 1):
-            try:
-                merge_tx_table(
-                    batch_df.sparkSession,
-                    path,
-                    batch_df,
-                    pks,
-                    app=(app_id, int(batch_id)),
-                    **merge_kwargs,
-                )
-                return
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
-
-    return _sink
+    return _retrying_batch_sink(
+        merge_tx_table, path, pks, app_id, max_retries, merge_kwargs
+    )
 
 
 def foreach_batch_cdf_sink(
@@ -6238,22 +6235,6 @@ def foreach_batch_cdf_sink(
     half of the Delta CDF pattern, end-to-end over the manifest
     log."""
 
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        for attempt in range(max_retries + 1):
-            try:
-                cdf_apply_batch(
-                    batch_df.sparkSession,
-                    path,
-                    batch_df,
-                    pks,
-                    app=(app_id, int(batch_id)),
-                    **merge_kwargs,
-                )
-                return
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    raise
-
-    return _sink
+    return _retrying_batch_sink(
+        cdf_apply_batch, path, pks, app_id, max_retries, merge_kwargs
+    )

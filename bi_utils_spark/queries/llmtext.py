@@ -291,11 +291,11 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bi_utils_spark.operators.dedup import jaccard_similarity_join
 
     docs = load(spark, sf_dir, "documents")
-    # prefix_filter is left at the auto default: at t=0.5 the PPJoin prefix
-    # is ~half of every shingle set, so the one-stage co-occurrence plan wins
-    # (A/B at sf0.1: 0.80 s vs 3.13 s steady-state); PPJoin kicks in at
-    # t >= PPJOIN_MIN_THRESHOLD. Both plans are exact — test_llmdata asserts
-    # identical pair sets across them.
+    # One exact plan (PPJoin prefix+length filters, then an exact verify):
+    # even at t=0.5, where the prefix holds ~half of every shingle set, it
+    # is no slower than a full co-occurrence count beyond tiny inputs, and
+    # unlike that count it does not blow up on hot shingles (SCALE.md
+    # "Dedup tiers"). test_llmdata checks it against a brute-force Jaccard.
     return jaccard_similarity_join(docs, "doc_id", "text", threshold=0.5, shingle_n=3)
 
 

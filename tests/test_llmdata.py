@@ -4,7 +4,9 @@ variants against their exact baselines on real testdata."""
 
 from __future__ import annotations
 
+import itertools
 import math
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +23,7 @@ from bi_utils_spark.operators.multimodal import (
     payload_sizes,
 )
 from bi_utils_spark.sources.tables import load_table
+from test_lshkern import ref_shingles
 
 
 @pytest.fixture(scope="module")
@@ -89,18 +92,79 @@ def test_jaccard_join_exact_small(spark):
     assert rows[0]["jaccard"] == pytest.approx(3 / 5)
 
 
-def test_jaccard_prefix_filter_equals_plain(docs):
-    # the PPJoin prefix+length filters are lossless: both plans must
-    # produce the exact same pair set on the real documents table
-    def pairs(pf):
-        return {
-            (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-            for r in D.jaccard_similarity_join(
-                docs, "doc_id", "text", threshold=0.4, shingle_n=3, prefix_filter=pf
-            ).collect()
-        }
+def _ref_jaccard_pairs(df, threshold, shingle_n):
+    """{(id_a, id_b): jaccard} over ALL document pairs in plain Python:
+    token hashes from Spark, shingle sets from ``ref_shingles``."""
+    th = {
+        r["doc_id"]: r["th"]
+        for r in df.where(F.col("text").isNotNull())
+        .select(
+            "doc_id",
+            F.transform(T.tokens("text"), lambda t: F.xxhash64(t)).alias("th"),
+        )
+        .collect()
+    }
+    sets = {i: set(ref_shingles(h, shingle_n)) for i, h in th.items()}
+    out = {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        inter = len(sets[a] & sets[b])
+        j = inter / (len(sets[a]) + len(sets[b]) - inter)
+        if j >= threshold:
+            out[(a, b)] = j
+    return out
 
-    assert pairs(True) == pairs(False)
+
+def _join_pairs(df, threshold, shingle_n, **kw):
+    return {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in D.jaccard_similarity_join(
+            df, "doc_id", "text", threshold=threshold, shingle_n=shingle_n, **kw
+        ).collect()
+    }
+
+
+def test_jaccard_prefix_filter_equals_plain(docs):
+    # the PPJoin prefix+length filters are lossless: the join returns
+    # exactly the pair set (and values) of a plain all-pairs Jaccard
+    # on the real documents table
+    got = _join_pairs(docs, 0.4, 3)
+    want = _ref_jaccard_pairs(docs, 0.4, 3)
+    assert want
+    assert set(got) == set(want)
+    for pair, j in want.items():
+        assert got[pair] == pytest.approx(j, abs=1e-9)
+
+
+def _skewed_corpus() -> list[tuple[int, str | None]]:
+    """Every document holds the token ``hub`` (doc freq = N, the skew
+    the prefix order must push last); some are shorter than 3 tokens,
+    one is NULL, and some are exact or one-token-off copies."""
+    rnd = random.Random(11)
+    vocab = [f"w{i}" for i in range(16)]
+    docs: list[tuple[int, str | None]] = [
+        (0, None), (1, "hub"), (2, "hub w1"), (3, "w1 hub"), (4, "hub"),
+    ]
+    while len(docs) < 70:
+        words = ["hub"] + [rnd.choice(vocab) for _ in range(rnd.randrange(1, 12))]
+        rnd.shuffle(words)
+        docs.append((len(docs), " ".join(words)))
+        if rnd.random() < 0.3:  # a near or exact copy
+            if rnd.random() < 0.5:
+                words[rnd.randrange(len(words))] = rnd.choice(vocab)
+            docs.append((len(docs), " ".join(words)))
+    return docs
+
+
+@pytest.mark.parametrize("shingle_n", [1, 3])
+@pytest.mark.parametrize("threshold", [0.3, 0.5, 0.7, 0.9])
+def test_jaccard_join_matches_brute_force(spark, threshold, shingle_n):
+    df = spark.createDataFrame(_skewed_corpus(), "doc_id long, text string")
+    want = _ref_jaccard_pairs(df, threshold, shingle_n)
+    got = _join_pairs(df, threshold, shingle_n)
+    assert want
+    assert set(got) == set(want)
+    for pair, j in want.items():
+        assert got[pair] == pytest.approx(j, abs=1e-9)
 
 
 def test_jaccard_prefix_filter_small(spark):
@@ -114,7 +178,7 @@ def test_jaccard_prefix_filter_small(spark):
         ["doc_id", "text"],
     )
     out = D.jaccard_similarity_join(
-        df, "doc_id", "text", threshold=0.5, shingle_n=1, prefix_filter=True
+        df, "doc_id", "text", threshold=0.5, shingle_n=1
     )
     rows = out.collect()
     assert len(rows) == 1
@@ -411,28 +475,26 @@ def test_winnowing_guarantee_and_rate(spark):
 # --- hot-bucket caps + cache hygiene (100 TB skew guards) --------------------
 
 def test_jaccard_doc_freq_cap_semantics(docs):
-    # ADVICE r2: with max_token_doc_freq set, BOTH plans must stay
-    # sound — capped outputs are subsets of the exact pair set, and
-    # the prefix plan (which verifies on FULL sets) must report the
-    # exact jaccard value for every pair it keeps
+    # ADVICE r2: with max_token_doc_freq set, the join must stay sound
+    # — capped outputs are a subset of the exact pair set, and since
+    # the verify step reads the FULL sets, every pair it keeps carries
+    # the exact jaccard value
     exact = {
         (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
         for r in D.jaccard_similarity_join(
             docs, "doc_id", "text", threshold=0.5, shingle_n=3
         ).collect()
     }
-    for pf in (True, False):
-        capped = {
-            (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-            for r in D.jaccard_similarity_join(
-                docs, "doc_id", "text", threshold=0.5, shingle_n=3,
-                max_token_doc_freq=20, prefix_filter=pf,
-            ).collect()
-        }
-        assert set(capped) <= set(exact), f"false pair under cap (prefix={pf})"
-        if pf:  # full-set verify → values must be the exact jaccard
-            for pair, j in capped.items():
-                assert j == exact[pair], f"wrong jaccard under cap for {pair}"
+    capped = {
+        (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+        for r in D.jaccard_similarity_join(
+            docs, "doc_id", "text", threshold=0.5, shingle_n=3,
+            max_token_doc_freq=20,
+        ).collect()
+    }
+    assert set(capped) <= set(exact), "false pair under cap"
+    for pair, j in capped.items():
+        assert j == exact[pair], f"wrong jaccard under cap for {pair}"
 
 
 def test_minhash_cap_subset_and_recall(docs):

@@ -1095,7 +1095,7 @@ def test_merge_validate_partition_stability(spark, tmp_path):
     with pytest.raises(ValueError, match="OUTSIDE"):
         tx.merge_tx_table(
             spark, path, moved, ["k"], now=_now(),
-            validate_partition_stability=True,
+            on_partition_move="error",
         )
     # nothing committed
     assert tx.latest_version(path) == 0
@@ -1105,7 +1105,7 @@ def test_merge_validate_partition_stability(spark, tmp_path):
     )
     tx.merge_tx_table(
         spark, path, stable, ["k"], now=_now(),
-        validate_partition_stability=True,
+        on_partition_move="error",
     )
     vals = {r["k"]: r["v"] for r in tx.read_table(spark, path).collect()}
     assert vals == {1: 99, 2: 20, 3: 30}
